@@ -1494,7 +1494,14 @@ class Engine:
                 measure_aggs.append(F.hll_union_agg(c).alias(c))
                 measures.add(c)
         keys = [c for c in df.columns if c not in measures]
-        out = df.groupBy(*keys).agg(*measure_aggs).select(*df.columns)
+        # re-summing widens decimals (sum of decimal(28,2) is
+        # decimal(38,2)); cast every merged measure back to its
+        # published type, or the next append's schema conflicts with
+        # the compacted snapshot's
+        types = {f.name: f.dataType for f in df.schema.fields}
+        out = df.groupBy(*keys).agg(*measure_aggs).select(
+            *[F.col(c).cast(types[c]).alias(c) if c in measures else c
+              for c in df.columns])
         # safe: _write_full materializes into the staging dir before the
         # live dir (our input) is replaced; re-applying the partitioning
         # keeps the day/tenant directory layout through compaction

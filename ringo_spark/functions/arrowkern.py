@@ -30,11 +30,12 @@ the kernel against the JVM fold on adversarial magnitudes and on the
 real corpora) and by the full-registry oracle sweeps.
 
 Null semantics reproduce the JVM lane exactly (needed for the
-null-injected sweeps): a corpus row with NULL id produces no pairs (the
-JVM join condition ``q_id != n_id`` rejects it); a NULL embedding, a
-NULL element, or a length != the query dim yields a NULL cosine for
-every pair of that row (``zip_with`` null-pads the shorter side and a
-null product poisons the fold), and the row is kept.
+null-injected sweeps), on both sides: a corpus row or query with NULL
+id produces no pairs (the JVM join condition ``q_id != n_id`` rejects
+it); a NULL embedding, a NULL element, or a length != the query dim
+yields a NULL cosine for every pair of that row or query (``zip_with``
+null-pads the shorter side and a null product poisons the fold), and
+the row is kept.
 
 Scale shape: the queries are the bounded audit set (the standard
 recall-audit pattern — N_QUERIES/LSH_N_QUERIES rows collected once at
@@ -55,6 +56,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+class AuditSetTooLarge(ValueError):
+    """The query set exceeds :func:`collect_query_vectors`'s bound — the
+    one failure a caller may answer by falling back to its JVM lane."""
+
+
 def collect_query_vectors(q_df: DataFrame, id_col: str, vec_col: str,
                           max_rows: int = 4096) -> list:
     """Collect the bounded audit query set at construction time.
@@ -62,10 +68,11 @@ def collect_query_vectors(q_df: DataFrame, id_col: str, vec_col: str,
     Broadcast-threshold-class driver transfer (the dedup union-find /
     ann_cosine_topk_arrow precedent): the audit lanes' query sets are
     Q = 5..20 rows by contract; ``max_rows`` is a hard bound so a
-    misused caller fails loudly instead of collecting a corpus."""
+    misused caller fails loudly (:class:`AuditSetTooLarge`) instead of
+    collecting a corpus."""
     rows = q_df.select(id_col, vec_col).limit(max_rows + 1).collect()
     if len(rows) > max_rows:
-        raise ValueError(
+        raise AuditSetTooLarge(
             f"audit query set exceeds {max_rows} rows — this kernel is "
             "for bounded audit sets, not corpus-vs-corpus scoring")
     return [(r[0], r[1]) for r in rows]
@@ -87,20 +94,24 @@ def brute_cosine_pairs(corpus: DataFrame, id_col: str, vec_col: str,
     are always emitted, matching the JVM lane."""
     import numpy as np
 
+    # a NULL-id query pairs with nothing (null-rejecting q_id != n_id)
+    q_rows = [q for q in q_rows if q[0] is not None]
     q_ids = [q[0] for q in q_rows]
     dim = None
     q_mat = None
-    q_null = np.array([q[1] is None for q in q_rows], dtype=bool)
+    # a NULL query vector or element scores NULL against every corpus
+    # row (the JVM fold's null poisoning); its q_mat row is a placeholder
+    q_null = np.array([q[1] is None or any(x is None for x in q[1])
+                       for q in q_rows], dtype=bool)
     if q_rows:
-        dims = {len(q[1]) for q in q_rows if q[1] is not None}
+        dims = {len(q[1]) for q, nul in zip(q_rows, q_null) if not nul}
         if len(dims) > 1:
             raise ValueError("audit query vectors must share one dim")
         dim = dims.pop() if dims else 0
-        # a NULL query vector scores NULL against every corpus row (the
-        # JVM fold's null poisoning); its q_mat row is a placeholder
         q_mat = np.array(
-            [[float(x) for x in q[1]] if q[1] is not None else [0.0] * dim
-             for q in q_rows], dtype=np.float64).reshape(len(q_rows), dim)
+            [[0.0] * dim if nul else [float(x) for x in q[1]]
+             for q, nul in zip(q_rows, q_null)],
+            dtype=np.float64).reshape(len(q_rows), dim)
         # query norms: the same sequential fold, once per query
         qacc = np.zeros(len(q_rows))
         for j in range(dim):

@@ -2,9 +2,10 @@
 
 Seven artifact roots persist derived state keyed by (source fingerprint,
 params): minhash bands+shingles (``operators/dedup.py``), LSH buckets /
-IVF cells / PQ codes (``operators/similarity.py``), the streaming CMS
-sink (``streaming/vocab.py``), the streaming reservoir sink
-(``streaming/sampling.py``), and the BPE tokenizer cache
+IVF cells / PQ codes / k-means-trained IVF centroids (the ``kmeans*``
+sidecar dirs under the IVF root, ``operators/similarity.py``), the
+streaming CMS sink (``streaming/vocab.py``), the streaming reservoir
+sink (``streaming/sampling.py``), and the BPE tokenizer cache
 (``operators/text.py``).  Through r14 each carried its own copy of the
 same five mechanics — fingerprint tag, build-once marker gate,
 crash-safe swap, LRU GC, mtime touch — and four of them needed separate

@@ -1251,11 +1251,13 @@ def dedup_embedding_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float-identical (tests/test_arrow_parity.py), so the oracle's
     # pair set is unchanged.  Past the gate the JVM theta-join lane
     # below is byte-identical to r19.
+    from ..functions.arrowkern import AuditSetTooLarge, \
+        brute_cosine_pairs, collect_query_vectors
     try:
-        from ..functions.arrowkern import brute_cosine_pairs, \
-            collect_query_vectors
-
         q_rows = collect_query_vectors(emb, "vec_id", "embedding")
+    except AuditSetTooLarge:
+        q_rows = None   # corpus exceeds the kernel's bounded-audit gate
+    if q_rows is not None:
         return (brute_cosine_pairs(emb, "vec_id", "embedding", q_rows,
                                    min_raw_score=COSINE_THRESHOLD - 1e-5,
                                    lt_only=True)
@@ -1263,8 +1265,6 @@ def dedup_embedding_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("n_id").alias("vec_b"),
                         F.round(F.col("__cos_raw"), 6).alias("cosine"))
                 .where(F.col("cosine") >= COSINE_THRESHOLD))
-    except ValueError:
-        pass   # corpus exceeds the kernel's bounded-audit gate
     emb = emb.withColumn("__vn", vnorm(F.col("embedding")))
     a, b = emb.alias("a"), emb.alias("b")
     # per-side norms hoisted once per row (r19 opt batch 8) — same

@@ -583,7 +583,8 @@ EAGER_QUERIES: frozenset[str] = frozenset({
     # counts at construction (populate/dimension.py)
     "dim_visitor_partitioned_ids",
     # k-means training (Lloyd collects of K x dim centroid doubles)
-    # runs at construction
+    # runs at construction (both serve from trained_ivf_centroids,
+    # which trains on a cache miss at construction)
     "ann_ivf_kmeans",
     "ann_ivf_recall_bounds",
     # PQ codebook training + index build + probed-cell resolution run

@@ -1883,6 +1883,48 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str, k: int = IVF_K,
     return cent
 
 
+# Part of the trained-centroid cache tag: bump it whenever the Lloyd
+# trajectory formula of train_ivf_centroids changes (seeding, update
+# rounding, empty-cell handling), so no cached centroid set trained by
+# the old formula is ever served — the INDEX_LAYOUT_VERSION rule.
+KMEANS_TRAIN_VERSION = "T1"
+
+
+def trained_ivf_centroids(spark: SparkSession, sf_dir: str, k: int,
+                          iters: int = IVF_KMEANS_ITERS) -> list[tuple]:
+    """:func:`train_ivf_centroids`, trained once per (source, k, iters)
+    and served from a K x dim sidecar under ``IVF_INDEX_ROOT`` after
+    that — a warm construction reads K x dim doubles driver-side
+    (pyarrow, no Spark job) instead of re-running the 2 x ``iters``
+    Lloyd jobs.  The tag folds in the source fingerprint and
+    ``KMEANS_TRAIN_VERSION``, so a regenerated corpus or a changed
+    trajectory retrains.  The file lands first and the marker last
+    (:func:`index_lifecycle.finish_build`): a torn dir misses the gate
+    and retrains.  Served values are the trained doubles bit for bit
+    (float64 parquet round-trip), so the oracle trajectory is
+    unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tag = _ilc.index_tag(
+        f"{os.path.abspath(sf_dir)}|{k}|{iters}|"
+        f"{_source_fingerprint(sf_dir)}|{KMEANS_TRAIN_VERSION}")
+    path = os.path.join(IVF_INDEX_ROOT, f"kmeans{k}-{tag}")
+    file = os.path.join(path, "centroids.parquet")
+    if _ilc.serve_cached(path, "_SUCCESS"):
+        t = pq.read_table(file)
+        return list(zip(t.column("cid").to_pylist(),
+                        t.column("cvec").to_pylist()))
+    cent = train_ivf_centroids(spark, sf_dir, k=k, iters=iters)
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(pa.table({
+        "cid": pa.array([c for c, _ in cent], pa.int32()),
+        "cvec": pa.array([v for _, v in cent], pa.list_(pa.float64())),
+    }), file)
+    _ilc.finish_build(path, IVF_INDEX_ROOT, marker="_SUCCESS")
+    return cent
+
+
 def ann_ivf_kmeans_df(spark: SparkSession, sf_dir: str,
                       nprobe: int | None = None,
                       k: int | None = None) -> DataFrame:
@@ -1895,12 +1937,14 @@ def ann_ivf_kmeans_df(spark: SparkSession, sf_dir: str,
     auto-size through :func:`auto_ivf_k` (floor = the contract
     configuration the oracle replays), and
     ``ann_ivf_recall_bounds`` measures the recall they buy
-    against brute-force ground truth."""
+    against brute-force ground truth.  The centroids train once per
+    (source, k) and are served from their sidecar after that
+    (:func:`trained_ivf_centroids`)."""
     if k is None:
         k = _auto_ivf_k(spark, sf_dir)
     if nprobe is None:
         nprobe = _auto_nprobe(k, IVF_NPROBE)
-    cent = train_ivf_centroids(spark, sf_dir, k=k)
+    cent = trained_ivf_centroids(spark, sf_dir, k=k)
     # serve-side assignment + candidate scoring are map-only since the
     # r19 rewrite — widen an under-split scan first (the single-split
     # sf0.1 scan pinned ~3s of dim-64 folds to one core)
@@ -1958,8 +2002,9 @@ def ann_ivf_recall_bounds_df(spark: SparkSession, sf_dir: str,
     the brute-force side is ground truth for the SAMPLED 20-query audit
     set only — a Q×N map-only broadcast scan, the standard recall-audit
     pattern, never a production all-pairs path.  EAGER like
-    ``ann_ivf_kmeans``: k-means training runs at construction
-    (registry.EAGER_QUERIES).  ``k=None``/``nprobe=None`` auto-size —
+    ``ann_ivf_kmeans``: k-means training runs at construction on a
+    centroid-cache miss (:func:`trained_ivf_centroids`,
+    registry.EAGER_QUERIES).  ``k=None``/``nprobe=None`` auto-size —
     nprobe holds the CONTRACT probe fraction (IVF_RECALL_NPROBE of
     IVF_K cells) as the gate widens K, so the pinned recall floor is a
     property of the configuration family, not of one corpus size."""

@@ -1,5 +1,10 @@
 """The reference's shared doctest fixture (``/root/reference/src/Ringo.hs:26-140``)
-re-expressed in our model, used for golden tests of schema derivation."""
+re-expressed in our model, used for golden tests of schema derivation;
+plus :func:`count_spark_jobs`, the job counter construction-layer tests
+share."""
+
+import contextlib
+import uuid
 
 from ringo_spark.model import (
     Column, DimId, DimTime, DimVal, Fact, FactColumn, FactCount, ForeignKey,
@@ -112,3 +117,27 @@ type_defaults = {
 }
 
 settings = Settings(table_name_suffix_template="")
+
+
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+
+
+@contextlib.contextmanager
+def count_spark_jobs(spark):
+    """Count the Spark jobs launched inside the block: the block runs
+    under a job group of its own, and on exit ``statusTracker()`` reports
+    that group's jobs into the yielded dict's ``"jobs"`` key.  Jobs Spark
+    runs under a group of its own (broadcast exchanges) are not counted.
+    The caller's job group is restored on exit."""
+    sc = spark.sparkContext
+    saved = {p: sc.getLocalProperty(p) for p in _GROUP_PROPS}
+    group = f"count-spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_spark_jobs", False)
+    out: dict = {}
+    try:
+        yield out
+    finally:
+        for p, v in saved.items():
+            sc.setLocalProperty(p, v)
+        out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))

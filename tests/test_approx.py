@@ -277,3 +277,99 @@ def test_quantize_recall_floor_holds_and_is_falsifiable(spark):
     crushed = embed_quantize_recall_bounds_df(spark, sf, levels=3).collect()
     assert not crushed[0].meets_floor
     assert crushed[0].mean_recall < QUANT_RECALL_FLOOR
+
+
+def _counting_trainer(monkeypatch, tmp_path):
+    """Point the trained-centroid cache at ``tmp_path`` and count the
+    real Lloyd trainings behind it."""
+    from ringo_spark.operators import similarity as sim
+
+    monkeypatch.setattr(sim, "IVF_INDEX_ROOT", str(tmp_path / "ivf"))
+    calls = []
+    real = sim.train_ivf_centroids
+
+    def train(*args, **kwargs):
+        calls.append(kwargs.get("k"))
+        return real(*args, **kwargs)
+    monkeypatch.setattr(sim, "train_ivf_centroids", train)
+    return sim, calls
+
+
+def test_trained_ivf_centroids_serve_the_trained_doubles(spark, monkeypatch,
+                                                         tmp_path):
+    """The cached centroids are train_ivf_centroids' output bit for bit,
+    and a second call serves them without training."""
+    sim, calls = _counting_trainer(monkeypatch, tmp_path)
+    sf = "/root/testdata/sf0.001"
+    trained = sim.train_ivf_centroids(spark, sf, k=16)
+    cold = sim.trained_ivf_centroids(spark, sf, k=16)
+    warm = sim.trained_ivf_centroids(spark, sf, k=16)
+    assert len(calls) == 2     # the direct call plus the cold miss
+
+    def bits(cent):
+        return [(type(c), c, [float.hex(x) for x in v]) for c, v in cent]
+    assert bits(warm) == bits(cold) == bits(trained) and len(trained) > 0
+
+
+def test_warm_ivf_kmeans_construction_runs_at_most_one_job(spark, monkeypatch,
+                                                           tmp_path):
+    """A warm ann_ivf_kmeans_df reads its centroids from the sidecar: no
+    Lloyd job runs at construction (at most the corpus read's schema
+    job), where a cold one runs 2 x IVF_KMEANS_ITERS."""
+    from tests.fixtures import count_spark_jobs
+
+    sim, calls = _counting_trainer(monkeypatch, tmp_path)
+    sf = "/root/testdata/sf0.001"
+    with count_spark_jobs(spark) as cold:
+        sim.ann_ivf_kmeans_df(spark, sf, k=16)
+    with count_spark_jobs(spark) as warm:
+        df = sim.ann_ivf_kmeans_df(spark, sf, k=16)
+    assert calls == [16]
+    assert warm["jobs"] <= 1 < cold["jobs"]
+    assert df.count() > 0
+
+
+def test_trained_ivf_centroids_retrain_on_new_source_or_torn_dir(
+        spark, monkeypatch, tmp_path):
+    """A rewritten source (new fingerprint) misses the cache and
+    retrains; so does a dir whose marker never landed."""
+    import os
+    import shutil
+
+    sim, calls = _counting_trainer(monkeypatch, tmp_path)
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    src = os.path.join(sf, "embeddings.parquet")
+    shutil.copy("/root/testdata/sf0.001/embeddings.parquet", src)
+    sim.trained_ivf_centroids(spark, sf, k=16)
+    sim.trained_ivf_centroids(spark, sf, k=16)
+    assert len(calls) == 1
+
+    (cache_dir,) = [os.path.join(sim.IVF_INDEX_ROOT, d)
+                    for d in os.listdir(sim.IVF_INDEX_ROOT)]
+    marker = os.path.join(cache_dir, "_SUCCESS")
+    os.remove(marker)
+    sim.trained_ivf_centroids(spark, sf, k=16)
+    assert len(calls) == 2 and os.path.exists(marker)
+
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    sim.trained_ivf_centroids(spark, sf, k=16)
+    assert len(calls) == 3
+    assert len(os.listdir(sim.IVF_INDEX_ROOT)) == 2
+
+
+def test_trained_ivf_centroids_tag_carries_k_and_iters(spark, monkeypatch,
+                                                       tmp_path):
+    """k and iters are part of the cache tag: each distinct pair trains
+    into a dir of its own."""
+    import os
+
+    sim, calls = _counting_trainer(monkeypatch, tmp_path)
+    sf = "/root/testdata/sf0.001"
+    a = sim.trained_ivf_centroids(spark, sf, k=8)
+    b = sim.trained_ivf_centroids(spark, sf, k=16)
+    c = sim.trained_ivf_centroids(spark, sf, k=16, iters=1)
+    assert len(calls) == 3
+    assert len(os.listdir(sim.IVF_INDEX_ROOT)) == 3
+    assert a != b and b != c

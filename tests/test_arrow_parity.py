@@ -9,8 +9,9 @@ tests compare raw IEEE-754 bit patterns (struct.pack), not tolerances:
   denormal-feeding products) — where pairwise/SIMD summation WOULD
   diverge from the sequential fold in the last ulp;
 * the JVM null semantics the kernel must reproduce for the
-  null-injected sweeps: NULL ids (pair dropped), NULL vectors, NULL
-  elements and length mismatches (pair kept, NULL cosine);
+  null-injected sweeps, on the corpus and the query side: NULL ids
+  (pair dropped), NULL vectors, NULL elements and length mismatches
+  (pair kept, NULL cosine);
 * the conservative threshold pre-filter never loses a post-round hit.
 """
 
@@ -23,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ringo_spark.functions.arrowkern import (
-    brute_cosine_pairs, collect_query_vectors,
+    AuditSetTooLarge, brute_cosine_pairs, collect_query_vectors,
 )
 from ringo_spark.operators.textfn import cosine_pre, vnorm
 
@@ -89,6 +90,22 @@ def test_kernel_bitwise_parity_adversarial(spark):
         brute_cosine_pairs(df, "vec_id", "embedding", q_rows).collect())
 
 
+def test_kernel_bitwise_parity_null_query_side(spark):
+    """Query-side nulls follow the JVM lane: a NULL-id query yields no
+    pairs (q_id != n_id is null-rejecting) and a query with a NULL
+    element scores a NULL cosine against every corpus row."""
+    df = _adversarial_df(spark)
+    # row 13 has a NULL id, row 9 a NULL element (see _adversarial_df)
+    q_filter = F.col("vec_id").isNull() | F.col("vec_id").isin(0, 1, 9)
+    q_rows = collect_query_vectors(df.where(q_filter), "vec_id", "embedding")
+    assert any(q[0] is None for q in q_rows)
+    assert any(q[1] is not None and None in q[1] for q in q_rows)
+    kernel = brute_cosine_pairs(df, "vec_id", "embedding", q_rows).collect()
+    _assert_bitwise_equal(_jvm_pairs(df, q_filter).collect(), kernel)
+    assert {r.q_id for r in kernel} == {0, 1, 9}
+    assert all(r["__cos_raw"] is None for r in kernel if r.q_id == 9)
+
+
 def test_kernel_bitwise_parity_real_corpus(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q_rows = collect_query_vectors(
@@ -124,7 +141,7 @@ def test_kernel_rejects_unbounded_query_sets(spark):
     df = spark.range(5000).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.lit(0.5)] * 4).alias("embedding"))
-    with pytest.raises(ValueError, match="bounded audit"):
+    with pytest.raises(AuditSetTooLarge, match="bounded audit"):
         collect_query_vectors(df, "vec_id", "embedding", max_rows=100)
 
 

@@ -472,6 +472,47 @@ def test_manifest_compaction_folds_snapshot_to_single_dir(spark, tmp_path):
     assert sorted(dirs) == sorted(m2["versions"][str(m2["version"])])
 
 
+def test_manifest_append_after_compaction(spark, tmp_path):
+    """An append after compact_fact lands: compaction casts its re-summed
+    measures back to their published types (the sum of a decimal(28,2)
+    is a decimal(38,2), which the next append's schema check refused as
+    a conflict).  full -> incremental -> compact -> incremental rolls up
+    to the same table as one full refresh over the same horizon."""
+    from pyspark.sql import functions as F
+
+    from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
+
+    table = "fact_events_by_minute"
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "acwh"),
+                 commit_mode="manifest")
+    eng.load_sources("/root/testdata/sf0.001")
+    t_early = dt.datetime(2024, 1, 10)
+    eng.run(PopulationMode.FULL, t_early)
+    eng.run(PopulationMode.INCREMENTAL, T_EVENTS_MID, t_early)
+    eng.compact_fact(EVENTS_FACT)
+    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
+
+    ref = Engine(spark, EVENTS_ENV, str(tmp_path / "acref"),
+                 commit_mode="manifest")
+    ref.load_sources("/root/testdata/sf0.001")
+    ref.run(PopulationMode.FULL, T_FAR)
+
+    def rollup(e):
+        df = e.read_table(table)
+        keys = ["ts_minute_id", "user_id", "event_type_id"]
+        return [(f.name, f.dataType) for f in df.schema], (df.groupBy(*keys).agg(
+            F.sum("event_count"), F.sum("value_sum"),
+            F.sum("value_avg_count"), F.sum("value_avg_sum"),
+            F.max("value_max"), F.min("value_min"),
+            F.hll_sketch_estimate(F.hll_union_agg("user_count")))
+            .orderBy(*keys).collect())
+
+    got_schema, got = rollup(eng)
+    want_schema, want = rollup(ref)
+    assert got_schema == want_schema
+    assert got == want and len(got) > 0
+
+
 def test_publish_jdbc_round_trip(spark, tmp_path):
     """Sink parity with the reference (its output lands in Postgres,
     app/Main.hs:35-83): publish the populated tables to a file-backed
