@@ -15,8 +15,7 @@ round-6 values the DuckDB oracle replays are unchanged:
   performs, per pair, the same IEEE-754 double multiply then the same
   ordered add — numpy elementwise ops are correctly-rounded scalar ops,
   never reassociated (no pairwise/SIMD summation, which plain
-  ``np.dot``/``np.sum`` DO use; that is why the tolerance-checked
-  ``ann_cosine_topk_arrow`` variant exists separately).
+  ``np.dot``/``np.sum`` DO use, and which would break bit parity).
 * float32 storage widens exactly to float64 on both sides (Spark's
   ``cast("double")``, numpy's ``astype``).
 * ``sqrt`` is IEEE-correctly-rounded in both ``java.lang.Math`` and
@@ -65,8 +64,8 @@ def collect_query_vectors(q_df: DataFrame, id_col: str, vec_col: str,
                           max_rows: int = 4096) -> list:
     """Collect the bounded audit query set at construction time.
 
-    Broadcast-threshold-class driver transfer (the dedup union-find /
-    ann_cosine_topk_arrow precedent): the audit lanes' query sets are
+    Broadcast-threshold-class driver transfer (the dedup union-find
+    precedent): the audit lanes' query sets are
     Q = 5..20 rows by contract; ``max_rows`` is a hard bound so a
     misused caller fails loudly (:class:`AuditSetTooLarge`) instead of
     collecting a corpus."""

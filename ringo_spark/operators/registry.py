@@ -33,11 +33,10 @@ from .multimodal import (
     multimodal_wav_df, multimodal_wav_samples_df,
 )
 from .similarity import (
-    ANN_COSINE_TOPK_ARROW_BOUNDS_SQL, ANN_COSINE_TOPK_SQL,
+    ANN_COSINE_TOPK_SQL,
     ANN_IVF_KMEANS_SQL, ANN_IVF_RECALL_BOUNDS_SQL, ANN_IVF_SQL,
     ANN_LSH_BUCKETED12_SQL,
     ANN_LSH_BUCKETED_SQL, ANN_LSH_MULTIPROBE_SQL,
-    ann_cosine_topk_arrow_bounds_df, ann_cosine_topk_arrow_df,
     ANN_RANK_FUSION_SQL, ANN_HARD_NEGATIVES_SQL, ann_hard_negatives_df,
     ann_cosine_topk_df, ann_ivf_df, ann_ivf_indexed_df, ann_ivf_kmeans_df,
     ann_ivf_recall_bounds_df, ann_rank_fusion_df,
@@ -107,13 +106,14 @@ DRIVER_WINDOW: list[str] = [
     #    rotation (CORRECTNESS_WINDOW.md "Round-20 rotation plan").
     #    Front-load (plan step 2, code changed in r20):
     #    * the Arrow-kernel brute-force lanes (functions/arrowkern.py):
-    #      ann_cosine_topk, the arrow_bounds twin, ann_hard_negatives,
+    #      ann_cosine_topk, ann_hard_negatives,
     #      embed_quantize_recall_bounds, dedup_embedding, and the brute
     #      ground-truth sides of ann_ivf_recall_bounds /
     #      ann_pq_recall_bounds;
-    #    * the _argmax_score/_with_cell_join signature + keep_norm
-    #      reuse (ann_ivf_kmeans serves the retained norm; ann_ivf_pq /
-    #      ann_ivf_indexed / ann_rank_fusion run the same argmax form);
+    #    * the single _with_cell cell-assignment path + keep_norm
+    #      reuse (ann_ivf_kmeans serves the retained norm; ann_ivf,
+    #      ann_ivf_pq / ann_ivf_indexed / ann_rank_fusion run the same
+    #      argmax form);
     #    * the fact-populate changes (bytes_per_task widen cap +
     #      degenerate exact count-distinct elision): every
     #      fact_population_df caller with an oracle — the five fact
@@ -121,7 +121,7 @@ DRIVER_WINDOW: list[str] = [
     #      hour_regrain, and the approx_bounds twin.
     # --
     "ann_cosine_topk",
-    "ann_cosine_topk_arrow_bounds",
+    "ann_ivf",
     "ann_hard_negatives",
     "embed_quantize_recall_bounds",
     "dedup_embedding",
@@ -182,9 +182,9 @@ DRIVER_WINDOW: list[str] = [
 # Registered, locally cell-exact-verified every round, but outside the
 # driver's 50-row hash window this round.  Every with-oracle entry here
 # has at least one driver-green (hash_match=true) row (r02-r18) with
-# unchanged code paths since; the 2 no-oracle entries are e-tolerance
-# pytest-covered by design AND have *_bounds twins carrying real oracles
-# (driver-green r06/r07 and re-rowed since).  Newly displaced: the r18
+# unchanged code paths since; the one no-oracle entry
+# (fact_events_by_minute_approx) is e-tolerance pytest-covered by design
+# AND has a *_bounds twin carrying a real oracle.  Newly displaced: the r18
 # window's rotating cohort (every entry got a fresh r18 driver row) --
 # recency rotation per the pre-committed r19 plan in
 # CORRECTNESS_WINDOW.md.
@@ -200,7 +200,6 @@ DISPLACED: list[str] = [
     "ann_lsh_indexed",
     "lsh_width_staleness",
     "streaming_vector_ingest",
-    "ann_ivf",
     "ann_index_staleness",
     "doc_logprob",
     "doc_bigram_logprob",
@@ -311,7 +310,6 @@ DISPLACED: list[str] = [
     "fact_events_tenant_by_hour",
     "text_scrub",
     "fact_events_by_minute_approx",
-    "ann_cosine_topk_arrow",
 ]
 
 
@@ -423,11 +421,6 @@ _ANN_QUERIES: dict[str, tuple] = {
     # most-similar vectors OUTSIDE the near-duplicate band (the
     # false-negative exclusion), per-query excluded-band count in-row
     "ann_hard_negatives": (ann_hard_negatives_df, ANN_HARD_NEGATIVES_SQL),
-    "ann_cosine_topk_arrow": (ann_cosine_topk_arrow_df, None),  # numpy summation order; rows-only
-    # range-style oracle over the numpy lane: JVM exact top-k + a
-    # tolerance boolean the oracle pins to TRUE (VERDICT r05 item 6)
-    "ann_cosine_topk_arrow_bounds": (ann_cosine_topk_arrow_bounds_df,
-                                     ANN_COSINE_TOPK_ARROW_BOUNDS_SQL),
     # IVF-PQ (r14): ADC scan over the persisted cell-partitioned code
     # index + exact-cosine refine of the shortlist; oracle replays the
     # per-subspace codebook training trajectory

@@ -464,8 +464,8 @@ IVF_NPROBE = 2      # cells searched per query at the contract K
 # replayed k-means trajectory) are bit-identical to the pinned
 # behavior.  nprobe scales WITH K to hold the contract probe fraction
 # (IVF_NPROBE / IVF_K of the cells), so recall does not silently decay
-# as the gate widens the index.  The K>CELL_ASSIGN_LITERAL_MAX_K
-# literal-vs-join assignment gate already handles large resolved K.
+# as the gate widens the index.  Cell assignment (_with_cell) carries
+# the centroids as broadcast data, so its plan does not grow with K.
 IVF_AUTO_K_CONF_KEY = "ringo.ivfAutoK"            # "false" => pinned floor
 IVF_SQRT_DIVISOR_CONF_KEY = "ringo.ivfSqrtDivisor"
 IVF_SQRT_DIVISOR = 2
@@ -568,23 +568,12 @@ def ann_ivf_df(spark: SparkSession, sf_dir: str, k: int | None = None,
     cent = (emb.where(F.col("vec_id") < k)
             .select(F.col("vec_id").alias("cid"),
                     F.col("embedding").alias("cvec")))
-    # map-only argmax against the K centroids folded into ONE broadcast
-    # array-of-structs row (r19 opt, the _with_cell_join form): same
-    # round(cosine, 6) lexicographic (s, cid) max the groupBy-max-struct
-    # form computed (ties to max cid), but with NO N x K row explosion,
-    # NO corpus shuffle, and — because the assignment carries the
-    # embedding through — no cells-to-emb join-back either.  The corpus
-    # scan is widened first (see _emb_wide): the scoring is now pure
+    # map-only argmax (_with_cell): the assignment carries the
+    # embedding through, so there is no cells-to-emb join-back.  The
+    # corpus scan is widened first (see _emb_wide): the scoring is pure
     # map CPU that nothing downstream re-parallelizes.  The row norm is
-    # hoisted ONCE per corpus row (batch 8) and reused by BOTH the
-    # argmax and the candidate scoring below.
-    cells = (_emb_wide(spark, sf_dir)
-             .withColumn("__nn", vnorm(F.col("embedding")))
-             .crossJoin(F.broadcast(_cent_arr(cent)))
-             .withColumn("cell",
-                         _argmax_score("__cents", norm_col="__nn")
-                         .getField("cid"))
-             .drop("__cents"))
+    # kept and reused by the candidate scoring below.
+    cells = _with_cell(_emb_wide(spark, sf_dir), cent, keep_norm="__nn")
 
     q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
            .select(F.col("vec_id").alias("q_id"),
@@ -652,7 +641,7 @@ QUALIFY rank <= {LSH_TOP_K}
 # corpus per query batch — fine as the index-build *oracle*, a full-corpus
 # exchange per search at scale.  The persisted path below is the production
 # shape: the assignment is computed ONCE (map-only argmax over broadcast
-# centroid literals — no shuffle of vectors, no groupBy) and written
+# centroid data — no shuffle of vectors, no groupBy) and written
 # ``partitionBy("cell")``; every later query prunes straight to its probed
 # cells at the parquet scan (PartitionFilters — asserted in test_plans).
 
@@ -684,41 +673,31 @@ def _ivf_centroid_rows(emb: DataFrame, k: int = IVF_K) -> list:
             .collect())
 
 
-# Ceiling for the literal-expression assignment forms below: each
+# Ceiling for the literal-expression reference form below: each
 # centroid adds a dim-wide array literal + a fold to the SAME expression
 # tree, so plan size grows ~K x dim — fine at the contract K=16, a
 # codegen/driver bottleneck at the ~sqrt(N) K a production index wants
-# (r08/r09 VERDICT).  Above the gate `_with_cell` switches to the
-# broadcast centroid-join argmax (`_with_cell_join`, the ann_ivf_df
-# shape: per-row plan cost is constant, the join carries K rows
-# broadcast, and the argmax is a groupBy-max — one corpus shuffle on
-# the id column buys unbounded K).  `_cell_expr` itself, which has no
-# id column to pivot the join on, raises past the gate.
+# (r08/r09 VERDICT).  `_cell_expr` raises past the gate; every real
+# caller assigns through `_with_cell`, whose centroids ride as broadcast
+# data and whose plan does not grow with K.
 CELL_ASSIGN_LITERAL_MAX_K = 64
 
 
-def _assert_literal_k(n_cent: int, op: str) -> None:
-    if n_cent > CELL_ASSIGN_LITERAL_MAX_K:
-        raise ValueError(
-            f"{op} builds a literal expression tree per centroid and is "
-            f"gated at K={CELL_ASSIGN_LITERAL_MAX_K} (got {n_cent}); use "
-            f"_with_cell (auto-switches to the broadcast centroid-join "
-            f"argmax above the gate) or _with_cell_join directly")
-
-
 def _cell_expr(cent_rows) -> F.Column:
-    """Map-only cell assignment: argmax cosine over K broadcast centroid
-    literals, deterministic ties broken by max cid via lexicographic struct
-    greatest — bit-identical to the groupBy-max in ``ann_ivf_df``.
+    """Reference cell assignment as one Column: argmax cosine over K
+    centroid literals, deterministic ties broken by max cid via
+    lexicographic struct greatest — the assignment :func:`_with_cell`
+    must reproduce (pytest-pinned equal for every caller).
 
     ``cent_rows``: (cid, cvec) pairs — collected Rows (field order cid,
-    cvec) or plain tuples from :func:`train_ivf_centroids`.
-
-    Prefer :func:`_with_cell` on a hot path: this single-Column form
-    re-folds the row's self-norm inside every centroid branch (Spark
-    evaluates higher-order functions by interpreted closure dispatch, so
-    nothing CSEs them away).  Gated at CELL_ASSIGN_LITERAL_MAX_K."""
-    _assert_literal_k(len(cent_rows), "_cell_expr")
+    cvec) or plain tuples from :func:`train_ivf_centroids`.  Gated at
+    CELL_ASSIGN_LITERAL_MAX_K."""
+    if len(cent_rows) > CELL_ASSIGN_LITERAL_MAX_K:
+        raise ValueError(
+            f"_cell_expr builds a literal expression tree per centroid and "
+            f"is gated at K={CELL_ASSIGN_LITERAL_MAX_K} (got "
+            f"{len(cent_rows)}); use _with_cell (broadcast centroid data, "
+            f"any K)")
     scs = []
     for cid, cvec_vals in cent_rows:
         cvec = F.array(*[F.lit(float(x)) for x in cvec_vals])
@@ -727,7 +706,15 @@ def _cell_expr(cent_rows) -> F.Column:
     return F.greatest(*scs).getField("cid") if len(scs) > 1 else scs[0].getField("cid")
 
 
-def _cent_arr(cent_df: DataFrame, arr_col: str = "__cents") -> DataFrame:
+def _cent_df(spark: SparkSession, rows) -> DataFrame:
+    """The (cid, cvec) centroid relation from driver-side (cid, cvec)
+    pairs — collected Rows or plain tuples."""
+    return literal_df(spark,
+                      [(int(c), [float(x) for x in v]) for c, v in rows],
+                      "cid int, cvec array<double>")
+
+
+def _cent_arr(cent_df: DataFrame, arr_col: str) -> DataFrame:
     """The (cid, cvec) centroid relation folded to ONE broadcastable row
     holding a cid-sorted ``array<struct<cid,cvec>>`` — the carrier of
     the map-only argmax form (r19 opt).  Scoring rides a broadcast
@@ -741,8 +728,7 @@ def _cent_arr(cent_df: DataFrame, arr_col: str = "__cents") -> DataFrame:
     Each struct also carries the centroid's precomputed norm (``bnorm``
     — the same ``sqrt(dot(cvec, cvec))`` fold :func:`cosine` runs,
     evaluated ONCE per centroid here instead of once per (row,
-    centroid) in the scoring lambda; r19 opt batch 8, the
-    ``_with_cell`` norm-hoisting applied to the data form)."""
+    centroid) in the scoring lambda; r19 opt batch 8)."""
     return cent_df.agg(F.sort_array(F.collect_list(
         F.struct("cid", "cvec", vnorm(F.col("cvec")).alias("bnorm"))))
         .alias(arr_col))
@@ -752,8 +738,8 @@ def _argmax_score(arr_col: str, emb_col: str = "embedding",
                   *, norm_col: str):
     """``array_max`` over (round(cosine, 6), cid) structs — the same
     lexicographic argmax (max score, ties to max cid) as ``greatest``
-    over structs / ``max(struct)`` in the other assignment forms
-    (equality pytest-pinned).
+    over structs in :func:`_cell_expr` and ``max(struct)`` in the
+    oracle SQL (equality pytest-pinned).
 
     ``norm_col`` (REQUIRED — r20, ADVICE r19) names a column holding the
     row's precomputed :func:`vnorm` (r19 opt batch 8): higher-order
@@ -763,10 +749,7 @@ def _argmax_score(arr_col: str, emb_col: str = "embedding",
     projection and the centroid norms riding the broadcast array
     (``bnorm``), only the K cross-dots remain per row.  Values are
     bit-identical either way (same sub-expressions evaluated once;
-    pytest-pinned), so the oracle trajectory is unchanged.  The old
-    ``norm_col=None`` fallback silently reintroduced the per-centroid
-    re-fold for any future caller that omitted the argument — removed;
-    every caller hoists."""
+    pytest-pinned), so the oracle trajectory is unchanged."""
     score = lambda c: F.struct(  # noqa: E731
         F.round(cosine_pre(F.col(emb_col), c.getField("cvec"),
                            F.col(norm_col), c.getField("bnorm")), 6)
@@ -775,90 +758,37 @@ def _argmax_score(arr_col: str, emb_col: str = "embedding",
     return F.array_max(F.transform(F.col(arr_col), score))
 
 
-def _with_cell_join(df: DataFrame, cent_rows, out: str = "cell",
-                    id_col: str = "vec_id",
-                    keep_norm: str | None = None) -> DataFrame:
-    """Cell assignment for K past the literal gate: the K centroids ride
-    as broadcast DATA (not literals) folded into one array<struct> row
+def _with_cell(df: DataFrame, cent: DataFrame, out: str = "cell",
+               keep_norm: str | None = None,
+               keep_score: str | None = None) -> DataFrame:
+    """``df`` + an ``out`` column holding each row's argmax-cosine cell
+    id against the (cid, cvec) centroid relation ``cent`` — the ONE
+    cell-assignment implementation (pytest-pinned equal to
+    :func:`_cell_expr` through every caller).  The K centroids ride as
+    broadcast DATA folded into one array<struct> row
     (:func:`_cent_arr`) and each row's cell is the
-    :func:`_argmax_score` projection — MAP-ONLY.  r19 opt: the old form
-    exploded N x K scored rows into a groupBy(``id_col``) struct-max (a
-    corpus-keyed shuffle into a sort aggregate, embedding-wide rows)
-    plus a join-back of the assignment; all three are gone.  Plan size
-    stays independent of K, and the generated code is independent of
-    the centroid VALUES (no per-iteration recompile).  ``id_col`` is
-    retained for API compatibility; the map-only form no longer needs
-    it.
+    :func:`_argmax_score` projection — MAP-ONLY: no corpus shuffle, no
+    N x K row explosion, no join-back.  Plan size is independent of K,
+    and the generated code is independent of the centroid VALUES (no
+    per-iteration recompile in the Lloyd loop).
 
     ``keep_norm`` (r20, ADVICE r19): retain the row-norm projection the
     assignment already computed under this output column name, so
-    callers that score candidates next (ann_ivf_kmeans_df) reuse it
-    instead of re-folding the identical dim-64 ``vnorm`` per corpus
-    row."""
-    spark = df.sparkSession
-    cent_df = literal_df(spark,
-        [(int(c), [float(x) for x in v]) for c, v in cent_rows],
-        "cid int, cvec array<double>")
-    ac = f"__{out}_cents"
+    callers that score candidates next reuse it instead of re-folding
+    the identical dim-64 ``vnorm`` per corpus row.  ``keep_score``:
+    also retain the winning round(cosine, 6) under this name (read from
+    the same argmax struct — the staleness report's quantization
+    error)."""
+    ac, ab = f"__{out}_cents", f"__{out}_best"
     an = keep_norm or f"__{out}_anorm"
     assigned = (df.withColumn(an, vnorm(F.col("embedding")))
-                .crossJoin(F.broadcast(_cent_arr(cent_df, ac)))
-                .withColumn(out,
-                            _argmax_score(ac, norm_col=an).getField("cid")))
-    return assigned.drop(ac) if keep_norm else assigned.drop(ac, an)
-
-
-def _with_cell(df: DataFrame, cent_rows, out: str = "cell") -> DataFrame:
-    """``df`` + an ``out`` column holding the argmax-cosine cell id —
-    same assignment as ``withColumn(out, _cell_expr(cent_rows))`` (pytest
-    -pinned identical), restructured for cost: the K-branch argmax was
-    the hottest expression in the repo at 3K interpreted fold-lambdas
-    per row (K centroids x {dot(a,b), dot(a,a), dot(b,b)} x dim).  Here
-    the row's self-norm is computed ONCE in its own projection (the
-    optimizer keeps the split — CollapseProject refuses to inline a
-    non-cheap expression used K times), and each centroid's norm is a
-    driver-side Python-float literal with the same left-to-right IEEE
-    accumulation, so only the K cross-dots remain per row (~3x fewer
-    folds).  The round-6 trajectory the DuckDB oracle replays is
-    unchanged.
-
-    r19 opt — the K-branch ``greatest(struct, ...)`` chain is gone: the
-    centroids now ride as ONE array-of-structs literal (ConstantFolding
-    collapses the all-literal CreateArray into a single Literal on the
-    first optimizer pass) and the argmax is
-    ``array_max(transform(lit_arr, score))``.  Same values — array_max
-    uses the identical lexicographic struct ordering greatest did (max
-    score, ties to max cid) — but the plan is O(1) in K instead of K
-    score-expression branches, which at K=16 x dim=64 cost seconds of
-    driver-side optimization per query and an interpreted
-    greatest-chain evaluation per row.
-
-    Above CELL_ASSIGN_LITERAL_MAX_K the literal array itself is the
-    bottleneck and this switches to :func:`_with_cell_join` (same
-    assignment, pytest-pinned equal; requires a ``vec_id`` column)."""
-    import math
-
-    if len(cent_rows) > CELL_ASSIGN_LITERAL_MAX_K:
-        return _with_cell_join(df, cent_rows, out)
-    e = F.col("embedding")
-    norm = f"__{out}_norm_a"
-    cents = []
-    for cid, cvec_vals in cent_rows:
-        b_acc = 0.0
-        for x in cvec_vals:
-            b_acc += float(x) * float(x)
-        cents.append(F.struct(
-            F.lit(int(cid)).alias("cid"),
-            F.array(*[F.lit(float(x)) for x in cvec_vals]).alias("cvec"),
-            F.lit(math.sqrt(b_acc)).alias("bnorm")))
-    score = lambda c: F.struct(  # noqa: E731
-        F.round(dot(e, c.getField("cvec"))
-                / (F.col(norm) * c.getField("bnorm")), 6).alias("s"),
-        c.getField("cid").alias("cid"))
-    cell = F.array_max(F.transform(F.array(*cents), score)).getField("cid")
-    return (df.withColumn(norm, F.sqrt(dot(e, e)))
-            .withColumn(out, cell)
-            .drop(norm))
+                .crossJoin(F.broadcast(_cent_arr(cent, ac)))
+                .withColumn(ab, _argmax_score(ac, norm_col=an))
+                .withColumn(out, F.col(ab).getField("cid")))
+    if keep_score:
+        assigned = assigned.withColumn(keep_score,
+                                       F.col(ab).getField("s"))
+    return assigned.drop(ac, ab, *([] if keep_norm else [an]))
 
 
 def _probe_cells(q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
@@ -904,8 +834,9 @@ def build_ivf_index(spark: SparkSession, sf_dir: str,
     """Build (once) the persisted IVF index: corpus vectors written
     ``partitionBy("cell")``.
 
-    Scale shape: the assignment is a *map-only* expression (argmax over K
-    broadcast centroid literals) — vectors never shuffle for assignment.
+    Scale shape: the assignment is a *map-only* projection (argmax over
+    K broadcast centroids, :func:`_with_cell`) — vectors never shuffle
+    for assignment.
     The single salted ``repartition(cell, salt)`` is the one build-time
     shuffle: the salt gives every cell up to BUILD_WRITERS_PER_CELL
     writer tasks, so a giant cell (clustered embeddings are the normal
@@ -935,21 +866,19 @@ def build_ivf_index(spark: SparkSession, sf_dir: str,
     if emb is None:
         emb = _emb(spark, sf_dir)
     cent_rows = _ivf_centroid_rows(emb, k)
+    cent = _cent_df(spark, cent_rows)
     # widen an under-split scan before the map-only assignment (r19
     # opt, see _emb_wide): the argmax CPU runs BELOW the writer
     # repartition, which re-parallelizes only the write
     from ..functions.spread import spread_source
-    (_with_cell(spread_source(emb, f"{sf_dir}/embeddings.parquet"),
-                cent_rows)
+    (_with_cell(spread_source(emb, f"{sf_dir}/embeddings.parquet"), cent)
      .repartition(F.col("cell"),
                   F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
      .write.mode("overwrite").partitionBy("cell").parquet(index_path))
     # persist the centroids INSIDE the index (underscore prefix: data
     # discovery ignores it) — appends must assign with the exact same
     # centroid set or cell routing silently diverges from the stored data
-    (literal_df(spark, [(int(c), [float(x) for x in v])
-                            for c, v in cent_rows], "cid int, cvec array<double>")
-     .coalesce(1).write.mode("overwrite")
+    (cent.coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(index_path, "_centroids")))
     # build-time per-cell stats sidecar (K rows), computed from the
     # JUST-WRITTEN files — they carry their cell in the partition path,
@@ -1040,8 +969,9 @@ def append_to_ivf_index(spark: SparkSession, index_path: str,
     RETRY of the same batch is a ledger-refused no-op (returns False),
     and a retry after a mid-land crash completes the batch without
     duplicating the rows that already landed (:func:`_admit_batch`)."""
-    cent = spark.read.parquet(os.path.join(index_path, "_centroids"))
-    cent_rows = [(r.cid, r.cvec) for r in cent.collect()]
+    cent_rows = [(r.cid, r.cvec) for r in spark.read.parquet(
+        os.path.join(index_path, "_centroids")).collect()]
+    cent = _cent_df(spark, cent_rows)
     # coerce the batch vector type to the stored files' element type: a
     # float/double mix across parquet files passes the write silently
     # and then fails every vectorized read of the index (schema merge
@@ -1060,7 +990,7 @@ def append_to_ivf_index(spark: SparkSession, index_path: str,
     assigned_cache: dict[str, DataFrame] = {}
 
     def land_data(b: DataFrame) -> None:
-        a = _with_cell(b, cent_rows).cache()
+        a = _with_cell(b, cent).cache()
         assigned_cache["df"] = a
         (a.repartition(F.col("cell"),
                        F.pmod(F.col("vec_id"),
@@ -1180,29 +1110,16 @@ IVF_STALE_SKEW = 4.0
 from .deletion import STATS_SIDECAR as IVF_STATS  # one compaction-aware name
 
 
-def _label_cells(df: DataFrame, cent_rows) -> DataFrame:
-    """Per-vector (cell, cos6) ARGMAX assignment against a stored
-    centroid set — the staleness report's scorer for rows that carry no
-    cell yet (the ingestion batch).  Map-only since the r19 opt (the
-    :func:`_with_cell_join` rewrite): one output row per PHYSICAL input
-    row falls out of the projection directly — the r16
-    monotonically_increasing_id + groupBy that enforced per-physical-row
-    grouping (so the stats it feeds agree with file-footer row
-    accounting) is no longer needed, and neither is its corpus shuffle.
-    Tie-break (higher cid) matches every other form (pytest-pinned).
-    Rows already carrying their cell never need this —
-    :func:`_assigned_cell_stats` scores them against their one assigned
-    centroid, O(n*dim)."""
-    spark = df.sparkSession
-    cent_df = literal_df(spark,
-        [(int(c), [float(x) for x in v]) for c, v in cent_rows],
-        "cid int, cvec array<double>")
-    return (df.select("embedding")
-            .withColumn("__an", vnorm(F.col("embedding")))
-            .crossJoin(F.broadcast(_cent_arr(cent_df)))
-            .select(_argmax_score("__cents", norm_col="__an").alias("b"))
-            .select(F.col("b.cid").alias("cell"),
-                    F.col("b.s").alias("cos6")))
+def _label_cells(df: DataFrame, cent: DataFrame) -> DataFrame:
+    """``df`` + its argmax ``cell`` against the (cid, cvec) centroid
+    relation ``cent`` and that cell's round(cosine, 6) score ``cos6`` —
+    the staleness report's scorer for rows that carry no cell yet (the
+    ingestion batch).  Map-only (:func:`_with_cell`): one output row
+    per PHYSICAL input row, so the stats it feeds agree with
+    file-footer row accounting.  Rows already carrying their cell never
+    need this — :func:`_assigned_cell_stats` scores them against their
+    one assigned centroid, O(n*dim)."""
+    return _with_cell(df, cent, keep_score="cos6")
 
 
 def _cell_stats(labeled: DataFrame) -> DataFrame:
@@ -1228,11 +1145,9 @@ def _assigned_cell_stats(assigned: DataFrame, cent_rows) -> DataFrame:
     (r16 review: the build was scoring the corpus twice).  Same
     round(cosine, 6) expression as :func:`_label_cells`, so assigned
     and argmax scoring can never disagree on a value."""
-    spark = assigned.sparkSession
-    cent_df = literal_df(spark,
-        [(int(c), [float(x) for x in v]) for c, v in cent_rows],
-        "cell int, cvec array<double>") \
-        .withColumn("__bn", vnorm(F.col("cvec")))  # K rows, once
+    cent_df = (_cent_df(assigned.sparkSession, cent_rows)
+               .withColumnRenamed("cid", "cell")
+               .withColumn("__bn", vnorm(F.col("cvec"))))  # K rows, once
     sc = F.round(cosine_pre(F.col("embedding"), F.col("cvec"),
                             F.col("__an"), F.col("__bn")), 6)
     qerr_micro = F.round((F.lit(1.0) - sc) * 1000000).cast("long")
@@ -1420,8 +1335,9 @@ def ivf_staleness_report(spark: SparkSession, index_path: str,
               F.max("c").alias("max_cell")]
     b = _ivf_stored_cell_stats(spark, index_path, cent_rows) \
         .agg(*totals).alias("b")
-    a = _cell_stats(_label_cells(batch_emb.select("vec_id", "embedding"),
-                                 cent_rows)).agg(*totals).alias("a")
+    a = _cell_stats(_label_cells(batch_emb.select("embedding"),
+                                 _cent_df(spark, cent_rows))) \
+        .agg(*totals).alias("a")
     qerr = lambda side: F.col(f"{side}.qerr_sum") * 1.0         / F.col(f"{side}.n_vecs")  # noqa: E731
     ratio = F.round(qerr("a") / qerr("b"), 6)
     skew_a = F.round(F.col("a.max_cell") * F.lit(k) * 1.0
@@ -1518,21 +1434,14 @@ def retrain_ivf_index(spark: SparkSession, index_path: str,
                 f"retrain_ivf_index: {index_path} has no live rows "
                 "(every stored id tombstoned?) — nothing to train on; "
                 "drop the index or rebuild it from fresh data instead")
-        dim = len(cent[0][1])
-        comp_avgs = [F.round(F.avg(F.col("embedding")[i].cast("double")), 6)
-                     .alias(f"c{i}") for i in range(dim)]
-        for _ in range(iters):
-            rows = (_train_cells(emb, cent)
-                    .groupBy("cell").agg(*comp_avgs).collect())
-            cent = sorted((int(r.cell), [float(r[f"c{i}"])
-                           for i in range(dim)]) for r in rows)
+        cent = _lloyd(emb, cent, iters)
+        cent_df = _cent_df(spark, cent)
         tmp, _old = _ilc.swap_paths(index_path)
-        (_with_cell(emb, cent)
+        (_with_cell(emb, cent_df)
          .repartition(F.col("cell"),
                       F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
          .write.mode("overwrite").partitionBy("cell").parquet(tmp))
-        (literal_df(spark, cent, "cid int, cvec array<double>")
-         .coalesce(1).write.mode("overwrite")
+        (cent_df.coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(tmp, "_centroids")))
         # stats from the just-written replacement tree (cells ride the
         # partition path — assigned-cell scoring, no second argmax)
@@ -1610,93 +1519,6 @@ SELECT b.n_vecs AS n_build, a.n_vecs AS n_append,
           > {IVF_STALE_SKEW}) AS stale
 FROM (SELECT * FROM agg WHERE epoch = 'build') b,
      (SELECT * FROM agg WHERE epoch = 'append') a, kk
-"""
-
-
-def ann_cosine_topk_arrow_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized-Python variant of the brute-force top-k: cosine scored in
-    numpy over Arrow batches (``mapInPandas``).  Same join/rank shape as
-    the JVM version; numpy's SIMD/pairwise summation means the last float
-    ulp can differ from strict left-to-right folds, so this variant is
-    checked rows-only by the driver and against the JVM version within
-    1e-9 in tests.  It exists as the template for embedding kernels that
-    genuinely need numpy (PCA whitening, quantization, learned indexes) —
-    batch-columnar, no per-row Python."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    emb = _emb(spark, sf_dir)
-    q_rows = (emb.where(F.col("vec_id") < N_QUERIES)
-              .select("vec_id", "embedding").collect())
-    q_ids = np.array([r.vec_id for r in q_rows])
-    q_mat = np.array([r.embedding for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    schema = T.StructType([
-        T.StructField("q_id", T.LongType()),
-        T.StructField("n_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def score(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            n_ids = pdf["vec_id"].to_numpy()
-            c = np.array(list(pdf["embedding"]), dtype=np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
-            sims = c @ mat.T  # (batch, n_queries)
-            out = pd.DataFrame({
-                "q_id": np.repeat(ids, len(n_ids)),
-                "n_id": np.tile(n_ids, len(ids)),
-                "cosine": np.round(sims.T.ravel(), 6),
-            })
-            yield out[out.q_id != out.n_id]
-
-    # widened scan below the Arrow worker (r19 opt, see _emb_wide): the
-    # numpy matmul parallelism equals the scan's split count
-    scored = (_emb_wide(spark, sf_dir).select("vec_id", "embedding")
-              .mapInPandas(score, schema))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
-
-
-ARROW_COSINE_TOL = 1e-5
-
-
-def ann_cosine_topk_arrow_bounds_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-hashable bounds check for the Arrow/numpy ANN lane: joins
-    the numpy top-k to the JVM exact top-k on (q_id, rank) and emits the
-    JVM-side deterministic values plus a boolean asserting the numpy
-    cosine at that rank is within ARROW_COSINE_TOL.  The oracle is the
-    exact top-k SQL with TRUE for the bound — so the driver's value hash
-    goes red if the Arrow kernel ever drifts past tolerance (or drops a
-    rank), giving the no-oracle-by-design variant a real driver row."""
-    jvm = ann_cosine_topk_df(spark, sf_dir)
-    arrow = (ann_cosine_topk_arrow_df(spark, sf_dir)
-             .select("q_id", "rank", F.col("cosine").alias("arrow_cosine")))
-    return (jvm.join(arrow, ["q_id", "rank"])
-            .select("q_id", "n_id", "rank", "cosine",
-                    (F.abs(F.col("cosine") - F.col("arrow_cosine"))
-                     <= ARROW_COSINE_TOL).alias("within_tol")))
-
-
-ANN_COSINE_TOPK_ARROW_BOUNDS_SQL = f"""
-WITH scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         round({sql_cosine('q.embedding', 'c.embedding')}, 6) AS cosine
-  FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < {N_QUERIES})
-SELECT q_id, n_id,
-       CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id)
-            AS INT) AS rank,
-       cosine,
-       TRUE AS within_tol
-FROM scored
-QUALIFY rank <= {TOP_K}
 """
 
 
@@ -1805,82 +1627,53 @@ ANN_LSH_MULTIPROBE_SQL = _lsh_multiprobe_sql(None)
 
 IVF_KMEANS_ITERS = 2
 
-# Training-assignment strategy.  "join" scores against the centroids as
-# broadcast DATA — since the r19 map-only rewrite of _with_cell_join it
-# is a broadcast array-of-structs argmax projection: NO corpus shuffle
-# per iteration (the old groupBy-max-struct form shuffled N embedding-
-# wide rows into a sort aggregate per iteration), no join-back, and the
-# generated code is independent of the centroid VALUES so nothing
-# recompiles per Lloyd iteration.  The literal form ("literal") embeds
-# the centroids as expressions instead: same values (pytest-pinned),
-# but a new expression tree — and thus a Janino recompile — per
-# iteration (measured 17.2s / 5.8s / 0.7s CPU over three repeats vs
-# the data form's stable sub-2s), so "join" is the default everywhere.
-# Assignment VALUES are identical either way (same round(cosine, 6)),
-# so the oracle-replayed trajectory does not depend on this switch.
-IVF_TRAIN_ASSIGN = "join"    # "join" | "literal"
+def _lloyd(emb: DataFrame, cent: list[tuple], iters: int) -> list[tuple]:
+    """``iters`` Lloyd rounds from the seed centroids ``cent`` ((cid,
+    cvec) pairs) over ``emb`` — the one update loop shared by
+    :func:`train_ivf_centroids` (first-k seeds) and
+    :func:`retrain_ivf_index` (hash-strided seeds).
 
-
-def _train_cells(emb: DataFrame, cent) -> DataFrame:
-    """(cell, embedding) rows for one Lloyd update, per
-    ``IVF_TRAIN_ASSIGN`` — both forms are map-only projections since
-    the r19 opt; they differ only in whether the centroids ride as
-    broadcast data or as literals."""
-    if IVF_TRAIN_ASSIGN == "literal":
-        return _with_cell(emb, cent).select("cell", "embedding")
-    return _with_cell_join(emb, cent).select("cell", "embedding")
+    Per round: (1) map-only cell assignment (:func:`_with_cell`); (2)
+    one per-component ``round(avg(double), 6)`` aggregate per cell — a
+    single whole-stage-codegen hash aggregate with map-side partial
+    averaging, so the exchange carries K rows per mapper and only K x
+    dim doubles reach the driver.  The 6-decimal rounding absorbs
+    summation-order float drift, so DuckDB replays the identical
+    trajectory.  Cells that lose all members drop out (both engines
+    agree)."""
+    spark = emb.sparkSession
+    dim = len(cent[0][1])
+    comp_avgs = [F.round(F.avg(F.col("embedding")[i].cast("double")), 6)
+                 .alias(f"c{i}") for i in range(dim)]
+    for _ in range(iters):
+        rows = (_with_cell(emb, _cent_df(spark, cent))
+                .groupBy("cell").agg(*comp_avgs).collect())
+        cent = sorted((int(r.cell), [float(r[f"c{i}"])
+                       for i in range(dim)]) for r in rows)
+    return cent
 
 
 def train_ivf_centroids(spark: SparkSession, sf_dir: str, k: int = IVF_K,
                         iters: int = IVF_KMEANS_ITERS) -> list[tuple]:
     """Lloyd's k-means over the embedding corpus, expressed as iterated
-    DataFrame jobs — the production replacement for the seed centroids.
-
-    Per iteration: (1) cell assignment per ``IVF_TRAIN_ASSIGN`` (see
-    above — broadcast-data argmax by default, broadcast-literal argmax
-    selectable); (2) the centroid update shuffles with map-side partial
-    averaging — the exchange carries one row per (cell, dim) per
-    mapper, i.e. K*dim rows, not the corpus.  Only K*dim averaged
-    doubles ever reach the driver (index metadata, same scale as the
-    probe step's centroid collect).
-
-    Determinism across engines: component averages are rounded to 6
-    decimals (absorbing summation-order float drift) before becoming the
-    next iteration's literals, so DuckDB replays the identical training
-    trajectory and the whole trained index is oracle-checkable.  Cells
-    that lose all members simply drop out (both engines agree)."""
+    DataFrame jobs (:func:`_lloyd`) from the first-K seed centroids —
+    the production replacement for the seed centroids.  Deterministic
+    across engines (rounded updates), so the whole trained index is
+    oracle-checkable."""
     # cache across the Lloyd iterations (the standard iterative-training
     # shape — MLlib does the same); released before returning.  Widen
     # first: the cached partitioning is what every iteration's argmax
     # runs on, and an under-split scan would pin all of them to one
     # core.  _emb_wide (not the uncapped spread) since batch 8: its
     # bytes_per_task cap keeps a tiny local corpus from splintering
-    # into per-task-overhead-dominated slivers — the batch-7 rationale,
-    # applied to the training cache too.
+    # into per-task-overhead-dominated slivers.
     emb = _emb_wide(spark, sf_dir).cache()
-    cent = [(int(cid), [float(x) for x in cvec])
-            for cid, cvec in _ivf_centroid_rows(emb, k)]
-    dim = len(cent[0][1])
-    # Per-component avg aggregates instead of posexplode: the old shape
-    # generated corpus x dim rows per iteration just to feed the partial
-    # agg; this one keeps one row per vector and runs `dim` accumulators
-    # in a single whole-stage-codegen hash aggregate (same
-    # round(avg(double), 6) formula per component, so the DuckDB replay
-    # trajectory is unchanged).  The exchange still carries only K rows
-    # per mapper; the driver still receives only K x dim doubles.
-    comp_avgs = [F.round(F.avg(F.col("embedding")[i].cast("double")), 6)
-                 .alias(f"c{i}") for i in range(dim)]
     try:
-        for _ in range(iters):
-            rows = (_train_cells(emb, cent)
-                    .groupBy("cell")
-                    .agg(*comp_avgs)
-                    .collect())
-            cent = sorted((int(r.cell), [float(r[f"c{i}"])
-                           for i in range(dim)]) for r in rows)
+        return _lloyd(emb, [(int(cid), [float(x) for x in cvec])
+                            for cid, cvec in _ivf_centroid_rows(emb, k)],
+                      iters)
     finally:
         emb.unpersist()
-    return cent
 
 
 # Part of the trained-centroid cache tag: bump it whenever the Lloyd
@@ -1944,28 +1737,19 @@ def ann_ivf_kmeans_df(spark: SparkSession, sf_dir: str,
         k = _auto_ivf_k(spark, sf_dir)
     if nprobe is None:
         nprobe = _auto_nprobe(k, IVF_NPROBE)
-    cent = trained_ivf_centroids(spark, sf_dir, k=k)
+    cent = _cent_df(spark, trained_ivf_centroids(spark, sf_dir, k=k))
     # serve-side assignment + candidate scoring are map-only since the
     # r19 rewrite — widen an under-split scan first (the single-split
     # sf0.1 scan pinned ~3s of dim-64 folds to one core)
     emb = _emb_wide(spark, sf_dir)
     # corpus-side norm computed ONCE per row and shared between the
-    # cell assignment and the candidate scoring (r20, ADVICE r19: the
-    # r19 form re-folded the identical dim-64 vnorm per corpus row
-    # because _with_cell_join dropped the one it had just computed)
-    if IVF_TRAIN_ASSIGN == "join":
-        cells = _with_cell_join(emb, cent, keep_norm="__nn") \
-            .select("vec_id", "embedding", "cell", "__nn")
-    else:
-        cells = (_with_cell(emb, cent).select("vec_id", "embedding", "cell")
-                 .withColumn("__nn", vnorm(F.col("embedding"))))
-    cent_df = literal_df(spark,
-        [(cid, cvec) for cid, cvec in cent],
-        "cid int, cvec array<double>")
+    # cell assignment and the candidate scoring (r20, ADVICE r19)
+    cells = _with_cell(emb, cent, keep_norm="__nn") \
+        .select("vec_id", "embedding", "cell", "__nn")
     q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
            .select(F.col("vec_id").alias("q_id"),
                    F.col("embedding").alias("q_emb"))
-    probes = _probe_cells(q, cent_df, nprobe) \
+    probes = _probe_cells(q, cent, nprobe) \
         .withColumn("__qn", vnorm(F.col("q_emb")))
     cand = (cells.join(F.broadcast(probes), "cell")
             .where(F.col("q_id") != F.col("vec_id")))
@@ -2822,16 +2606,10 @@ def _pq_encode(emb: DataFrame, cb_df: DataFrame) -> DataFrame:
 
 
 def _pq_assign_cells(df: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, cell) via the deterministic rounded-cosine argmax
-    against the given centroids — shared by build and append so cell
-    routing can never diverge within one index lifecycle.  Map-only
-    since the r19 opt (the :func:`_with_cell_join` form): same
-    lexicographic (s, cid) argmax, no corpus shuffle."""
-    return (df.withColumn("__an", vnorm(F.col("embedding")))
-            .crossJoin(F.broadcast(_cent_arr(cent)))
-            .select("vec_id",
-                    _argmax_score("__cents", norm_col="__an")
-                    .getField("cid").alias("cell")))
+    """(vec_id, cell) for a PQ append batch via :func:`_with_cell` —
+    the same assignment :func:`build_pq_index` fuses with encoding, so
+    cell routing can never diverge within one index lifecycle."""
+    return _with_cell(df, cent).select("vec_id", "cell")
 
 
 def build_pq_index(spark: SparkSession, sf_dir: str,
@@ -2864,18 +2642,13 @@ def build_pq_index(spark: SparkSession, sf_dir: str,
     cent = (_emb(spark, sf_dir).where(F.col("vec_id") < k)
             .select(F.col("vec_id").alias("cid"),
                     F.col("embedding").alias("cvec")))
-    # encode + cell-route fused into ONE map-only projection over the
-    # widened scan (r19 opt): both are broadcast-array argmin/argmax
-    # projections now, so the old encode-to-cells join on vec_id — a
-    # corpus shuffle — is gone; the only remaining exchange is the
-    # writer repartition that shapes the output files.
-    (_emb_wide(spark, sf_dir)
-     .withColumn("__an", vnorm(F.col("embedding")))
+    # encode + cell-route fused into ONE map-only pass over the widened
+    # scan (r19 opt): both are broadcast-array argmin/argmax
+    # projections, so there is no encode-to-cells join on vec_id — the
+    # only exchange is the writer repartition that shapes the files.
+    (_with_cell(_emb_wide(spark, sf_dir), cent)
      .crossJoin(F.broadcast(_pq_cb_arr(cb_df)))
-     .crossJoin(F.broadcast(_cent_arr(cent)))
-     .select("vec_id", _pq_codes_expr().alias("codes"),
-             _argmax_score("__cents", norm_col="__an")
-             .getField("cid").alias("cell"))
+     .select("vec_id", _pq_codes_expr().alias("codes"), "cell")
      .repartition(F.col("cell"),
                   F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
      .write.mode("overwrite").partitionBy("cell").parquet(index_path))

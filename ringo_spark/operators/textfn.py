@@ -105,9 +105,8 @@ def vnorm(a: Column) -> Column:
     """The Euclidean norm exactly as :func:`cosine` folds it —
     ``sqrt(dot(a, a))`` — exposed so hot pair-scoring paths can compute
     each side's norm ONCE per row instead of once per scored pair
-    (higher-order folds are interpreted, so Spark never CSEs them; the
-    r19 ``_with_cell`` docstring measured the redundant norm folds at
-    ~2/3 of the argmax CPU)."""
+    (higher-order folds are interpreted, so Spark never CSEs them; r19
+    measured the redundant norm folds at ~2/3 of the IVF argmax CPU)."""
     return F.sqrt(dot(a, a))
 
 

@@ -239,25 +239,6 @@ def test_ivf_recall_holds_at_larger_k_with_proportional_nprobe(spark):
     assert all(r.meets_floor for r in rows)
 
 
-def test_ivf_train_assign_paths_agree(spark):
-    """IVF_TRAIN_ASSIGN is a pure cost switch: the join-form training
-    assignment (broadcast centroid data, max-struct carrying the
-    embedding) must replay the EXACT same rounded Lloyd trajectory as
-    the literal-argmax form — centroid lists equal to the last bit."""
-    from ringo_spark.operators import similarity as sim
-
-    sf = "/root/testdata/sf0.001"
-    orig = sim.IVF_TRAIN_ASSIGN
-    try:
-        sim.IVF_TRAIN_ASSIGN = "join"
-        a = sim.train_ivf_centroids(spark, sf)
-        sim.IVF_TRAIN_ASSIGN = "literal"
-        b = sim.train_ivf_centroids(spark, sf)
-    finally:
-        sim.IVF_TRAIN_ASSIGN = orig
-    assert a == b and len(a) > 0
-
-
 def test_quantize_recall_floor_holds_and_is_falsifiable(spark):
     """The quantization retrieval-fidelity contract: at int8 (127
     levels) the dequantized corpus recovers ~0.99 of the exact top-5

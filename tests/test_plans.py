@@ -722,13 +722,16 @@ def test_hoisted_norms_stay_out_of_scoring_lambdas(spark):
     rest of the printed Project line, so a legitimate hoisted SQRT
     projected AFTER a lambda on the same line false-failed the pin.
     Coverage extended to an LSH lane and a seeded-IVF lane (ADVICE
-    r19).  The PQ serve path is deliberately NOT pinned SQRT-free: its
-    refine lane scores Q x R metadata-scale rows with the in-line
-    cosine (left un-hoisted by design, r19 batch 8)."""
+    r19), and to every cell-assignment site (_with_cell and the
+    _label_cells / _pq_assign_cells callers).  The PQ serve path is
+    deliberately NOT pinned SQRT-free: its refine lane scores Q x R
+    metadata-scale rows with the in-line cosine (left un-hoisted by
+    design, r19 batch 8)."""
     import re
 
     from ringo_spark.operators.similarity import (
-        _with_cell_join, ann_ivf_df, ann_lsh_bucketed_df,
+        _cent_df, _label_cells, _pq_assign_cells, _with_cell, ann_ivf_df,
+        ann_lsh_bucketed_df,
     )
 
     def lambda_bodies(plan: str) -> list[str]:
@@ -748,8 +751,10 @@ def test_hoisted_norms_stay_out_of_scoring_lambdas(spark):
     # the bit-exact Arrow kernel (no JVM scoring lambdas remain; plan
     # shape pinned in tests/test_arrow_parity.py instead)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cent = [(i, [float(j) for j in range(8)]) for i in range(4)]
-    for df in (_with_cell_join(emb, cent),
+    cent = _cent_df(spark, [(i, [float(j) for j in range(8)])
+                            for i in range(4)])
+    for df in (_with_cell(emb, cent), _label_cells(emb, cent),
+               _pq_assign_cells(emb, cent),
                ann_lsh_bucketed_df(spark, SF),
                ann_ivf_df(spark, SF)):
         opt = df._jdf.queryExecution().optimizedPlan().toString()

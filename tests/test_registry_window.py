@@ -41,8 +41,7 @@ def test_every_windowed_query_has_an_oracle():
 def test_displaced_no_oracle_entries_are_the_declared_two():
     oracles = entrymod.oracle_sql()
     no_oracle = [n for n in DISPLACED if n not in oracles]
-    assert no_oracle == ["fact_events_by_minute_approx",
-                         "ann_cosine_topk_arrow"]
+    assert no_oracle == ["fact_events_by_minute_approx"]
 
 
 def test_families_partition_registry():

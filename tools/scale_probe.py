@@ -994,8 +994,8 @@ def ivf_scenario():
     — and at a PROPORTIONAL nprobe (max(4, K/4), constant ~25% corpus
     fraction), where recall holding up is the actual scale claim: cells
     shrinking does not break the index, it just moves the recall knob.
-    K=256 also exercises the post-gate join-based cell assignment
-    (_with_cell_join) end to end."""
+    K=256 is past CELL_ASSIGN_LITERAL_MAX_K, so it also shows the
+    broadcast-data cell assignment (_with_cell) holding at any K."""
     from ringo_spark.catalog import get_spark
     from ringo_spark.operators.similarity import (
         IVF_RECALL_NPROBE, ann_ivf_recall_bounds_df, train_ivf_centroids,
