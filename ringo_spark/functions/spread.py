@@ -7,139 +7,87 @@ runs every downstream map stage — including interpreted higher-order
 expressions like shingling — on a handful of cores no matter how small
 ``spark.sql.files.maxPartitionBytes`` is set.
 
-``spread`` round-robin-repartitions ONLY when the plan currently has
-fewer partitions than the session's parallelism: on a well-split corpus
-(100k splits on a cluster) it is the identity and never introduces the
-catastrophic down-shuffle an unconditional ``repartition(cores)`` would
-be.  Reserve it for stages whose per-row compute dwarfs the one-time
-shuffle of the raw rows (shingling, signature building, decode lanes) —
-cheap map-only projections keep their zero-Exchange plans.
+``spread_source`` is the one widening rule.  It decides on the driver
+from the source files' sizes alone and never asks Spark to plan the
+frame: counting a multi-stage frame's partitions through its RDD makes
+AQE execute its shuffle stages as a throwaway job.  On a well-split corpus
+it is the identity, so it never introduces the down-shuffle an
+unconditional ``repartition(cores)`` would.  Reserve it for stages whose
+per-row compute dwarfs the one-time shuffle of the raw rows — cheap
+map-only projections keep their zero-Exchange plans.
 """
 
 from __future__ import annotations
 
-import re
+import math
+import os
 
 from pyspark.sql import DataFrame
 
-# logical nodes whose presence means the frame is NOT a bare scan: its
-# stage parallelism comes from shuffle.partitions, and — the real hazard
-# (r17 review) — counting its partitions via df.rdd would finalize the
-# AQE plan, EXECUTING every shuffle stage as a throwaway job before the
-# caller's own action re-plans and re-executes them.
-# Repartition/coalesce deliberately NOT listed: a caller-applied
-# repartition is cheap to probe and the partition count is exactly
-# what spread must inspect (coalesce(1) plans as logical Repartition).
-# Matching is anchored to the NODE NAME position — the first token of
-# each treeString line, after the tree-drawing prefix (``+- ``/``:- ``/
-# ``:  ``) — because a substring match anywhere in the line
-# false-positives on CamelCase column/relation names in the node's
-# argument list and silently skips the up-repartition on a genuinely
-# bare scan (ADVICE r17).  startswith, not equality: variant nodes
-# (DeduplicateWithinWatermark, WindowGroupLimit) are the same families.
-_NODE_HEAD = re.compile(r"^[ :+|-]*([A-Za-z]\w*)")
-_MULTI_STAGE_HEADS = ("Join", "Aggregate", "Window", "Sort",
-                      "Deduplicate", "CoGroup", "Distinct")
+# Per-task byte floors, one per consumer class.  A floor caps the
+# widened width by the data: min(parallelism, ceil(source bytes /
+# floor)), so a MB-scale local source fans out only as far as its
+# per-row work repays each task's scheduling overhead.  At real scale
+# bytes / floor exceeds parallelism and every floor is inert.  Heavy
+# per-row work — shingling, signatures, chunk hashing, the IVF index
+# build and retrain — passes no floor and widens to full parallelism.
+
+# interpreted dim-64 folds per vector (cosine scoring, argmax cell
+# assignment, signature hashing)
+INTERPRETED_FOLD_BYTES = 48 << 10
+# one pass of token/regex scoring per document
+TEXT_SCORING_BYTES = 64 << 10
+# numpy Arrow-kernel lanes: ~50x the interpreted fold's work per
+# task-second, and every mapInArrow task pays a Python-worker round-trip
+ARROW_KERNEL_BYTES = 4 << 20
+# fact rollups: casts, broadcast FK joins and partial aggregation over a
+# few MB do not repay a round-robin exchange (a measured net loss on
+# every fact query at sf0.1, 8 and 32 cores)
+FACT_ROLLUP_BYTES = 32 << 20
 
 
-def _is_multi_stage(tree: str) -> bool:
-    for line in tree.splitlines():
-        m = _NODE_HEAD.match(line)
-        if m and m.group(1).startswith(_MULTI_STAGE_HEADS):
-            return True
-    return False
-
-
-def spread(df: DataFrame) -> DataFrame:
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-        if _is_multi_stage(tree):
-            return df
-    except Exception:
-        pass   # unknown plan shape: the partition probe below decides
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
-
-
-def _bytes_conf(val: str) -> int:
-    """Parse a Spark size conf value ('8m', '128m', '1g', plain bytes)."""
-    s = str(val).strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                   ("b", 1)):
-        if s.endswith(suf):
-            s, mult = s[: -len(suf)], m
-            break
-    return int(float(s)) * mult
+def _data_file_sizes(path: str):
+    """Sizes of the files Spark's discovery reads at ``path``: the file
+    itself, or every file under the directory with ``_``/``.``-prefixed
+    files and directories skipped (``_SUCCESS``, index sidecars such as
+    ``_centroids/`` and ``_tombstones/``)."""
+    if not os.path.isdir(path):
+        yield os.path.getsize(path)
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                yield os.path.getsize(os.path.join(root, f))
 
 
 def spread_source(df: DataFrame, *source_paths: str,
                   bytes_per_task: int | None = None) -> DataFrame:
-    """Widen a compute-bound frame whose parallelism is BOUNDED BY an
-    under-split source scan, decided entirely DRIVER-SIDE (no partition
-    probe — safe on multi-stage plans where ``spread``'s ``df.rdd``
-    probe would execute the AQE plan as a throwaway job, r17 review).
+    """Round-robin-widen ``df`` when its source files pack into fewer
+    splits than the session's parallelism.
 
     The bound argument: every narrow/broadcast-join descendant of a scan
     has at most the scan's split count; AQE post-shuffle coalescing can
-    only shrink it further.  So when the *source files* of ``df`` pack
-    into fewer splits than the session's parallelism (split estimate =
-    ceil(bytes / maxPartitionBytes) per file, the scan packer's upper
-    bound), downstream map stages — shingling, signature building — are
-    provably under-parallelized and a round-robin widen is worth its
-    tiny shuffle.  On a many-split real corpus the estimate exceeds
-    parallelism and this is the identity: no down-shuffle, no plan
-    change, exactly like ``spread`` on a well-split scan.
+    only shrink it further.  The split estimate is ceil(bytes /
+    maxPartitionBytes) per file, the scan packer's upper bound, so when
+    it falls short of parallelism the downstream map stages are provably
+    under-parallelized and a widen is worth its tiny shuffle.
 
-    ``bytes_per_task`` caps the widened width by the data itself:
-    target = min(parallelism, ceil(total_bytes / bytes_per_task)).  Use
-    it for MODERATE per-row compute (e.g. one scoring expression) where
-    full-parallelism round-robin would split a tiny local corpus into
-    partitions whose per-task scheduling overhead exceeds their work;
-    heavy decode/vector lanes keep the default full width.  At real
-    scale total_bytes/bytes_per_task exceeds parallelism and the cap
-    is inert."""
-    import math
-    import os
-
+    ``bytes_per_task`` is one of the floors above (None: full width);
+    the target is min(parallelism, ceil(total_bytes / bytes_per_task))."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if bytes_per_task:
-        total = 0
-        for p in source_paths:
-            try:
-                if os.path.isdir(p):
-                    for root, _dirs, files in os.walk(p):
-                        for f in files:
-                            if not f.startswith(("_", ".")):
-                                total += os.path.getsize(
-                                    os.path.join(root, f))
-                else:
-                    total += os.path.getsize(p)
-            except OSError:
-                return df
-        target = max(1, min(target, math.ceil(total / bytes_per_task)))
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    total = splits = 0
     try:
-        mpb = _bytes_conf(spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"))
-    except Exception:
-        mpb = 128 << 20
-    splits = 0
-    for p in source_paths:
-        try:
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        if f.startswith(("_", ".")):
-                            continue
-                        splits += max(1, math.ceil(
-                            os.path.getsize(os.path.join(root, f)) / mpb))
-            else:
-                splits += max(1, math.ceil(os.path.getsize(p) / mpb))
-        except OSError:
-            return df   # unreadable source (remote FS): leave the plan alone
-        if splits >= target:
-            return df
+        for p in source_paths:
+            for size in _data_file_sizes(p):
+                total += size
+                splits += max(1, math.ceil(size / mpb))
+    except OSError:
+        return df   # unreadable source (remote FS): leave the plan alone
+    if bytes_per_task:
+        target = max(1, min(target, math.ceil(total / bytes_per_task)))
+    if splits >= target:
+        return df
     return df.repartition(target)

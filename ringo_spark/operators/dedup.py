@@ -64,6 +64,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rps(spark, f"{sf_dir}/documents.parquet")
 
 
+def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents scan widened to full parallelism when under-split,
+    for the heavy per-document lanes (signatures, chunk hashing)."""
+    from ..functions.spread import spread_source
+
+    return spread_source(_docs(spark, sf_dir), f"{sf_dir}/documents.parquet")
+
+
 # The two quadratic baselines below are exact small-scale oracles, not
 # production operators — guard them so the all-pairs shape can't be
 # cargo-culted onto a corpus where it would never finish.
@@ -175,14 +183,11 @@ def _assert_small_scale(df: DataFrame, op: str, scale_path: str) -> DataFrame:
 def _shingled(spark: SparkSession, sf_dir: str,
               docs: DataFrame | None = None) -> DataFrame:
     # The shingling expressions are interpreted (higher-order) and
-    # CPU-bound, so widen under-split scans across cores first (spread
-    # is conditional: on a many-split real corpus it is the identity —
-    # the old unconditional repartition(cores) would have DOWN-shuffled
-    # a well-split corpus).  ``spread_source`` decides driver-side from
-    # the parquet footprint, so the docs-given (collapsed-reps) path —
-    # whose multi-stage plan ``spread`` must refuse to probe — widens
-    # too instead of inheriting the AQE-coalesced (often single)
-    # post-join partitioning for the heaviest map stage in the repo.
+    # CPU-bound, so widen under-split scans across cores first.
+    # ``spread_source`` decides from the source files, so the
+    # docs-given (collapsed-reps) path widens too instead of inheriting
+    # the AQE-coalesced (often single) post-join partitioning for the
+    # heaviest map stage in the repo.
     #
     # Tokens are materialized in their OWN projection: shingles() refers
     # to its input three times (sequence bound, transform body, guard),
@@ -854,14 +859,8 @@ def dedup_simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash fingerprint per document (frequency-weighted token
     sign bits).  Near-dup = small Hamming distance; the fingerprint itself
     is the oracle-checked output."""
-    from ..functions.spread import spread
-
     toks_h = F.transform(tokens(F.col("text")), lambda t: phash(t, 0))
-    # spread, not unconditional repartition (r17 review): on a
-    # many-split real corpus the latter DOWN-shuffles raw text to
-    # defaultParallelism — the policy every other compute-bound lane
-    # here already follows
-    return (spread(_docs(spark, sf_dir))
+    return (_docs_wide(spark, sf_dir)
             .select("doc_id", toks_h.alias("hs"))
             .select("doc_id", F.expr("""
 aggregate(sequence(0, 59), 0L, (acc, b) -> acc + IF(
@@ -1492,10 +1491,7 @@ def dedup_winnowing_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same one dedup_minhash_lsh uses — (doc_id, band_key) rows
     only, linear at 8x — and verification joins the tiny candidate list
     back to the fingerprint table for exact Jaccard."""
-    from ..functions.spread import spread
-
-    # spread, not unconditional repartition — the simhash rationale
-    docs = spread(_docs(spark, sf_dir))
+    docs = _docs_wide(spark, sf_dir)
     n_grams = F.length("text") - WINNOW_K + 1
     grams = F.transform(
         F.sequence(F.lit(1), n_grams),
@@ -1759,9 +1755,7 @@ def doc_dup_chunk_fraction_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk rows back to their doc — chunk-table-sized, shuffled on the
     hash key then doc_id.  No quadratic form exists at any step, so
     this runs at corpora where pairwise dedup cannot."""
-    from ..functions.spread import spread
-
-    chunks = _chunk_hashes(spread(_docs(spark, sf_dir)))
+    chunks = _chunk_hashes(_docs_wide(spark, sf_dir))
     # cache: both the per-chunk doc count AND the per-doc rollup read the
     # chunk table — without this the tokenize+md5 pass runs twice (the
     # dedup_minhash_lsh shingle-cache pattern; on a cluster swap for
@@ -1840,9 +1834,7 @@ def doc_dedup_spans_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction is a map-side higher-order expression.  Nothing is
     quadratic and the heavy text/token payload never shuffles — the
     removal lists do."""
-    from ..functions.spread import spread
-
-    base = (spread(_docs(spark, sf_dir))
+    base = (_docs_wide(spark, sf_dir)
             .select("doc_id", tokens(F.col("text")).alias("__toks"))
             .persist())
     chunks = _chunks_from_tokens(base, with_index=True)
@@ -1963,12 +1955,13 @@ def doc_dedup_spans_incremental_df(spark: SparkSession,
     appended per batch; ingestion never re-chunks or re-reads corpus
     text.  Batch chunk rows shuffle on the hash (owner min + index
     probe) and the removal lists on doc_id — all batch-sized."""
-    from ..functions.spread import spread
+    from ..functions.spread import spread_source
 
     docs = _docs(spark, sf_dir)
     corpus_h = (_chunk_hashes(docs.where(F.col("doc_id") < INGESTED_BELOW))
                 .select("h").distinct())
-    base = (spread(docs.where(F.col("doc_id") >= INGESTED_BELOW))
+    base = (spread_source(docs.where(F.col("doc_id") >= INGESTED_BELOW),
+                          f"{sf_dir}/documents.parquet")
             .select("doc_id", tokens(F.col("text")).alias("__toks"))
             .persist())
     removed = _span_removal_lists(
@@ -2063,9 +2056,7 @@ def doc_dup_chunk_fraction_incremental_df(spark: SparkSession,
     probe join) and once on doc_id for the rollup — all batch-sized;
     the index side shuffles only hashes.  Here the index is derived
     from the same documents table so the oracle can reproduce it."""
-    from ..functions.spread import spread
-
-    docs = spread(_docs(spark, sf_dir))
+    docs = _docs_wide(spark, sf_dir)
     index = (_chunk_hashes(docs.where(F.col("doc_id") < INGESTED_BELOW))
              .select("h").distinct()
              .withColumn("__in_corpus", F.lit(True)))

@@ -37,15 +37,10 @@ KEEP_LANGS = ("en", "es", "fr")
 def corpus_curation_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(split, lang) corpus accounting after quality filter, language
     selection, exact dedup, and hash split."""
-    # data-scaled widen (r19 opt, guide §2.6): single-pass scoring
-    # chain over a single-row-group local file — same shape and
-    # rationale as text._docs
-    from ..functions.spread import spread_source
+    # single-pass scoring chain: the text._docs widen
+    from .text import _docs
 
-    docs = spread_source(_rps(spark, f"{sf_dir}/documents.parquet"),
-                         f"{sf_dir}/documents.parquet",
-                         bytes_per_task=64 << 10)
-    kept = (docs
+    kept = (_docs(spark, sf_dir)
             .withColumn("n_words", F.size(tokens(F.col("text"))))
             .withColumn("q", F.round(quality_score_expr(), 6))
             .where((F.col("n_words") >= MIN_WORDS)

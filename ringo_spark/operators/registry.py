@@ -663,7 +663,10 @@ FAMILY_SOURCES: dict[str, list[str]] = {
                  "ringo_spark/operators/sampling.py",
                  "ringo_spark/operators/text.py",
                  "ringo_spark/operators/training.py", *_DEDUP_EXEC],
-    "training": ["ringo_spark/operators/training.py", _TEXTFN],
+    # training's quantize-recall audit scores similarity's Arrow-kernel
+    # corpus split (_emb_arrow)
+    "training": ["ringo_spark/operators/training.py", _TEXTFN,
+                 "ringo_spark/operators/similarity.py", _DELETION],
     # shares the Morton interleave kernel with the z-ordered write path;
     # reads events via load_catalog/testbed like the session family
     "layout": ["ringo_spark/operators/layout.py",

@@ -280,20 +280,15 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings corpus split for the Arrow-kernel lanes (r20).
-    The numpy kernel does ~50x more work per task-second than the
-    interpreted fold `_emb_wide` was capped for, and every mapInArrow
-    task pays a Python-worker round-trip (~quarter second on this box),
-    so the per-task byte floor is correspondingly larger: at 4 MB the
-    MB-scale local corpus stays ONE task (the kernel scores it in
-    milliseconds) while any real under-split corpus still fans out to
-    full parallelism — and on a well-split real scan this is the
-    identity, like every spread_source use."""
-    from ..functions.spread import spread_source
+    """The embeddings corpus split for the Arrow-kernel lanes (r20):
+    at the ``ARROW_KERNEL_BYTES`` floor the MB-scale local corpus stays
+    ONE task (the kernel scores it in milliseconds) while any real
+    under-split corpus still fans out to full parallelism."""
+    from ..functions.spread import ARROW_KERNEL_BYTES, spread_source
 
     return spread_source(_emb(spark, sf_dir),
                          f"{sf_dir}/embeddings.parquet",
-                         bytes_per_task=4 << 20)
+                         bytes_per_task=ARROW_KERNEL_BYTES)
 
 
 def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,16 +298,14 @@ def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, signature hashing) — pure CPU that nothing downstream
     re-parallelizes now that the assignment paths are map-only, so an
     under-split scan pins seconds of vector math to one core.
-    ``spread_source`` decides driver-side from the parquet footprint
-    and is the identity on a well-split corpus (no down-shuffle, no
-    plan change).  Query-side frames (a handful of filtered vectors)
-    keep the plain ``_emb`` scan — widening them would buy nothing and
-    cost an exchange."""
-    from ..functions.spread import spread_source
+    Query-side frames (a handful of filtered vectors) keep the plain
+    ``_emb`` scan — widening them would buy nothing and cost an
+    exchange."""
+    from ..functions.spread import INTERPRETED_FOLD_BYTES, spread_source
 
     return spread_source(_emb(spark, sf_dir),
                          f"{sf_dir}/embeddings.parquet",
-                         bytes_per_task=48 << 10)
+                         bytes_per_task=INTERPRETED_FOLD_BYTES)
 
 
 def _brute_scored_pairs(spark: SparkSession, sf_dir: str,
@@ -1381,7 +1374,7 @@ def retrain_ivf_index(spark: SparkSession, index_path: str,
     the driver, never a corpus collect.  ``k=None`` re-resolves the
     auto gate at the index's CURRENT row count (the corpus grew — a
     retrain is exactly when K should be re-sized)."""
-    from ..functions.spread import spread
+    from ..functions.spread import spread_source
     from .deletion import index_rows
 
     _ilc.recover_live(index_path, require=True)
@@ -1397,8 +1390,8 @@ def retrain_ivf_index(spark: SparkSession, index_path: str,
             "after it commits")
     if iters is None:
         iters = IVF_KMEANS_ITERS
-    emb = spread(index_rows(spark, index_path, id_col="vec_id")
-                 .select("vec_id", "embedding")).cache()
+    emb = spread_source(index_rows(spark, index_path, id_col="vec_id")
+                        .select("vec_id", "embedding"), index_path).cache()
     try:
         n = emb.count()
         if k is None:
@@ -1664,9 +1657,8 @@ def train_ivf_centroids(spark: SparkSession, sf_dir: str, k: int = IVF_K,
     # shape — MLlib does the same); released before returning.  Widen
     # first: the cached partitioning is what every iteration's argmax
     # runs on, and an under-split scan would pin all of them to one
-    # core.  _emb_wide (not the uncapped spread) since batch 8: its
-    # bytes_per_task cap keeps a tiny local corpus from splintering
-    # into per-task-overhead-dominated slivers.
+    # core.  _emb_wide's floor keeps a tiny local corpus from
+    # splintering into per-task-overhead-dominated slivers.
     emb = _emb_wide(spark, sf_dir).cache()
     try:
         return _lloyd(emb, [(int(cid), [float(x) for x in cvec])

@@ -32,7 +32,7 @@ def _docs(spark: SparkSession, sf_dir: str, wide: bool = True) -> DataFrame:
     """The documents scan, widened to a data-scaled width (r19 opt,
     guide §2.6): every text-family query runs interpreted token/regex
     expressions over the corpus, and the local single-row-group file
-    would run them all in ONE task.  The width cap (bytes_per_task)
+    would run them all in ONE task.  The ``TEXT_SCORING_BYTES`` floor
     keeps the tiny local corpus from splintering into pure-overhead
     tasks; at real corpus sizes the widen is the identity.  Results are
     partitioning-independent for every registered consumer (the DuckDB
@@ -50,10 +50,10 @@ def _docs(spark: SparkSession, sf_dir: str, wide: bool = True) -> DataFrame:
     raw = _rps(spark, f"{sf_dir}/documents.parquet")
     if not wide:
         return raw
-    from ..functions.spread import spread_source
+    from ..functions.spread import TEXT_SCORING_BYTES, spread_source
 
     return spread_source(raw, f"{sf_dir}/documents.parquet",
-                         bytes_per_task=64 << 10)
+                         bytes_per_task=TEXT_SCORING_BYTES)
 
 
 def _count_in(toks, words) -> F.Column:
@@ -853,10 +853,10 @@ def benchmark_contamination_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram level) in the benchmark set, and whether it crosses the
     decontamination threshold.  Returns (doc_id, n_shingles, n_hit,
     contamination, is_contaminated)."""
-    from ..functions.spread import spread
+    from ..functions.spread import spread_source
     from .textfn import shingles
 
-    # The emptiness guard rides BELOW the spread exchange as a
+    # The emptiness guard rides BELOW the widening exchange as a
     # token-count bound (r19 opt, same fix as dedup._shingled): a
     # ``size(sh) > 0`` filter above the exchange is pushed through it
     # and re-evaluates the whole 5-gram shingling under the exchange —
@@ -873,29 +873,33 @@ def benchmark_contamination_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         return docs.where(F.size(tokens(F.col("text"))) >= CONTAM_N)
 
     # The two sides shingle from SEPARATE scans on purpose: each side
-    # keeps its doc_id filter AT the scan (a shared spread scan would
+    # keeps its doc_id filter AT the scan (a shared widened scan would
     # put a round-robin exchange below the filters and shuffle the
     # whole corpus undivided), then widens the under-split case ABOVE
-    # its filter (identity on a real corpus).  The bench side spreads
-    # too (r19 opt): its 5-gram shingling ran as ONE task — 5.4s of the
-    # old 6.6s wall — because the filtered scan stays at the scan's
-    # split count; the exchange above the filter moves only bench docs.
+    # its filter to full width (identity on a real corpus).  The bench
+    # side widens too (r19 opt): its 5-gram shingling ran as ONE task —
+    # 5.4s of the old 6.6s wall — because the filtered scan stays at the
+    # scan's split count; the exchange above the filter moves only bench
+    # docs.
     # explode_outer, NOT explode (r19 opt): a non-outer Generate makes
     # the optimizer INFER ``size(sh) > 0`` below it
     # (InferFiltersFromGenerate) and push that filter through the
-    # spread exchange — re-evaluating the whole shingle pipeline
+    # widening exchange — re-evaluating the whole shingle pipeline
     # single-task under the exchange, exactly the duplication the
     # ``_kept`` rewrite removed.  ``_kept`` already guarantees every
     # row's sh is non-null and non-empty (>= CONTAM_N tokens), so the
     # outer explode emits the identical rows.
-    docs = _docs(spark, sf_dir)
-    bench = (_sh(spread(_kept(docs.where(F.col("doc_id") < BENCHMARK_BELOW))))
+    path = f"{sf_dir}/documents.parquet"
+    docs = _docs(spark, sf_dir, wide=False)
+    bench = (_sh(spread_source(
+        _kept(docs.where(F.col("doc_id") < BENCHMARK_BELOW)), path))
              .select(F.explode_outer("sh").alias("g")).distinct())
     # single shingling pass over the train side: n_shingles rides the
     # explode and the hit flag comes from a LEFT join (every exploded
     # row survives, so every train doc reaches the aggregate — no second
     # scan to recover zero-hit docs)
-    train = (_sh(spread(_kept(docs.where(F.col("doc_id") >= BENCHMARK_BELOW))))
+    train = (_sh(spread_source(
+        _kept(docs.where(F.col("doc_id") >= BENCHMARK_BELOW)), path))
              .select("doc_id", F.size("sh").alias("n_shingles"),
                      F.explode_outer("sh").alias("g")))
     counted = (train.join(F.broadcast(bench.withColumn("__hit", F.lit(1))),
@@ -971,9 +975,9 @@ def text_repetition_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition metrics: the occurrence fraction of the
     most frequent bigram, the repeated fraction of trigram occurrences,
     and the drop flag at the Gopher-ish thresholds."""
-    from ..functions.spread import spread
+    from .dedup import _docs_wide
 
-    docs = spread(_docs(spark, sf_dir))
+    docs = _docs_wide(spark, sf_dir)
     toks = F.col("__toks")
     bg, tg = _grams_all(toks, 2), _grams_all(toks, 3)
     # max bigram multiplicity == longest equal run in the SORTED gram
@@ -1295,9 +1299,9 @@ def vocab_topk_cms_bounds_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch must be aggregated before the result frame can be built).
     It is listed in ``registry.EAGER_QUERIES``; plan-only tooling skips
     it (r07 ADVICE)."""
-    from ..functions.spread import spread
+    from .dedup import _docs_wide
 
-    toks = (spread(_docs(spark, sf_dir))
+    toks = (_docs_wide(spark, sf_dir)
             .select(F.explode(tokens(F.col("text"))).alias("token")))
     agg = toks.agg(
         F.count(F.lit(1)).alias("n"),

@@ -339,16 +339,12 @@ def embed_quantize_recall_bounds_df(spark: SparkSession, sf_dir: str,
     itself is map-only."""
     from ..functions.arrowkern import brute_cosine_pairs, \
         collect_query_vectors
-    from ..functions.spread import spread_source
+    from .similarity import _emb_arrow
 
     emb = _rps(spark, f"{sf_dir}/embeddings.parquet")
-    # both audit lanes score in the Arrow kernel (r20) — the per-task
-    # byte floor matches the kernel's throughput, not the interpreted
-    # fold's (see similarity._emb_arrow): the MB-scale local corpus
-    # stays one task, a real under-split corpus fans out, a well-split
-    # scan is untouched.  The query frame keeps the plain scan.
-    wide = spread_source(emb, f"{sf_dir}/embeddings.parquet",
-                         bytes_per_task=4 << 20)
+    # both audit lanes score in the Arrow kernel (r20); the query frame
+    # keeps the plain scan
+    wide = _emb_arrow(spark, sf_dir)
     scale = F.round(F.array_max(F.transform(
         "embedding", lambda x: F.abs(x.cast("double")))), 6)
     deq_codes = F.transform(

@@ -42,7 +42,7 @@ from ..model import (
     PopulationMode, TenantId, ForeignKey,
 )
 from ..catalog import cast_to_declared
-from ..functions.spread import spread_source
+from ..functions.spread import FACT_ROLLUP_BYTES, spread_source
 from .common import (
     coalesce_column, dim_column_mapping, fk_spark_type as _fk_spark_type,
     qcol, table_pk_column, time_bucket_expr,
@@ -120,34 +120,18 @@ def fact_population_df(
     # RAW pre-cast frame when the catalog provides it: the declared
     # decimal/timestamp casts then run at full width above the exchange,
     # which also carries the narrower raw types.
-    #
-    # bytes_per_task cap (r20, VERDICT r19 item 1): the r19 form widened
-    # unconditionally to full parallelism, and the driver's cold-JVM
-    # protocol measured the inserted RoundRobinPartitioning exchange as
-    # a net LOSS on every fact query at sf0.1 (fact_events_by_minute
-    # 1.47->2.07 s at c32, slower at c8 too) — the rollup's map work
-    # (casts + broadcast joins + partial agg) over a couple of MB does
-    # not repay a 32-way exchange.  The cap makes the widen fire only
-    # when each added task gets at least FACT_BYTES_PER_TASK of raw
-    # scan bytes (target = min(parallelism, ceil(bytes/cap)), the
-    # text/_emb_wide pattern): identity on the local MB-scale tables,
-    # full width on any real under-split fact extract, where the same
-    # exchange is repaid by minutes of map-side work.  Env-tunable like
-    # maxPartitionBytes (SPARK_GRAFT_FACT_BYTES_PER_TASK).
-    import os as _os
-
-    fact_cap = int(_os.environ.get(
-        "SPARK_GRAFT_FACT_BYTES_PER_TASK", str(32 << 20)))
     src_path = getattr(src, "_ringo_src_path", None)
     if src_path:
         raw_pair = getattr(src, "_ringo_raw", None)
         if raw_pair is not None:
             raw, raw_table = raw_pair
-            wide = spread_source(raw, src_path, bytes_per_task=fact_cap)
+            wide = spread_source(raw, src_path,
+                                 bytes_per_task=FACT_ROLLUP_BYTES)
             if wide is not raw:
                 src = cast_to_declared(wide, raw_table)
         else:
-            src = spread_source(src, src_path, bytes_per_task=fact_cap)
+            src = spread_source(src, src_path,
+                                bytes_per_task=FACT_ROLLUP_BYTES)
     df = src.alias(f_name)
 
     # --- parent-fact source joins (left outer on declared FKs) -------------

@@ -2574,46 +2574,22 @@ def test_tokenizer_whitespace_class_is_engine_portable(spark, tmp_path):
 
 
 def test_spread_never_finalizes_multi_stage_plans(spark):
-    """r17 review finding: spread()'s partition probe (df.rdd) forces
-    AQE's final plan, EXECUTING the frame's shuffle stages as a
-    throwaway job.  Multi-stage frames must pass through untouched —
-    their parallelism comes from shuffle.partitions anyway."""
-    from ringo_spark.functions.spread import spread
+    """r17 review finding: a partition probe (df.rdd) forces AQE's final
+    plan, EXECUTING a multi-stage frame's shuffle stages as a throwaway
+    job.  spread_source decides from the source files alone, so widening
+    a groupBy or join frame runs no Spark job at all."""
+    from ringo_spark.functions.spread import spread_source
+    from tests.fixtures import count_spark_jobs
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    path = f"{SF}/documents.parquet"
+    docs = spark.read.parquet(path)
     collapsed = (docs.groupBy(F.md5("text").alias("h"))
                  .agg(F.min("doc_id").alias("doc_id")))
-    assert spread(collapsed) is collapsed        # untouched, unprobed
     joined = docs.join(collapsed.select("doc_id"), "doc_id")
-    assert spread(joined) is joined
-    # a bare scan still spreads (the single-file local corpus case)
-    assert spread(docs) is not None              # probe path still works
-
-
-def test_spread_matches_plan_nodes_not_substrings(spark):
-    """ADVICE r17: the multi-stage check matched node names as
-    substrings anywhere in the optimized plan's treeString, so CamelCase
-    column/relation names containing 'Sort'/'Join'/'Window' etc.
-    false-positived and silently skipped the up-repartition on a
-    genuinely bare scan.  The match is now anchored to the node-name
-    position (first token of each tree line)."""
-    from ringo_spark.functions.spread import _is_multi_stage, spread
-
-    target = spark.sparkContext.defaultParallelism
-    # a bare scan whose COLUMN names contain every trigger word: must
-    # still spread (the local corpus arrives as one row group)
-    docs = (spark.read.parquet(f"{SF}/documents.parquet")
-            .select(F.col("text").alias("SortKeyJoinWindowDistinct"),
-                    F.col("doc_id").alias("AggregateCoGroupDeduplicate")))
-    out = spread(docs)
-    assert out is not docs                      # not skipped
-    assert out.rdd.getNumPartitions() == target
-    # plan-level check, both directions, straight off treeStrings
-    bare = docs._jdf.queryExecution().optimizedPlan().treeString()
-    assert not _is_multi_stage(bare)
-    agged = (docs.groupBy("AggregateCoGroupDeduplicate")
-             .count()._jdf.queryExecution().optimizedPlan().treeString())
-    assert _is_multi_stage(agged)
+    with count_spark_jobs(spark) as jobs:
+        spread_source(collapsed, path)
+        spread_source(joined, path)
+    assert jobs["jobs"] == 0
 
 
 # --- r19 review fixes: serve-path artifacts + deterministic layout ----------

@@ -1,6 +1,9 @@
 """Salted two-phase aggregation / replicated salted join equal their
 unsalted counterparts (correctness; the win is partition balance)."""
 
+import ast
+import os
+
 from pyspark.sql import functions as F
 
 from ringo_spark.functions.skew import (
@@ -37,19 +40,64 @@ def test_salted_join_matches_plain(spark):
         == sorted(map(tuple, want.select("k", "payload", "dim_val").collect()))
 
 
-def test_spread_is_identity_on_well_split_input(spark):
-    """spread() must NEVER down-shuffle a corpus that already has at
-    least session-parallelism partitions — on a real many-split corpus
-    it is the identity (same DataFrame object, no added Exchange)."""
-    from ringo_spark.functions.spread import spread
+def test_spread_is_identity_on_well_split_input(spark, tmp_path):
+    """spread_source must NEVER down-shuffle a source that already has
+    at least session-parallelism splits — on a real many-split corpus it
+    is the identity (same DataFrame object, no added Exchange) — and it
+    widens a one-file source to full parallelism."""
+    from ringo_spark.functions.spread import spread_source
 
     target = spark.sparkContext.defaultParallelism
-    wide = spark.range(10_000).repartition(target + 4)
-    assert spread(wide) is wide
-    narrow = spark.range(10_000).coalesce(1)
-    out = spread(narrow)
+    many, one = str(tmp_path / "many.parquet"), str(tmp_path / "one.parquet")
+    spark.range(10_000).repartition(target).write.parquet(many)
+    spark.range(10_000).coalesce(1).write.parquet(one)
+    wide = spark.read.parquet(many)
+    assert spread_source(wide, many) is wide
+    narrow = spark.read.parquet(one)
+    out = spread_source(narrow, one)
     assert out is not narrow
     assert out.rdd.getNumPartitions() == target
+
+
+def test_spread_source_reads_size_suffixed_conf(spark, tmp_path):
+    """maxPartitionBytes set in Spark's own "<n>mb" form is honoured:
+    a one-file source whose 1mb-split estimate reaches parallelism is
+    left alone (a private parser used to fail on the "b" suffix and
+    silently fall back to 128 MB, widening it)."""
+    from ringo_spark.functions.spread import spread_source
+
+    target = spark.sparkContext.defaultParallelism
+    p = str(tmp_path / "t.parquet")
+    spark.range(target * 200_000).select(F.rand(7).alias("v")) \
+        .coalesce(1).write.parquet(p)
+    assert sum(os.path.getsize(os.path.join(r, f))
+               for r, _d, fs in os.walk(p) for f in fs
+               if f.endswith(".parquet")) > (target - 1) << 20
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1mb")
+    try:
+        df = spark.read.parquet(p)
+        assert spread_source(df, p) is df
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_spread_source_skips_hidden_directories(spark, tmp_path):
+    """Files under ``_``-prefixed directories (index sidecars such as
+    ``_centroids/``) are not data to Spark's file discovery, so they
+    count toward neither the byte total nor the split estimate."""
+    from ringo_spark.functions.spread import spread_source
+
+    p = str(tmp_path / "idx")
+    spark.range(1_000).coalesce(1).write.parquet(p)
+    data = sum(os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
+               if f.endswith(".parquet"))
+    df = spark.read.parquet(p)
+    assert spread_source(df, p, bytes_per_task=data) is df
+    spark.range(200_000).select(F.rand(3).alias("v")).coalesce(1) \
+        .write.parquet(os.path.join(p, "_sidecar"))
+    assert spread_source(df, p, bytes_per_task=data) is df
 
 
 def test_salted_tenant_rollup_equals_plain_rollup(spark):
@@ -122,6 +170,34 @@ def test_salt_expression_has_one_definition():
             if "pmod(F.hash" in src.replace(" ", "") and \
                     not path.endswith(os.path.join("functions", "skew.py")):
                 offenders.append(path)
+    assert offenders == []
+
+
+def test_byte_floors_live_only_in_spread_module():
+    """One widening rule, one floor table: no module but
+    functions/spread.py passes a numeric literal as ``bytes_per_task``,
+    and no module defines a second widener named ``spread`` (one that
+    probes the plan through ``df.rdd``)."""
+    import ringo_spark
+
+    pkg = os.path.dirname(ringo_spark.__file__)
+    home = os.path.join(pkg, "functions", "spread.py")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            for node in ast.walk(ast.parse(open(path).read())):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
+                        and node.name == "spread":
+                    offenders.append((path, node.lineno))
+                if isinstance(node, ast.keyword) and \
+                        node.arg == "bytes_per_task" and path != home and \
+                        any(isinstance(c, ast.Constant) and
+                            isinstance(c.value, (int, float))
+                            for c in ast.walk(node.value)):
+                    offenders.append((path, node.value.lineno))
     assert offenders == []
 
 

@@ -43,8 +43,8 @@ NEW_PINS = ["ann_index_staleness", "tenant_rollup_skew_salted",
 # arm is never taken by a healthy run; archive_admissions only fires
 # on force rebuilds, which no registered row performs; the engine
 # batch-tag ledger is StreamingPipeline-only — no registered query
-# constructs Engine; spread()'s anchored match changes no registered
-# plan, pinned by test_spread_matches_plan_nodes_not_substrings).
+# constructs Engine; the r18 widening-rule fix changed no registered
+# plan).
 # pin_cpu was re-seeded wholesale from 5-run quiet minima this round
 # (tools/minima_bench.py --reseed-pin-cpu, VERDICT r17 item 4) — this
 # tool's incremental pin_cpu maintenance applies on top for future
