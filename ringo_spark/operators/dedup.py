@@ -1055,8 +1055,7 @@ FROM verified WHERE round(jac, 6) >= {JACCARD_THRESHOLD}
 # latency at such sizes.  Above it the unchanged distributed kernel
 # runs; a mass-duplication corpus at real scale lands there.  Bounded
 # driver memory: 100k pairs is ~10 MB with the label dict.
-CC_LOCAL_MAX_PAIRS = int(_os.environ.get(
-    "RINGO_CC_LOCAL_MAX_PAIRS", "100000"))
+CC_LOCAL_MAX_PAIRS = 100_000
 
 
 def dedup_clusters_df(spark: SparkSession, sf_dir: str,
@@ -1296,16 +1295,15 @@ WHERE round({sql_cosine('a.embedding', 'b.embedding')}, 6) >= {COSINE_THRESHOLD}
 # hash-checked contract is scale-portable (cell-exact at sf0.01 AND
 # sf0.1, not just at the width the old static SQL hard-coded).
 EMB_LSH_BITS = 4
+# a constant, not an option: the oracle SQL derives its width from it
 DEDUP_BUCKET_TARGET_ROWS = 32   # 500-vector contract corpus / 2^4 buckets
-LSH_DEDUP_TARGET_CONF_KEY = "ringo.lshDedupBucketTargetRows"
 
 
 def _auto_dedup_bits(spark: SparkSession, sf_dir: str) -> int:
     from .similarity import _corpus_rows, auto_lsh_bits
 
-    return auto_lsh_bits(
-        spark, _corpus_rows(spark, sf_dir),
-        EMB_LSH_BITS, DEDUP_BUCKET_TARGET_ROWS, LSH_DEDUP_TARGET_CONF_KEY)
+    return auto_lsh_bits(spark, _corpus_rows(spark, sf_dir),
+                         EMB_LSH_BITS, DEDUP_BUCKET_TARGET_ROWS)
 
 
 def dedup_embedding_lsh_df(spark: SparkSession, sf_dir: str,

@@ -43,9 +43,9 @@ from ..functions.localrel import literal_df
 from .. import index_lifecycle as _ilc
 
 TOMBSTONES = "_tombstones"
-# the build-stats sidecar every persisted index writes (similarity's
-# IVF_STATS/LSH_STATS alias this) — named here so the compaction
-# exclusion below and the writers can never silently diverge
+# the build-stats sidecar every persisted IVF/LSH index writes (through
+# similarity._write_stats) — named here so the compaction exclusion
+# below and the writer can never silently diverge
 STATS_SIDECAR = "_stats"
 
 
@@ -193,17 +193,18 @@ def apply_tombstones_partitioned(spark: SparkSession, index_path: str,
             # include the removed rows, so it is never carried over) —
             # before the fingerprint lands, so ``complete`` implies
             # stats-rebuilt.  Without a callback the replacement ships
-            # sidecar-less and reports rescan until repair_*_stats runs
-            # (the read path is read-only by design, ADVICE r16).
+            # sidecar-less and reports rescan until repair_index_stats
+            # runs (the read path is read-only by design, ADVICE r16).
             stats_rebuild(spark, tmp)
         # carry every sidecar (anything that isn't a partition dir, the
         # log, or tmp's own files) into the replacement tree — EXCEPT
         # the ``_stats`` build-stats log: its counts include the rows
         # this compaction just removed, and a carried-over stale
         # sidecar would fail the reports' row-count validity check
-        # forever.  Dropping it lets the next staleness report
-        # self-heal it from the compacted data
-        # (similarity._ivf_stored_cell_stats / _lsh_stored_bucket_stats).
+        # forever.  Dropping it sends the reports to their read-only
+        # rescan (similarity._stored_stats) until the sidecar is
+        # rebuilt: by similarity.repair_index_stats, or by the backfill
+        # on the next cached serve of the index.
         # The copies happen BEFORE the fingerprint lands (r16 review):
         # ``complete`` above must imply sidecars-fully-copied, or a
         # copytree interrupted mid-copy would survive the rerun's

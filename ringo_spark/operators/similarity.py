@@ -18,12 +18,11 @@
   (optimizer rowCount / parquet footers) with the pinned constant as
   floor, so contract-size results are bit-identical to the pinned
   width while larger corpora get log2-growth bucket counts.  The
-  bucket target is PER-DEPLOYMENT policy, set via its conf key: the
-  shipped ANN default (``ringo.lshAnnBucketTargetRows`` = 2) keeps the
-  contract corpus at its pinned 8-bit width and suits exact-rerank
-  top-k where multiprobe recovers recall; a 10⁹-vector deployment
-  wanting 10⁴-vector buckets sets the target to 10⁴ (⇒ bits≈17) —
-  and the dim clamp (bits ≤ 64) caps the width either way.  The
+  bucket target is a constant (``ANN_BUCKET_TARGET_ROWS`` = 2), not
+  an option: it keeps the contract corpus at its pinned 8-bit width
+  and suits exact-rerank top-k where multiprobe recovers recall, and
+  the oracle SQL derives the same width from it.  The dim clamp
+  (bits ≤ 64) caps the width.  The
   driver-registered entries prove correctness at two widths (the
   auto-resolved 8 and an explicit 12).  (A production IVF would learn
   centroids; the fixed projection keeps the operator deterministic
@@ -50,6 +49,7 @@ from ..catalog import read_parquet_stable as _rps
 
 from .. import index_lifecycle as _ilc
 from ..functions.localrel import literal_df
+from .deletion import STATS_SIDECAR
 from .textfn import cosine, cosine_pre, dot, sql_cosine, vnorm
 
 TOP_K = 10
@@ -77,7 +77,9 @@ EMB_DIM = 64         # testdata embedding dimensionality
 # log2-growth bucket counts and flat per-row candidate volume.
 LSH_AUTO_BITS_CONF_KEY = "ringo.lshAutoBits"        # "false" => pinned floors
 LSH_CORPUS_ROWS_CONF_KEY = "ringo.lshCorpusRows"    # explicit N override
-LSH_ANN_TARGET_CONF_KEY = "ringo.lshAnnBucketTargetRows"
+# The bucket targets are constants, not options: the oracle SQL
+# (sql_auto_bits_cte) derives its width from the same value, so any
+# other target would silently break cell-exactness.
 ANN_BUCKET_TARGET_ROWS = 2   # top-k search wants fine buckets (the pinned
                              # 8-bit width ≈ 2 vectors/bucket on the
                              # 500-vector contract corpus)
@@ -240,14 +242,12 @@ def _corpus_rows(spark: SparkSession, sf_dir: str):
 
 
 def auto_lsh_bits(spark: SparkSession, n_rows, floor_bits: int,
-                  target_rows: int, target_conf_key: str,
-                  dim: int = EMB_DIM) -> int:
+                  target_rows: int, dim: int = EMB_DIM) -> int:
     """``max(floor, ceil(log2(N / bucket_target)))`` clamped to the
     embedding dimensionality — the corpus-sized projection width.
     ``ringo.lshAutoBits=false`` pins the floor (legacy behavior);
     ``ringo.lshCorpusRows`` overrides N (catalog-known cardinality, or a
-    test hook); the per-family ``target_conf_key`` overrides the bucket
-    target.  ``n_rows`` may be an int or a lazy callable.  With no
+    test hook).  ``n_rows`` may be an int or a lazy callable.  With no
     estimate at all, the floor is the honest answer."""
     conf = spark.conf
     if str(conf.get(LSH_AUTO_BITS_CONF_KEY, "true")).lower() == "false":
@@ -255,15 +255,13 @@ def auto_lsh_bits(spark: SparkSession, n_rows, floor_bits: int,
     n = _resolve_corpus_rows(conf, n_rows)
     if not n or n <= 0:
         return floor_bits
-    target = max(1, int(conf.get(target_conf_key, str(target_rows))))
-    bits = math.ceil(math.log2(max(1.0, n / target)))
+    bits = math.ceil(math.log2(max(1.0, n / target_rows)))
     return max(floor_bits, min(dim, bits))
 
 
 def _auto_ann_bits(spark: SparkSession, sf_dir: str) -> int:
-    return auto_lsh_bits(
-        spark, _corpus_rows(spark, sf_dir),
-        LSH_BITS, ANN_BUCKET_TARGET_ROWS, LSH_ANN_TARGET_CONF_KEY)
+    return auto_lsh_bits(spark, _corpus_rows(spark, sf_dir),
+                         LSH_BITS, ANN_BUCKET_TARGET_ROWS)
 
 
 def bucket_coordinates(bits: int, dim: int = EMB_DIM) -> list[int]:
@@ -451,7 +449,7 @@ IVF_NPROBE = 2      # cells searched per query at the contract K
 # rule every ann_ivf docstring states ("production: ~sqrt(N)").  Like
 # the LSH width, that rule is now a conf-keyed auto-gate over the same
 # free row estimate: K = max(IVF_K, round(sqrt(N / divisor))), divisor
-# default 2 — calibrated so the 500-vector contract corpus resolves to
+# 2 — calibrated so the 500-vector contract corpus resolves to
 # EXACTLY the pinned K=16 (round(sqrt(250)) = 16; equality-pinned), so
 # every hash-checked row and the K-shaped oracle SQL (including the
 # replayed k-means trajectory) are bit-identical to the pinned
@@ -460,7 +458,8 @@ IVF_NPROBE = 2      # cells searched per query at the contract K
 # as the gate widens the index.  Cell assignment (_with_cell) carries
 # the centroids as broadcast data, so its plan does not grow with K.
 IVF_AUTO_K_CONF_KEY = "ringo.ivfAutoK"            # "false" => pinned floor
-IVF_SQRT_DIVISOR_CONF_KEY = "ringo.ivfSqrtDivisor"
+# a constant, not an option: sql_auto_ivf_k_cte hard-codes the same
+# divisor, so any other value silently breaks cell-exactness
 IVF_SQRT_DIVISOR = 2
 # Driver-memory ceiling on the auto-sized K (VERDICT r12 item 8): the
 # Lloyd loop collects K×dim doubles per iteration (train_ivf_centroids
@@ -498,9 +497,8 @@ def auto_ivf_k(spark: SparkSession, n_rows,
         else _resolve_corpus_rows(conf, n_rows)
     if not n or n <= 0:
         return floor_k
-    div = max(1, int(conf.get(IVF_SQRT_DIVISOR_CONF_KEY,
-                              str(IVF_SQRT_DIVISOR))))
-    return min(IVF_MAX_AUTO_K, max(floor_k, round(math.sqrt(n / div))))
+    return min(IVF_MAX_AUTO_K,
+               max(floor_k, round(math.sqrt(n / IVF_SQRT_DIVISOR))))
 
 
 def _auto_ivf_k(spark: SparkSession, sf_dir: str) -> int:
@@ -647,6 +645,36 @@ IVF_INDEX_ROOT = os.path.join(_ilc.repo_root(), ".ivf_index")
 # hot LSH buckets) can't serialize the build; the partitionBy layout is
 # unchanged — each cell dir just holds up to this many files
 BUILD_WRITERS_PER_CELL = 4
+
+
+def _write_index(rows: DataFrame, key: str, path: str, mode: str) -> None:
+    """Write index ``rows`` ``partitionBy(key)`` — the one salted layout
+    every IVF/LSH/PQ build, append, retrain and rebucket shares: the
+    ``repartition(key, pmod(vec_id, BUILD_WRITERS_PER_CELL))`` gives
+    each cell/bucket up to that many writer tasks, and is the one
+    shuffle of the write."""
+    (rows.repartition(F.col(key),
+                      F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
+     .write.mode(mode).partitionBy(key).parquet(path))
+
+
+def _stored_centroids(spark: SparkSession, index_path: str) -> list:
+    """The (cid, cvec) rows of an index's ``_centroids`` sidecar."""
+    return [(r.cid, r.cvec) for r in spark.read.parquet(
+        os.path.join(index_path, "_centroids")).collect()]
+
+
+def _coerce_to_stored(spark: SparkSession, index_path: str,
+                      batch: DataFrame) -> DataFrame:
+    """``batch`` as (vec_id, embedding) with the embedding cast to the
+    stored files' type: a float/double mix across parquet files passes
+    the write silently and then fails every vectorized read of the
+    index (schema merge picks one physical type) — fail-safe at admit
+    time instead."""
+    stored_t = spark.read.parquet(index_path).schema["embedding"].dataType
+    return batch.select(
+        "vec_id", F.col("embedding").cast(stored_t).alias("embedding"))
+
 
 # Lifecycle mechanics (fingerprint tag, LRU GC, liveness touch) live in
 # the shared kernel (ringo_spark/index_lifecycle.py, VERDICT r14 item 3);
@@ -854,7 +882,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str,
             f"{os.path.abspath(sf_dir)}|{k}|{_source_fingerprint(sf_dir)}|c")
         index_path = os.path.join(IVF_INDEX_ROOT, f"k{k}-{tag}")
     if _serve_cached_sidecars(index_path, ["_centroids"], force):
-        _backfill_ivf_stats(spark, index_path)
+        _backfill_stats(spark, index_path, "cell")
         return index_path
     if emb is None:
         emb = _emb(spark, sf_dir)
@@ -864,10 +892,9 @@ def build_ivf_index(spark: SparkSession, sf_dir: str,
     # opt, see _emb_wide): the argmax CPU runs BELOW the writer
     # repartition, which re-parallelizes only the write
     from ..functions.spread import spread_source
-    (_with_cell(spread_source(emb, f"{sf_dir}/embeddings.parquet"), cent)
-     .repartition(F.col("cell"),
-                  F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
-     .write.mode("overwrite").partitionBy("cell").parquet(index_path))
+    _write_index(
+        _with_cell(spread_source(emb, f"{sf_dir}/embeddings.parquet"), cent),
+        "cell", index_path, "overwrite")
     # persist the centroids INSIDE the index (underscore prefix: data
     # discovery ignores it) — appends must assign with the exact same
     # centroid set or cell routing silently diverges from the stored data
@@ -877,9 +904,9 @@ def build_ivf_index(spark: SparkSession, sf_dir: str,
     # JUST-WRITTEN files — they carry their cell in the partition path,
     # so this is an O(n*dim) assigned-cell scoring pass, never a second
     # argmax over the corpus (r16 review).  Lands last — a crash here
-    # leaves a sidecar-less index the report self-heals.
-    _write_ivf_stats(index_path, spark.read.parquet(index_path),
-                     cent_rows, "overwrite")
+    # leaves a sidecar-less index the next cached serve backfills.
+    _write_stats(index_path, _assigned_cell_stats(
+        spark.read.parquet(index_path), cent_rows), "overwrite")
     _ilc.finish_build(index_path, IVF_INDEX_ROOT)
     return index_path
 
@@ -905,7 +932,8 @@ def _carry_admission_ledger(index_path: str, out_path: str) -> None:
 
 
 def _admit_batch(spark: SparkSession, index_path: str, batch: DataFrame,
-                 land_data, stats_epoch=None, repair_stats=None) -> bool:
+                 land_data, stats_epoch=None,
+                 stats_key: str | None = None) -> bool:
     """The idempotent batch-admission protocol every index append path
     shares (VERDICT r16 item 2 — the lost-ack retry class that caused
     the CMS sink's data loss): a content fingerprint of the batch gates
@@ -919,8 +947,10 @@ def _admit_batch(spark: SparkSession, index_path: str, batch: DataFrame,
     * dangling ``intent`` → the prior attempt crashed mid-land: only
       the batch rows NOT already stored are landed (one column-pruned
       anti-join against stored ids — the rare-path cost), then the
-      stats sidecar is rebuilt from the data files, restoring its
-      covers-the-data-exactly invariant whatever the crash tore.
+      stats sidecar of an index partitioned by ``stats_key`` is rebuilt
+      from the data files, restoring its covers-the-data-exactly
+      invariant whatever the crash tore.  This retry IS the in-flight
+      writer, so the rebuild skips the admission guard.
     * fresh → intent, land data, append the stats epoch, commit.
 
     Single-writer per index (the append paths' standing contract);
@@ -934,8 +964,8 @@ def _admit_batch(spark: SparkSession, index_path: str, batch: DataFrame,
     if state == "torn":
         stored_ids = spark.read.parquet(index_path).select("vec_id")
         land_data(batch.join(stored_ids, "vec_id", "left_anti"))
-        if repair_stats is not None:
-            repair_stats()
+        if stats_key is not None:
+            _rebuild_stats(spark, index_path, stats_key)
     else:
         _ilc.admit_intent(index_path, fp)
         land_data(batch)
@@ -962,16 +992,9 @@ def append_to_ivf_index(spark: SparkSession, index_path: str,
     RETRY of the same batch is a ledger-refused no-op (returns False),
     and a retry after a mid-land crash completes the batch without
     duplicating the rows that already landed (:func:`_admit_batch`)."""
-    cent_rows = [(r.cid, r.cvec) for r in spark.read.parquet(
-        os.path.join(index_path, "_centroids")).collect()]
+    cent_rows = _stored_centroids(spark, index_path)
     cent = _cent_df(spark, cent_rows)
-    # coerce the batch vector type to the stored files' element type: a
-    # float/double mix across parquet files passes the write silently
-    # and then fails every vectorized read of the index (schema merge
-    # picks one physical type) — fail-safe at admit time instead
-    stored_t = spark.read.parquet(index_path).schema["embedding"].dataType
-    batch_emb = batch_emb.select(
-        "vec_id", F.col("embedding").cast(stored_t).alias("embedding"))
+    batch_emb = _coerce_to_stored(spark, index_path, batch_emb)
 
     # the K-argmax assignment is the append's dominant cost — cache it
     # across land_data and stats_epoch so the batch is assigned ONCE
@@ -979,29 +1002,24 @@ def append_to_ivf_index(spark: SparkSession, index_path: str,
     # scratch, doubling per-batch ingest CPU at the production ~sqrt(N)
     # K).  The cache populates during the data-write job; the stats
     # epoch reads it back (on the torn-retry path stats_epoch never
-    # runs — repair_stats rebuilds from the data files instead).
+    # runs — the stats are rebuilt from the data files instead).
     assigned_cache: dict[str, DataFrame] = {}
 
     def land_data(b: DataFrame) -> None:
         a = _with_cell(b, cent).cache()
         assigned_cache["df"] = a
-        (a.repartition(F.col("cell"),
-                       F.pmod(F.col("vec_id"),
-                              F.lit(BUILD_WRITERS_PER_CELL)))
-         .write.mode("append").partitionBy("cell").parquet(index_path))
+        _write_index(a, "cell", index_path, "append")
 
     def stats_epoch(b: DataFrame) -> None:
         # batch epoch appended to the stats sidecar AFTER the data
         # lands — a crash between the two leaves a dangling intent, and
         # the retry's repair rebuilds the sidecar from the data files.
-        _write_ivf_stats(index_path, assigned_cache["df"],
-                         cent_rows, "append")
+        _write_stats(index_path, _assigned_cell_stats(
+            assigned_cache["df"], cent_rows), "append")
 
     try:
         return _admit_batch(spark, index_path, batch_emb, land_data,
-                            stats_epoch,
-                            lambda: repair_ivf_stats(
-                                spark, index_path, _unsafe_in_flight=True))
+                            stats_epoch, "cell")
     finally:
         a = assigned_cache.pop("df", None)
         if a is not None:
@@ -1100,9 +1118,6 @@ IVF_STALE_QERR_RATIO = 1.25
 IVF_STALE_SKEW = 4.0
 
 
-from .deletion import STATS_SIDECAR as IVF_STATS  # one compaction-aware name
-
-
 def _label_cells(df: DataFrame, cent: DataFrame) -> DataFrame:
     """``df`` + its argmax ``cell`` against the (cid, cvec) centroid
     relation ``cent`` and that cell's round(cosine, 6) score ``cos6`` —
@@ -1153,159 +1168,144 @@ def _assigned_cell_stats(assigned: DataFrame, cent_rows) -> DataFrame:
                  F.sum(qerr_micro).alias("qs")))
 
 
-def _write_ivf_stats(index_path: str, assigned: DataFrame, cent_rows,
-                     mode: str) -> None:
-    """Land the per-cell stats of one epoch's CELL-ASSIGNED rows into
-    the index's ``_stats`` sidecar log (VERDICT r15 item 5): K-ish rows
-    per epoch, so the staleness report can read two tiny sidecars
-    instead of re-scoring the whole stored index per report.
-    ``mode="overwrite"`` at build, ``"append"`` per admitted batch —
-    always AFTER the data write, so a crash between the two leaves a
-    sidecar that undercounts and the report's row-count validity check
-    repairs it (self-heal in :func:`_ivf_stored_cell_stats`)."""
-    (_assigned_cell_stats(assigned, cent_rows)
-     .coalesce(1).write.mode(mode)
-     .parquet(os.path.join(index_path, IVF_STATS)))
+def _bucket_stats(assigned: DataFrame) -> DataFrame:
+    """Per-bucket (bucket, c) for rows that carry their LSH ``bucket`` —
+    the LSH index's per-row stats function (the IVF one is
+    :func:`_assigned_cell_stats`)."""
+    return assigned.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
 
 
-def _backfill_ivf_stats(spark: SparkSession, index_path: str,
-                        _unsafe_in_flight: bool = False) -> None:
-    """Sidecar (re)generation from the data files — pre-sidecar cached
-    dirs, post-compaction repair, torn-append repair: the files carry
-    their cell in the partition path, so this is one O(n*dim)
-    assigned-cell scoring pass (:func:`_assigned_cell_stats`), never an
-    argmax re-scan.  Computed over the UNFILTERED data files (plain
-    read, not the tombstone-aware reader) — the sidecar's invariant is
-    "covers the data files exactly"; the no-tombstones gate in
-    :func:`_ivf_stored_cell_stats` handles deletes.  Concurrent
-    backfills converge (same content, overwrite); a torn read during
-    one falls back to the rescan.
+def _stats_fn(spark: SparkSession, index_path: str, key: str):
+    """The per-row stats function of the index at ``index_path``,
+    partitioned by ``key``: ``"cell"`` (IVF) scores each row against the
+    index's stored centroids, giving (cell, c, qs); ``"bucket"`` (LSH)
+    counts rows, giving (bucket, c).  This is everything the two index
+    kinds' ``_stats`` paths do NOT share."""
+    if key == "bucket":
+        return _bucket_stats
+    if key == "cell":
+        cent_rows = _stored_centroids(spark, index_path)
+        return lambda assigned: _assigned_cell_stats(assigned, cent_rows)
+    raise ValueError(f"no _stats sidecar for an index partitioned by {key!r}")
 
-    Refuses to run (silently — this is an opportunistic serve-path
-    heal, not a maintenance op) while a batch admission is in flight
-    (r19 review): the in-flight batch's data files have landed but its
-    stats epoch hasn't, so a rewrite-from-data-files here counts the
-    batch once and the epoch then counts it AGAIN — the exact
-    double-count race ADVICE r16 removed from the report path.
-    Reports fall back to the rescan until the admission commits.
-    (``_unsafe_in_flight``: :func:`repair_ivf_stats`'s torn-retry
-    path IS the in-flight writer — its rebuild must run.)"""
-    if os.path.exists(os.path.join(index_path, IVF_STATS, "_SUCCESS")):
+
+def _stats_path(index_path: str) -> str:
+    """Where an index keeps its ``_stats`` sidecar log."""
+    return os.path.join(index_path, STATS_SIDECAR)
+
+
+def _write_stats(index_path: str, stats: DataFrame, mode: str) -> None:
+    """Land one epoch's per-key ``stats`` into the index's ``_stats``
+    sidecar log (VERDICT r15 item 5): K-ish rows per epoch, so the
+    staleness/width reports read a tiny sidecar instead of re-scanning
+    the stored index.  ``mode="overwrite"`` at build, ``"append"`` per
+    admitted batch — always AFTER the data write, so a crash between
+    the two leaves a sidecar that undercounts, which the reader's
+    row-count check rejects (:func:`_stored_stats`)."""
+    stats.coalesce(1).write.mode(mode).parquet(_stats_path(index_path))
+
+
+def _rebuild_stats(spark: SparkSession, index_path: str, key: str,
+                   out: str | None = None) -> None:
+    """Rewrite the sidecar of ``out`` (default: the index itself) from
+    its data files, with the stats function of ``index_path``: the
+    files carry their key in the partition path, so this is one
+    assigned-key pass, never an argmax re-scan.  Computed over the
+    UNFILTERED data files (plain read, not the tombstone-aware reader)
+    — the sidecar's invariant is "covers the data files exactly"; the
+    reader's no-tombstones gate handles deletes.  No in-flight check:
+    callers decide (:func:`_backfill_stats` skips,
+    :func:`repair_index_stats` refuses, the torn-retry admission IS the
+    in-flight writer)."""
+    out = out or index_path
+    stats = _stats_fn(spark, index_path, key)
+    _write_stats(out, stats(spark.read.parquet(out)), "overwrite")
+
+
+def _backfill_stats(spark: SparkSession, index_path: str, key: str) -> None:
+    """Opportunistic serve-path heal for cached dirs without a complete
+    sidecar (pre-sidecar builds, a crash after the data write).
+    Concurrent backfills converge (same content, overwrite); a torn read
+    during one falls back to the rescan.  Skips silently while a batch
+    admission is in flight (r19 review): its data files have landed but
+    its stats epoch hasn't, so a rewrite here would count the batch
+    once and the epoch would count it AGAIN.  Reports fall back to the
+    rescan until the admission commits."""
+    if os.path.exists(os.path.join(_stats_path(index_path), "_SUCCESS")) \
+            or _ilc.admits_in_flight(index_path):
         return
-    if not _unsafe_in_flight and _ilc.admits_in_flight(index_path):
-        return
-    cent = spark.read.parquet(os.path.join(index_path, "_centroids"))
-    cent_rows = [(r.cid, r.cvec) for r in cent.collect()]
-    _write_ivf_stats(index_path, spark.read.parquet(index_path),
-                     cent_rows, "overwrite")
+    _rebuild_stats(spark, index_path, key)
 
 
-def _ivf_stored_cell_stats(spark: SparkSession, index_path: str,
-                           cent_rows) -> DataFrame:
-    """Per-cell (cell, c, qs) of an index's stored rows — from the
-    ``_stats`` sidecar when it provably covers the data (complete
-    marker, no tombstone log, epoch-log total == data-file footer row
-    count), else a full rescan with the stored centroids (pre-sidecar
-    dirs, tombstoned indexes, torn appends).  The sidecar path is pure
-    driver-side metadata: a K-row pyarrow read + exact integer sums,
-    no Spark job over the index."""
+def _stored_stats(spark: SparkSession, index_path: str,
+                  key: str) -> DataFrame:
+    """Per-key stats of an index's stored rows — from the ``_stats``
+    sidecar when it provably covers the data (complete marker, no
+    tombstone log, epoch-log total == data-file footer row count), else
+    a rescan through the tombstone-aware reader with the index's
+    per-row stats function (:func:`_stats_fn`).  The sidecar path is
+    pure driver-side metadata: a K-row pyarrow read + exact integer
+    sums of every non-key column, no Spark job over the index.
+
+    The rescan is READ-ONLY.  The r16 destructive self-heal here raced
+    in-flight appends (ADVICE r16: appends land data files BEFORE their
+    stats epoch, so every append opens a legitimate mismatch window).
+    Durable repair is the explicit, in-flight-guarded
+    :func:`repair_index_stats`, and :func:`compact_index` rebuilds the
+    sidecar inside the replacement tree, so the production compaction
+    never leaves it missing."""
     from .deletion import TOMBSTONES, index_rows
 
-    def _from_sidecar():
-        tbl = _read_stats_log(stats_path)
-        if tbl is None:
-            return None
+    tbl = None if os.path.isdir(os.path.join(index_path, TOMBSTONES)) \
+        else _read_stats_log(_stats_path(index_path))
+    if tbl is not None and \
+            sum(tbl.column("c").to_pylist()) == _data_meta_rows(index_path):
+        vals = [c for c in tbl.column_names if c != key]
         per: dict[int, list[int]] = {}
-        for cell, c, qs in zip(tbl.column("cell").to_pylist(),
-                               tbl.column("c").to_pylist(),
-                               tbl.column("qs").to_pylist()):
-            agg = per.setdefault(int(cell), [0, 0])
-            agg[0] += int(c)
-            agg[1] += int(qs)
-        if sum(v[0] for v in per.values()) != _data_meta_rows(index_path):
-            return None
-        return literal_df(spark, 
-            [(cell, v[0], v[1]) for cell, v in sorted(per.items())],
-            "cell int, c long, qs long")
-
-    stats_path = os.path.join(index_path, IVF_STATS)
-    if not os.path.isdir(os.path.join(index_path, TOMBSTONES)):
-        got = _from_sidecar()
-        if got is not None:
-            return got
-        # missing or data-divergent sidecar: fall through to the
-        # READ-ONLY rescan.  The r16 destructive self-heal here raced
-        # in-flight appends (ADVICE r16: appends land data files BEFORE
-        # their stats epoch, so every append opens a legitimate
-        # mismatch window — the heal's rmtree+rewrite interleaved with
-        # the epoch write and could corrupt or double-count the
-        # sidecar).  Durable repair is an explicit maintenance op
-        # (:func:`repair_ivf_stats`, in-flight-guarded), and the
-        # production compaction wrapper (:func:`compact_ivf_index`)
-        # rebuilds the sidecar inside the replacement tree so the
-        # missing-sidecar state never arises on that path.
-    # rescan: the rows carry their cell in the partition path —
-    # assigned-cell scoring, no argmax (r16 review); tombstone-aware
-    return _assigned_cell_stats(
-        index_rows(spark, index_path, id_col="vec_id")
-        .select("cell", "embedding"), cent_rows)
+        for k, *row in zip(*(tbl.column(c).to_pylist() for c in [key] + vals)):
+            acc = per.setdefault(int(k), [0] * len(vals))
+            for i, v in enumerate(row):
+                acc[i] += int(v)
+        return literal_df(
+            spark, [(k, *acc) for k, acc in sorted(per.items())],
+            ", ".join([f"{key} int"] + [f"{c} long" for c in vals]))
+    return _stats_fn(spark, index_path, key)(
+        index_rows(spark, index_path, id_col="vec_id"))
 
 
-def repair_ivf_stats(spark: SparkSession, index_path: str,
-                     _unsafe_in_flight: bool = False) -> None:
-    """Maintenance entry: rebuild an IVF index's ``_stats`` sidecar
-    from its data files (destructive — rmtree + rewrite).  The report
-    read path is strictly read-only (ADVICE r16), so a sidecar dropped
-    by a raw compaction or torn by a crash stays missing — and every
-    report rescans — until this runs.  Refuses while a batch admission
-    is in flight: its landed data files are ahead of its stats epoch,
-    and rebuilding now would double-count the batch once the epoch
-    lands.  (``_unsafe_in_flight`` is for the append path's own torn-
-    retry repair, which IS the in-flight writer.)"""
-    if not _unsafe_in_flight and _ilc.admits_in_flight(index_path):
+def repair_index_stats(spark: SparkSession, index_path: str,
+                       key: str) -> None:
+    """Maintenance entry: rebuild the ``_stats`` sidecar of an IVF
+    (``key="cell"``) or LSH (``key="bucket"``) index from its data
+    files.  The report read path is strictly read-only (ADVICE r16), so
+    a sidecar dropped by a raw compaction or torn by a crash stays
+    missing — and every report rescans — until this runs.  Refuses
+    while a batch admission is in flight: its landed data files are
+    ahead of its stats epoch, and rebuilding now would double-count the
+    batch once the epoch lands."""
+    if _ilc.admits_in_flight(index_path):
         raise RuntimeError(
             f"{index_path}: a batch admission is in flight — rebuilding "
             "the _stats sidecar now would double-count it; retry the "
             "append (it repairs the sidecar itself) or re-run after it "
             "commits")
-    shutil.rmtree(os.path.join(index_path, IVF_STATS), ignore_errors=True)
-    # repair adjudicated the in-flight question above (guard or the
-    # torn-retry writer's own flag) — the rebuild must run either way
-    _backfill_ivf_stats(spark, index_path, _unsafe_in_flight=True)
+    _rebuild_stats(spark, index_path, key)
 
 
-def compact_ivf_index(spark: SparkSession, index_path: str,
-                      id_col: str = "vec_id") -> None:
-    """Tombstone compaction for a persisted IVF index that leaves a
-    COMPLETE ``_stats`` sidecar inside the replacement tree (rebuilt
-    from the compacted rows before the crash-safe swap) — so the
-    staleness report never enters the sidecar-less rescan state on the
-    production path.  Raw :func:`apply_tombstones_partitioned` remains
-    available but ships the replacement sidecar-less."""
+def compact_index(spark: SparkSession, index_path: str, key: str,
+                  id_col: str = "vec_id") -> None:
+    """Tombstone compaction for a persisted IVF (``key="cell"``) or LSH
+    (``key="bucket"``) index that leaves a COMPLETE ``_stats`` sidecar
+    inside the replacement tree (rebuilt from the compacted rows before
+    the crash-safe swap), so the reports never enter the sidecar-less
+    rescan state on the production path.  Raw
+    :func:`apply_tombstones_partitioned` remains available but ships the
+    replacement sidecar-less."""
     from .deletion import apply_tombstones_partitioned
 
-    def rebuild(s: SparkSession, tmp: str) -> None:
-        cent = s.read.parquet(os.path.join(index_path, "_centroids"))
-        cent_rows = [(r.cid, r.cvec) for r in cent.collect()]
-        _write_ivf_stats(tmp, s.read.parquet(tmp), cent_rows,
-                         "overwrite")
-
-    apply_tombstones_partitioned(spark, index_path, "cell",
-                                 id_col=id_col, stats_rebuild=rebuild)
-
-
-def compact_lsh_index(spark: SparkSession, index_path: str,
-                      id_col: str = "vec_id") -> None:
-    """LSH twin of :func:`compact_ivf_index`: tombstone compaction that
-    rebuilds the per-bucket ``_stats`` sidecar inside the replacement
-    tree before the swap."""
-    from .deletion import apply_tombstones_partitioned
-
-    def rebuild(s: SparkSession, tmp: str) -> None:
-        _write_lsh_stats(tmp, s.read.parquet(tmp), "overwrite")
-
-    apply_tombstones_partitioned(spark, index_path, "bucket",
-                                 id_col=id_col, stats_rebuild=rebuild)
+    apply_tombstones_partitioned(
+        spark, index_path, key, id_col=id_col,
+        stats_rebuild=lambda s, tmp: _rebuild_stats(s, index_path, key, tmp))
 
 
 def ivf_staleness_report(spark: SparkSession, index_path: str,
@@ -1318,16 +1318,14 @@ def ivf_staleness_report(spark: SparkSession, index_path: str,
     ladder).  Cost: one batch-sized map + (since r16) a K-row sidecar
     read for the stored side — the report no longer re-scores the
     stored index unless the sidecar can't vouch for it
-    (:func:`_ivf_stored_cell_stats`); nothing corpus-sized shuffles
-    either way.  ``stale`` uses the ROUNDED ratios, so the flag is
-    bit-stable across engines."""
-    cent = spark.read.parquet(os.path.join(index_path, "_centroids"))
-    cent_rows = [(r.cid, r.cvec) for r in cent.collect()]
+    (:func:`_stored_stats`); nothing corpus-sized shuffles either way.
+    ``stale`` uses the ROUNDED ratios, so the flag is bit-stable across
+    engines."""
+    cent_rows = _stored_centroids(spark, index_path)
     k = len(cent_rows)
     totals = [F.sum("c").alias("n_vecs"), F.sum("qs").alias("qerr_sum"),
               F.max("c").alias("max_cell")]
-    b = _ivf_stored_cell_stats(spark, index_path, cent_rows) \
-        .agg(*totals).alias("b")
+    b = _stored_stats(spark, index_path, "cell").agg(*totals).alias("b")
     a = _cell_stats(_label_cells(batch_emb.select("embedding"),
                                  _cent_df(spark, cent_rows))) \
         .agg(*totals).alias("a")
@@ -1380,7 +1378,7 @@ def retrain_ivf_index(spark: SparkSession, index_path: str,
     _ilc.recover_live(index_path, require=True)
     _ilc.clear_swap_leftovers(index_path)
     # destructive maintenance honors the admission guard like every
-    # other (archive_admissions, repair_*_stats — r19 review): an
+    # other (archive_admissions, repair_index_stats — r19 review): an
     # in-flight batch's rows may or may not make the training snapshot,
     # and racing its stats epoch against the swap corrupts the sidecar
     if _ilc.admits_in_flight(index_path):
@@ -1430,15 +1428,13 @@ def retrain_ivf_index(spark: SparkSession, index_path: str,
         cent = _lloyd(emb, cent, iters)
         cent_df = _cent_df(spark, cent)
         tmp, _old = _ilc.swap_paths(index_path)
-        (_with_cell(emb, cent_df)
-         .repartition(F.col("cell"),
-                      F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
-         .write.mode("overwrite").partitionBy("cell").parquet(tmp))
+        _write_index(_with_cell(emb, cent_df), "cell", tmp, "overwrite")
         (cent_df.coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(tmp, "_centroids")))
         # stats from the just-written replacement tree (cells ride the
         # partition path — assigned-cell scoring, no second argmax)
-        _write_ivf_stats(tmp, spark.read.parquet(tmp), cent, "overwrite")
+        _write_stats(tmp, _assigned_cell_stats(spark.read.parquet(tmp),
+                                               cent), "overwrite")
         _carry_admission_ledger(index_path, tmp)
         _ilc.publish_swap(index_path)
         _touch(os.path.join(index_path, "_SUCCESS"))
@@ -2038,7 +2034,7 @@ def build_lsh_index(spark: SparkSession, sf_dir: str,
             f"{os.path.abspath(sf_dir)}|{bits}|{_source_fingerprint(sf_dir)}")
         index_path = os.path.join(LSH_INDEX_ROOT, f"b{bits}-{tag}")
     if _ilc.serve_cached(index_path, "_SUCCESS", force):
-        _backfill_lsh_stats(spark, index_path)
+        _backfill_stats(spark, index_path, "bucket")
         stored = stored_lsh_bits(index_path)
         if stored is None:
             # pre-r19 dir: backfill — but ONLY on the tag path, where
@@ -2063,13 +2059,10 @@ def build_lsh_index(spark: SparkSession, sf_dir: str,
         return index_path
     bucketed = (_emb(spark, sf_dir)
                 .withColumn("bucket", _bucket_expr(F.col("embedding"), bits)))
-    (bucketed
-     .repartition(F.col("bucket"),
-                  F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
-     .write.mode("overwrite").partitionBy("bucket").parquet(index_path))
+    _write_index(bucketed, "bucket", index_path, "overwrite")
     # per-bucket occupancy sidecar (2^bits rows): the width-staleness
     # report reads this instead of re-scanning the index (r16)
-    _write_lsh_stats(index_path, bucketed, "overwrite")
+    _write_stats(index_path, _bucket_stats(bucketed), "overwrite")
     # the build width, readable by append/probe (r19 — see LSH_WIDTH_FILE);
     # lands before the completeness marker like every sidecar
     _write_lsh_width(index_path, bits)
@@ -2105,114 +2098,20 @@ def append_to_lsh_index(spark: SparkSession, index_path: str,
             f"built at bits={stored_bits} — a mismatched width routes "
             "the batch to buckets no probe reads; use bits=None (the "
             "stored width) or rebucket_lsh_index first")
-    # same admit-time type coercion as append_to_ivf_index: a
-    # float/double mix across index files breaks later vectorized reads
-    stored_t = spark.read.parquet(index_path).schema["embedding"].dataType
-    batch_emb = batch_emb.select(
-        "vec_id", F.col("embedding").cast(stored_t).alias("embedding"))
+    batch_emb = _coerce_to_stored(spark, index_path, batch_emb)
     bucketed = lambda b: b.withColumn(                       # noqa: E731
         "bucket", _bucket_expr(F.col("embedding"), bits))
 
     def land_data(b: DataFrame) -> None:
-        (bucketed(b)
-         .repartition(F.col("bucket"),
-                      F.pmod(F.col("vec_id"),
-                             F.lit(BUILD_WRITERS_PER_CELL)))
-         .write.mode("append").partitionBy("bucket").parquet(index_path))
+        _write_index(bucketed(b), "bucket", index_path, "append")
 
     def stats_epoch(b: DataFrame) -> None:
         # batch occupancy appended AFTER the data lands (a crash
         # between the two leaves a dangling intent; the retry repairs)
-        _write_lsh_stats(index_path, bucketed(b), "append")
+        _write_stats(index_path, _bucket_stats(bucketed(b)), "append")
 
     return _admit_batch(spark, index_path, batch_emb, land_data,
-                        stats_epoch,
-                        lambda: repair_lsh_stats(spark, index_path,
-                                                 _unsafe_in_flight=True))
-
-
-LSH_STATS = IVF_STATS    # same sidecar name; deletion.py excludes it on compaction
-
-
-def _write_lsh_stats(index_path: str, assigned: DataFrame,
-                     mode: str) -> None:
-    """Land one epoch's per-bucket occupancy into the index's
-    ``_stats`` sidecar log (2^bits-ish rows per epoch — metadata, never
-    data-sized); ``assigned`` carries the epoch's rows with their
-    ``bucket`` column.  Same write-after-data / count-validated
-    discipline as the IVF twin (:func:`_write_ivf_stats`)."""
-    (assigned.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
-     .coalesce(1).write.mode(mode)
-     .parquet(os.path.join(index_path, LSH_STATS)))
-
-
-def _backfill_lsh_stats(spark: SparkSession, index_path: str,
-                        _unsafe_in_flight: bool = False) -> None:
-    """One-time sidecar upgrade for cached LSH indexes built before the
-    stats sidecar existed (r16) — the LSH twin of
-    :func:`_backfill_ivf_stats`: one per-bucket count pass over the
-    unfiltered data files, then every width report is a metadata
-    read.  Same silent in-flight-admission skip as the IVF twin (r19
-    review — a rewrite here would double-count the in-flight batch
-    once its stats epoch lands)."""
-    if os.path.exists(os.path.join(index_path, LSH_STATS, "_SUCCESS")):
-        return
-    if not _unsafe_in_flight and _ilc.admits_in_flight(index_path):
-        return
-    _write_lsh_stats(index_path, spark.read.parquet(index_path),
-                     "overwrite")
-
-
-def _lsh_stored_bucket_stats(spark: SparkSession,
-                             index_path: str) -> DataFrame:
-    """Per-bucket (bucket, c) of an index's stored rows — from the
-    ``_stats`` sidecar when it provably covers the data (complete
-    marker, no tombstone log, epoch-log total == data-file footer row
-    count), else a rescan through the tombstone-aware reader.  The
-    sidecar path is a driver-side pyarrow read + exact integer sums —
-    no Spark job over the index."""
-    from .deletion import TOMBSTONES, index_rows
-
-    def _from_sidecar():
-        tbl = _read_stats_log(stats_path)
-        if tbl is None:
-            return None
-        per: dict[int, int] = {}
-        for b, c in zip(tbl.column("bucket").to_pylist(),
-                        tbl.column("c").to_pylist()):
-            per[int(b)] = per.get(int(b), 0) + int(c)
-        if sum(per.values()) != _data_meta_rows(index_path):
-            return None
-        return literal_df(spark, 
-            sorted(per.items()), "bucket int, c long")
-
-    stats_path = os.path.join(index_path, LSH_STATS)
-    if not os.path.isdir(os.path.join(index_path, TOMBSTONES)):
-        got = _from_sidecar()
-        if got is not None:
-            return got
-        # missing/divergent sidecar: READ-ONLY rescan fallback — the
-        # IVF twin's rationale at _ivf_stored_cell_stats applies
-        # verbatim (ADVICE r16; durable repair = repair_lsh_stats,
-        # compaction wrapper = compact_lsh_index)
-    return (index_rows(spark, index_path, id_col="vec_id")
-            .groupBy("bucket").agg(F.count(F.lit(1)).alias("c")))
-
-
-def repair_lsh_stats(spark: SparkSession, index_path: str,
-                     _unsafe_in_flight: bool = False) -> None:
-    """Maintenance entry: rebuild an LSH index's ``_stats`` sidecar
-    from its data files — the LSH twin of :func:`repair_ivf_stats`,
-    same in-flight-admission guard, same rationale."""
-    if not _unsafe_in_flight and _ilc.admits_in_flight(index_path):
-        raise RuntimeError(
-            f"{index_path}: a batch admission is in flight — rebuilding "
-            "the _stats sidecar now would double-count it; retry the "
-            "append (it repairs the sidecar itself) or re-run after it "
-            "commits")
-    shutil.rmtree(os.path.join(index_path, LSH_STATS), ignore_errors=True)
-    # repair adjudicated the in-flight question above — see the IVF twin
-    _backfill_lsh_stats(spark, index_path, _unsafe_in_flight=True)
+                        stats_epoch, "bucket")
 
 
 def lsh_width_report(spark: SparkSession, index_path: str,
@@ -2228,9 +2127,9 @@ def lsh_width_report(spark: SparkSession, index_path: str,
     own stored vectors, one salted shuffle — never a corpus re-read).
     Occupancy stats (bucket count, mean/max rows per bucket) quantify
     the inflation.  Cost: since r16 a 2^bits-row sidecar read
-    (:func:`_lsh_stored_bucket_stats`) — the index itself is only
-    rescanned when the sidecar can't vouch for it."""
-    per = _lsh_stored_bucket_stats(spark, index_path)
+    (:func:`_stored_stats`) — the index itself is only rescanned when
+    the sidecar can't vouch for it."""
+    per = _stored_stats(spark, index_path, "bucket")
     return (per.agg(F.sum("c").cast("long").alias("n_vectors"),
                     F.count(F.lit(1)).cast("long").alias("n_buckets"),
                     F.max("c").cast("long").alias("max_bucket_rows"))
@@ -2312,11 +2211,8 @@ def rebucket_lsh_index(spark: SparkSession, index_path: str, new_bits: int,
                   .select("vec_id", "embedding")
                   .withColumn("bucket",
                               _bucket_expr(F.col("embedding"), new_bits)))
-    (rebucketed
-     .repartition(F.col("bucket"),
-                  F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
-     .write.mode("overwrite").partitionBy("bucket").parquet(out_path))
-    _write_lsh_stats(out_path, rebucketed, "overwrite")
+    _write_index(rebucketed, "bucket", out_path, "overwrite")
+    _write_stats(out_path, _bucket_stats(rebucketed), "overwrite")
     _write_lsh_width(out_path, new_bits)   # the new index's stored width
     # the successor inherits the source's admitted-batch ledger so
     # replays of batches the rebucket carried over stay refused —
@@ -2638,12 +2534,10 @@ def build_pq_index(spark: SparkSession, sf_dir: str,
     # scan (r19 opt): both are broadcast-array argmin/argmax
     # projections, so there is no encode-to-cells join on vec_id — the
     # only exchange is the writer repartition that shapes the files.
-    (_with_cell(_emb_wide(spark, sf_dir), cent)
-     .crossJoin(F.broadcast(_pq_cb_arr(cb_df)))
-     .select("vec_id", _pq_codes_expr().alias("codes"), "cell")
-     .repartition(F.col("cell"),
-                  F.pmod(F.col("vec_id"), F.lit(BUILD_WRITERS_PER_CELL)))
-     .write.mode("overwrite").partitionBy("cell").parquet(index_path))
+    _write_index(_with_cell(_emb_wide(spark, sf_dir), cent)
+                 .crossJoin(F.broadcast(_pq_cb_arr(cb_df)))
+                 .select("vec_id", _pq_codes_expr().alias("codes"), "cell"),
+                 "cell", index_path, "overwrite")
     cb_df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(index_path, "_codebooks"))
     (cent.coalesce(1).write.mode("overwrite")
@@ -2673,11 +2567,8 @@ def append_to_pq_index(spark: SparkSession, index_path: str,
 
     def land_data(b: DataFrame) -> None:
         cells = _pq_assign_cells(b, cent)
-        (_pq_encode(b, cb_df).join(cells, "vec_id")
-         .repartition(F.col("cell"),
-                      F.pmod(F.col("vec_id"),
-                             F.lit(BUILD_WRITERS_PER_CELL)))
-         .write.mode("append").partitionBy("cell").parquet(index_path))
+        _write_index(_pq_encode(b, cb_df).join(cells, "vec_id"), "cell",
+                     index_path, "append")
 
     return _admit_batch(spark, index_path, batch_emb, land_data)
 

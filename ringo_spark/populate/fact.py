@@ -180,12 +180,26 @@ def fact_population_df(
     # VERDICT r19 item 5: eliding the degenerate distinct removes one
     # whole exchange and two aggregate phases from fact_events_by_minute
     # — its user_count is count_distinct(user_id) at a user_id grain.)
-    group_key_cols = {fc.target_column for fc in fact.columns
-                      if isinstance(fc.type, (NoDimId, TenantId))}
+    # The grain keys are resolved to source columns ONCE, here: the same
+    # Column objects build the group expressions below and decide the
+    # elision, so the premise rests on the resolved column, not a name.
+    grain_cols = {fc.target_column: f_table.find_column(fc.target_column)
+                  for fc in fact.columns
+                  if isinstance(fc.type, (NoDimId, TenantId))}
+
+    def is_grain_key(src_name: str) -> bool:
+        src = f_table.find_column(src_name)
+        resolved = any(src is not None and src is c
+                       for c in grain_cols.values())
+        if resolved != (src_name in grain_cols):
+            raise ValueError(
+                f"count-distinct source {f_name}.{src_name} matches a "
+                f"grain key by name but not by resolved column")
+        return resolved
 
     def add_count_distinct(col: SparkColumn, name: str, src_name: str) -> None:
         if count_distinct_mode == "exact":
-            if src_name in group_key_cols:
+            if is_grain_key(src_name):
                 # degenerate: the distinct source is a grain key.
                 # max() merges exactly under any salt, so the salted
                 # twin needs no source-aligned salt for this column.
@@ -218,8 +232,8 @@ def fact_population_df(
             group_exprs.append((out, time_bucket_expr(qcol(f_name, cname),
                                                       s.time_unit.seconds)))
         elif isinstance(t, (NoDimId, TenantId)):
-            col = f_table.find_column(cname)
-            group_exprs.append((cname, coalesce_column(env, f_table, col, f_name)))
+            group_exprs.append((cname, coalesce_column(
+                env, f_table, grain_cols[cname], f_name)))
         elif isinstance(t, FactCount):
             src = qcol(f_name, t.source_column) if t.source_column else F.lit(1)
             add_agg(cname, F.count(src))

@@ -836,6 +836,14 @@ def test_ivf_staleness_flags_drift_and_skew(spark, tmp_path):
     assert rep2.qerr_ratio <= IVF_STALE_QERR_RATIO
 
 
+def _stats_schema(sim, index_path):
+    """(name, arrow type) of every column of an index's ``_stats`` log."""
+    import os
+
+    tbl = sim._read_stats_log(os.path.join(index_path, "_stats"))
+    return [(f.name, str(f.type)) for f in tbl.schema]
+
+
 def test_index_stats_sidecar_matches_rescan_exactly(spark, tmp_path):
     """The r16 stats sidecars are a pure cost optimization: the
     staleness/width reports must be CELL-IDENTICAL whether the stored
@@ -857,6 +865,10 @@ def test_index_stats_sidecar_matches_rescan_exactly(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= half)
 
     assert os.path.exists(os.path.join(p, "_stats", "_SUCCESS"))
+    # the on-disk sidecar schema is part of the layout cached indexes
+    # are served from: pinned per index kind
+    assert _stats_schema(sim, p) == [
+        ("cell", "int32"), ("c", "int64"), ("qs", "int64")]
     via_sidecar = sim.ivf_staleness_report(spark, p, batch).first()
     shutil.rmtree(os.path.join(p, "_stats"))
     via_rescan = sim.ivf_staleness_report(spark, p, batch).first()
@@ -864,14 +876,14 @@ def test_index_stats_sidecar_matches_rescan_exactly(spark, tmp_path):
 
     # torn append: admit a batch with the stats write crashed away —
     # the sidecar (restored by backfill below) must NOT be trusted
-    sim._backfill_ivf_stats(spark, p)
+    sim._backfill_stats(spark, p, "cell")
     assert os.path.exists(os.path.join(p, "_stats", "_SUCCESS"))
-    real_write = sim._write_ivf_stats
-    sim._write_ivf_stats = lambda *a, **k: None
+    real_write = sim._write_stats
+    sim._write_stats = lambda *a, **k: None
     try:
         sim.append_to_ivf_index(spark, p, batch)
     finally:
-        sim._write_ivf_stats = real_write
+        sim._write_stats = real_write
     torn = sim.ivf_staleness_report(spark, p, batch).first()
     shutil.rmtree(os.path.join(p, "_stats"))
     full_rescan = sim.ivf_staleness_report(spark, p, batch).first()
@@ -882,6 +894,7 @@ def test_index_stats_sidecar_matches_rescan_exactly(spark, tmp_path):
     lp = sim.build_lsh_index(spark, SF, bits=sim.LSH_BITS,
                              index_path=str(tmp_path / "lsh"))
     assert os.path.exists(os.path.join(lp, "_stats", "_SUCCESS"))
+    assert _stats_schema(sim, lp) == [("bucket", "int32"), ("c", "int64")]
     l_sidecar = sim.lsh_width_report(spark, lp, sim.LSH_BITS,
                                      sim.LSH_BITS).first()
     shutil.rmtree(os.path.join(lp, "_stats"))
@@ -2153,20 +2166,23 @@ def test_bpe_merge_budget_gate_falls_back_to_distributed(
     assert {(r.w, r.sym_str, r.ns) for r in over_w.collect()} == under_map
 
 
-def test_stats_sidecar_lifecycle_after_compaction(spark, tmp_path):
+@pytest.mark.parametrize("key", ["cell", "bucket"], ids=["ivf", "lsh"])
+def test_stats_sidecar_lifecycle_after_compaction(spark, tmp_path, key):
     """r16 found compaction must drop the pre-compaction ``_stats``
     sidecar (its counts include the deleted rows); ADVICE r16 then
     found the read-path self-heal that replaced it RACED in-flight
     appends (data files land before their stats epoch — a concurrent
     report's rmtree+rewrite interleaved with the epoch write).  The
-    r17 contract, pinned here: the production compaction wrapper
-    (``compact_ivf_index``) rebuilds the sidecar INSIDE the
-    replacement tree (no missing window at all); raw compaction ships
-    sidecar-less and every report falls back to a READ-ONLY rescan —
-    never writing — until the explicit ``repair_ivf_stats``
-    maintenance op runs."""
+    r17 contract, pinned here for both index kinds (IVF ``cell``, LSH
+    ``bucket``): the production compaction wrapper (``compact_index``)
+    rebuilds the sidecar INSIDE the replacement tree (no missing window
+    at all); raw compaction ships sidecar-less and every report falls
+    back to a READ-ONLY rescan — never writing — until the explicit
+    ``repair_index_stats`` maintenance op runs, which refuses while a
+    batch admission is in flight and rebuilds once it commits."""
     import os
 
+    from ringo_spark import index_lifecycle as _ilc
     from ringo_spark.operators import similarity as sim
     from ringo_spark.operators.deletion import (
         apply_tombstones_partitioned, tombstone_docs,
@@ -2175,54 +2191,95 @@ def test_stats_sidecar_lifecycle_after_compaction(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n = emb.count()
     half = n // 2
-    p = sim.build_ivf_index(
-        spark, SF, k=sim.auto_ivf_k(spark, half),
-        index_path=str(tmp_path / "idx"),
-        emb=emb.where(F.col("vec_id") < half))
     batch = emb.where(F.col("vec_id") >= half)
-    before = sim.ivf_staleness_report(spark, p, batch).first()
+    if key == "cell":
+        p = sim.build_ivf_index(
+            spark, SF, k=sim.auto_ivf_k(spark, half),
+            index_path=str(tmp_path / "idx"),
+            emb=emb.where(F.col("vec_id") < half))
+        report = lambda: sim.ivf_staleness_report(         # noqa: E731
+            spark, p, batch).first()
+        rows = lambda r: r.n_build                           # noqa: E731
+        append = lambda: sim.append_to_ivf_index(spark, p, batch)  # noqa: E731
+    else:
+        corpus_dir = str(tmp_path / "corpus")
+        emb.where(F.col("vec_id") < half).write.parquet(
+            f"{corpus_dir}/embeddings.parquet")
+        p = sim.build_lsh_index(spark, corpus_dir, bits=sim.LSH_BITS,
+                                index_path=str(tmp_path / "lsh"))
+        report = lambda: sim.lsh_width_report(              # noqa: E731
+            spark, p, sim.LSH_BITS, sim.LSH_BITS).first()
+        rows = lambda r: r.n_vectors                         # noqa: E731
+        append = lambda: sim.append_to_lsh_index(spark, p, batch)  # noqa: E731
+    before = report()
 
     loud = lambda *a, **k: (_ for _ in ()).throw(       # noqa: E731
         AssertionError("sidecar written on the read path"))
 
     # production path: wrapper compaction leaves a COMPLETE sidecar
     tombstone_docs(spark, p, [0, 1, 2], id_col="vec_id")
-    sim.compact_ivf_index(spark, p, id_col="vec_id")
+    sim.compact_index(spark, p, key, id_col="vec_id")
     assert os.path.exists(os.path.join(p, "_stats", "_SUCCESS"))
     tbl = sim._read_stats_log(os.path.join(p, "_stats"))
     assert sum(tbl.column("c").to_pylist()) == sim._data_meta_rows(p)
-    real = sim._write_ivf_stats
-    sim._write_ivf_stats = loud
+    real = sim._write_stats
+    sim._write_stats = loud
     try:
-        after = sim.ivf_staleness_report(spark, p, batch).first()
+        after = report()
     finally:
-        sim._write_ivf_stats = real
-    assert after.n_build == before.n_build - 3
+        sim._write_stats = real
+    assert rows(after) == rows(before) - 3
 
     # raw path: sidecar dropped, reports rescan READ-ONLY
     tombstone_docs(spark, p, [3, 4], id_col="vec_id")
-    apply_tombstones_partitioned(spark, p, "cell", id_col="vec_id")
+    apply_tombstones_partitioned(spark, p, key, id_col="vec_id")
     assert not os.path.exists(os.path.join(p, "_stats"))
-    sim._write_ivf_stats = loud
+    sim._write_stats = loud
     try:
-        raw = sim.ivf_staleness_report(spark, p, batch).first()
+        raw = report()
     finally:
-        sim._write_ivf_stats = real
-    assert raw.n_build == before.n_build - 5
+        sim._write_stats = real
+    assert rows(raw) == rows(before) - 5
     assert not os.path.exists(os.path.join(p, "_stats"))   # still absent
 
     # explicit maintenance repair restores the sidecar exactly, and a
     # repaired sidecar is trusted from here on (no rescan, no rewrite)
-    sim.repair_ivf_stats(spark, p)
+    sim.repair_index_stats(spark, p, key)
     assert os.path.exists(os.path.join(p, "_stats", "_SUCCESS"))
     tbl = sim._read_stats_log(os.path.join(p, "_stats"))
     assert sum(tbl.column("c").to_pylist()) == sim._data_meta_rows(p)
-    sim._write_ivf_stats = loud
+    sim._write_stats = loud
     try:
-        again = sim.ivf_staleness_report(spark, p, batch).first()
+        again = report()
     finally:
-        sim._write_ivf_stats = real
+        sim._write_stats = real
     assert again == raw
+
+    # an admission frozen mid-flight (data landed, stats epoch not):
+    # repair refuses; once the retried append commits, it rebuilds
+    class _Freeze(Exception):
+        pass
+
+    def crash_epoch(path, stats, mode):
+        if mode == "append":
+            raise _Freeze()
+        return real(path, stats, mode)
+
+    sim._write_stats = crash_epoch
+    try:
+        with pytest.raises(_Freeze):
+            append()
+    finally:
+        sim._write_stats = real
+    assert _ilc.admits_in_flight(p)
+    with pytest.raises(RuntimeError, match="in flight"):
+        sim.repair_index_stats(spark, p, key)
+    assert append() is True
+    sim.repair_index_stats(spark, p, key)
+    tbl = sim._read_stats_log(os.path.join(p, "_stats"))
+    assert sum(tbl.column("c").to_pylist()) == sim._data_meta_rows(p) \
+        == n - 5
+    assert rows(report()) == n - 5
 
 
 def test_report_is_readonly_during_inflight_append(spark, tmp_path):
@@ -2250,33 +2307,33 @@ def test_report_is_readonly_during_inflight_append(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= half)
 
     # freeze the append mid-flight: data landed, epoch + commit not yet
-    real_write = sim._write_ivf_stats
+    real_write = sim._write_stats
 
     class _Freeze(Exception):
         pass
 
-    def crash_epoch(path, assigned, cent_rows, mode):
+    def crash_epoch(path, stats, mode):
         if mode == "append":
             raise _Freeze()
-        return real_write(path, assigned, cent_rows, mode)
+        return real_write(path, stats, mode)
 
-    sim._write_ivf_stats = crash_epoch
+    sim._write_stats = crash_epoch
     try:
         with pytest.raises(_Freeze):
             sim.append_to_ivf_index(spark, p, batch)
     finally:
-        sim._write_ivf_stats = real_write
+        sim._write_stats = real_write
     assert _ilc.admits_in_flight(p)
 
     # (a)+(b): concurrent report is correct (sees the landed rows via
     # the rescan) and writes nothing
     loud = lambda *a, **k: (_ for _ in ()).throw(       # noqa: E731
         AssertionError("sidecar written during in-flight append"))
-    sim._write_ivf_stats = loud
+    sim._write_stats = loud
     try:
         rep = sim.ivf_staleness_report(spark, p, batch).first()
     finally:
-        sim._write_ivf_stats = real_write
+        sim._write_stats = real_write
     assert rep.n_build == n        # build half + fully-landed batch
     # the undercounting sidecar was left byte-untouched
     tbl = sim._read_stats_log(os.path.join(p, "_stats"))
@@ -2284,7 +2341,7 @@ def test_report_is_readonly_during_inflight_append(spark, tmp_path):
 
     # (c): maintenance repair refuses mid-flight
     with pytest.raises(RuntimeError, match="in flight"):
-        sim.repair_ivf_stats(spark, p)
+        sim.repair_index_stats(spark, p, "cell")
 
     # the retry completes the admission: no duplicate rows, sidecar
     # exact, ledger committed
@@ -2325,6 +2382,78 @@ def test_salt_expressions_stay_in_bucket_range(spark):
     assert got.count() == 5000
 
 
+def _functions_of(tree):
+    """(enclosing function name or None, node) for every node of a
+    module's AST."""
+    import ast
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            yield inner, child
+            yield from walk(child, inner)
+    yield from walk(tree, None)
+
+
+def test_index_stats_and_salted_writes_have_one_home():
+    """One ``_stats`` sidecar path and one salted index writer for every
+    IVF/LSH/PQ index: across ``ringo_spark/``, only ``_stats_path``
+    joins a path with ``STATS_SIDECAR`` (under any alias, or as the
+    literal ``"_stats"``) and only ``_write_stats`` writes parquet to
+    it; only ``_write_index`` reads ``BUILD_WRITERS_PER_CELL``; and no
+    function takes an ``_unsafe_in_flight`` parameter."""
+    import ast
+    import os
+
+    import ringo_spark
+
+    pkg = os.path.dirname(ringo_spark.__file__)
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            tree = ast.parse(open(path).read())
+            aliases = {"STATS_SIDECAR"}
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom):
+                    aliases |= {a.asname or a.name for a in node.names
+                                if a.name == "STATS_SIDECAR"}
+                elif isinstance(node, ast.Assign) and \
+                        isinstance(node.value, ast.Name) and \
+                        node.value.id in aliases:
+                    aliases |= {t.id for t in node.targets
+                                if isinstance(t, ast.Name)}
+            for fn, node in _functions_of(tree):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = node.args
+                    if "_unsafe_in_flight" in {
+                            x.arg for x in a.posonlyargs + a.args
+                            + a.kwonlyargs}:
+                        offenders.append((path, node.lineno, "flag"))
+                if isinstance(node, ast.Name) and \
+                        node.id == "BUILD_WRITERS_PER_CELL" and \
+                        isinstance(node.ctx, ast.Load) and \
+                        fn != "_write_index":
+                    offenders.append((path, node.lineno, fn))
+                if not (isinstance(node, ast.Call) and
+                        isinstance(node.func, ast.Attribute)):
+                    continue
+                if node.func.attr == "join" and fn != "_stats_path" and any(
+                        (isinstance(x, ast.Name) and x.id in aliases)
+                        or (isinstance(x, ast.Constant)
+                            and x.value == "_stats") for x in node.args):
+                    offenders.append((path, node.lineno, fn))
+                if node.func.attr == "parquet" and fn != "_write_stats" and \
+                        any(isinstance(x, ast.Call) and
+                            isinstance(x.func, ast.Name) and
+                            x.func.id == "_stats_path" for x in node.args):
+                    offenders.append((path, node.lineno, fn))
+    assert offenders == []
+
+
 def test_lsh_append_ledger_torn_retry_and_no_resurrection(spark, tmp_path):
     """The LSH side of the r17 admission ledger (VERDICT r16 item 2):
     lost-ack replay is a no-op; a torn retry (data landed, stats epoch
@@ -2349,22 +2478,22 @@ def test_lsh_append_ledger_torn_retry_and_no_resurrection(spark, tmp_path):
     batch = emb.where(F.col("vec_id") >= 400)
 
     # torn first attempt: stats epoch crashes after the data lands
-    real = sim._write_lsh_stats
+    real = sim._write_stats
 
     class _Freeze(Exception):
         pass
 
-    def crash_epoch(path, assigned, mode):
+    def crash_epoch(path, stats, mode):
         if mode == "append":
             raise _Freeze()
-        return real(path, assigned, mode)
+        return real(path, stats, mode)
 
-    sim._write_lsh_stats = crash_epoch
+    sim._write_stats = crash_epoch
     try:
         with pytest.raises(_Freeze):
             sim.append_to_lsh_index(spark, p, batch)
     finally:
-        sim._write_lsh_stats = real
+        sim._write_stats = real
     assert _ilc.admits_in_flight(p)
 
     # retry completes: exact rows, exact sidecar, ledger committed
@@ -2385,7 +2514,7 @@ def test_lsh_append_ledger_torn_retry_and_no_resurrection(spark, tmp_path):
     # stay dead instead of riding back in on a retry
     dead = [r.vec_id for r in batch.select("vec_id").limit(3).collect()]
     tombstone_docs(spark, p, dead, id_col="vec_id")
-    sim.compact_lsh_index(spark, p, id_col="vec_id")
+    sim.compact_index(spark, p, "bucket", id_col="vec_id")
     assert os.path.exists(os.path.join(p, "_stats", "_SUCCESS"))
     tbl = sim._read_stats_log(os.path.join(p, "_stats"))
     assert sum(tbl.column("c").to_pylist()) == n - 3

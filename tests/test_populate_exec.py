@@ -149,6 +149,42 @@ def test_count_distinct_defaults_to_primary_key(spark):
     assert got == {(hour1, 4), (hour2, 1)}  # distinct ids, hour buckets
 
 
+def test_exact_count_distinct_elides_only_grain_key_sources(spark):
+    """An exact count-distinct whose source column is a grain key (here
+    the NoDimId ``site``) collapses to ``max(col IS NOT NULL)``; one over
+    a non-key column (``browser_name``) keeps ``count(DISTINCT ...)``.
+    Both give the counts of a plain ``countDistinct`` per group."""
+    from pyspark.sql import functions as F
+
+    from ringo_spark.model import FactCountDistinct
+
+    fact = Fact("clicks", "clicks", [
+        FactColumn("at", DimTime()),
+        FactColumn("site", NoDimId()),
+        FactColumn("site_count", FactCountDistinct("site")),
+        FactColumn("browser_count", FactCountDistinct("browser_name")),
+    ])
+    env = make_env([SRC], [fact], Settings(time_unit=TimeUnit.HOUR), DEFAULTS)
+    cat = mk_catalog(spark)
+    out = fact_population_df(env, fact, cat,
+                             time_upper=dt.datetime(2030, 1, 1),
+                             count_distinct_mode="exact")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "count(distinct browser_name" in plan, plan
+    assert "count(distinct site" not in plan, plan
+    assert "isnotnull(site" in plan, plan
+
+    got = {(r.at_hour_id, r.site): (r.site_count, r.browser_count)
+           for r in out.collect()}
+    want = {(r.h, r.s): (r.sc, r.bc) for r in cat["clicks"].groupBy(
+        (F.unix_timestamp("at") / 3600).cast("long").alias("h"),
+        F.coalesce(F.col("site"), F.lit(-1)).alias("s"),
+    ).agg(F.countDistinct("site").alias("sc"),
+          F.countDistinct("browser_name").alias("bc")).collect()}
+    assert got == want
+    assert (0, 1) in got.values()   # the all-NULL site group counts 0
+
+
 def test_bigserial_id_type(spark):
     """dim_table_id_column_type drives the surrogate-id / FK cast: bigserial
     ids must come out as bigint, not int."""

@@ -15,28 +15,16 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _stage_snapshot  # noqa: E402  (the one stage scraper)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
-def _stages(spark) -> dict:
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages?status=complete",
-                timeout=10) as r:
-            return {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
-    except Exception:
-        return {}
 
 
 def _fmt_stage(s: dict) -> str:
@@ -87,13 +75,13 @@ def main():
             continue
         spark.sparkContext.setJobDescription(f"profile:{name}")
         walls = []
-        snaps = [_stages(spark)]
+        snaps = [_stage_snapshot(spark)]
         for i in range(args.runs):
             t0 = time.time()
             df = qs[name](spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             walls.append(round(time.time() - t0, 3))
-            snaps.append(_stages(spark))
+            snaps.append(_stage_snapshot(spark))
         print(f"\n== {name}: walls {walls} (min {min(walls)})")
         for i in range(args.runs):
             new = [s for k, s in snaps[i + 1].items() if k not in snaps[i]]
