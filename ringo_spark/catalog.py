@@ -65,8 +65,10 @@ def cast_to_declared(df: DataFrame, table: Table) -> DataFrame:
 # reused — every read still scans the parquet data — and the key
 # includes the file's (size, mtime_ns), so any data change re-infers.
 # Scoped to SINGLE-FILE sources (the immutable base tables); directory
-# sources (indexes, sinks) have rewrite lifecycles whose root mtime is
-# not a reliable fingerprint and keep the plain read.
+# sources have rewrite lifecycles whose root mtime is not a reliable
+# fingerprint.  Persisted indexes memoize theirs under a key of their
+# own (operators/deletion.read_index); other directories keep the
+# plain read.
 _SCHEMA_CACHE: dict = {}
 
 

@@ -303,16 +303,16 @@ def dedup_minhash_lsh_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale layout: band rows carry (doc_id, band_key) ONLY — the shingle
     arrays (the heaviest column) never enter the band explode or the
-    LSH self-join shuffle.  Candidate pairs are materialized (tiny:
-    collision pairs only), the signature cache is released, and exact
-    Jaccard verification joins the pair list back to the shingle table —
+    LSH self-join shuffle.  Exact Jaccard verification joins the (tiny:
+    collision pairs only) candidate list back to the shingle table —
     the same layout as the DuckDB oracle below.
+
+    One lazy plan: building the frame runs no Spark job.  Eager caches
+    and checkpoints of the shingle, signature and pair tables cost ten
+    jobs per construction and saved no execution time at the contract
+    scale (warm and cold calls measured).
     """
-    # Cache the shingle table once (shingling is the CPU-heavy step and is
-    # read by signature generation AND both verification joins) and the
-    # 12-int signatures (read by both sides of the LSH self-join).  Both
-    # caches are node-local — neither ever enters a shuffle.
-    shingled = _shingled(spark, sf_dir).persist()
+    shingled = _shingled(spark, sf_dir)
     sigs = (shingled
             # hs aliased in its own projection: the 12 permutations each
             # reference it, and the optimizer will not inline a non-trivial
@@ -320,20 +320,8 @@ def dedup_minhash_lsh_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (see textfn.shingle_hashes docstring)
             .withColumn("hs", shingle_hashes(F.col("sh")))
             .select("doc_id",
-                    minhash_signature(F.col("hs"), NUM_PERM).alias("sig"))
-            .persist())
-
-    # Materialize the (small) candidate list so the signature cache can
-    # be released before the verification joins.  On a cluster, swap for
-    # .checkpoint() to reliable storage if executor loss during
-    # verification matters.
-    cand = _ckpt(_candidate_pairs(_band_rows(sigs)))
-    sigs.unpersist()
-    # (checkpoint: materialize the tiny verified-pair result so every
-    # cache above can be released before returning)
-    out = _ckpt(_verify_pairs(cand, shingled))
-    shingled.unpersist()
-    return out
+                    minhash_signature(F.col("hs"), NUM_PERM).alias("sig")))
+    return _verify_pairs(_candidate_pairs(_band_rows(sigs)), shingled)
 
 
 # --- persisted minhash band+shingle index ------------------------------------

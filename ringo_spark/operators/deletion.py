@@ -32,6 +32,7 @@ must tombstone the representative AND re-append the new representative
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
@@ -66,7 +67,76 @@ def load_tombstones(spark: SparkSession, index_path: str,
     p = os.path.join(index_path, TOMBSTONES)
     if not os.path.isdir(p):
         return None
-    return spark.read.parquet(p).select(id_col).distinct()
+    return read_index(spark, p).select(id_col).distinct()
+
+
+# index dir -> (witness data file, the schema Spark inferred for the dir)
+_INDEX_SCHEMAS: dict[str, tuple] = {}
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _witness_file(path: str) -> str | None:
+    """The first data file of the dir ``path`` (sorted walk, underscore
+    and dot entries skipped), or None when it holds none."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+@contextlib.contextmanager
+def _driver_listing(spark: SparkSession, path: str):
+    """Let Spark list ``path``'s partition directories on the driver.
+    Past ``parallelPartitionDiscovery.threshold`` subdirectories (32 by
+    default) Spark lists them with a Spark job of one task per
+    directory -- for a 224-bucket LSH index that job cost more than the
+    query it served.  The threshold is raised to the directory count
+    for this one read and restored after it."""
+    n = sum(1 for e in os.scandir(path)
+            if e.is_dir() and not e.name.startswith(("_", ".")))
+    if n <= int(spark.conf.get(_DISCOVERY_THRESHOLD)):
+        yield
+        return
+    explicit = spark.conf.get(_DISCOVERY_THRESHOLD, None)
+    spark.conf.set(_DISCOVERY_THRESHOLD, str(n))
+    try:
+        yield
+    finally:
+        if explicit is None:
+            spark.conf.unset(_DISCOVERY_THRESHOLD)
+        else:
+            spark.conf.set(_DISCOVERY_THRESHOLD, explicit)
+
+
+def read_index(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a persisted index dir (or its
+    tombstone log) that runs no Spark job: the schema Spark infers is
+    memoized, and the partition directories are listed on the driver
+    (:func:`_driver_listing`).
+
+    The memo entry holds one data file that existed when the schema was
+    inferred, and serves only while that file exists.  Every rewrite
+    (build or rebuild with ``mode("overwrite")``, compaction, retrain)
+    replaces all the files, so it misses and re-infers.  Appends keep
+    the old files and add files of the stored schema (the append paths
+    cast the batch's embedding to the stored type), so the entry stays
+    valid across appends.  The cache-hit ``touch`` of a serve moves
+    mtimes only, which this key ignores."""
+    key = os.path.abspath(path)
+    hit = _INDEX_SCHEMAS.get(key)
+    reader = spark.read
+    if hit is not None and os.path.exists(hit[0]):
+        reader = reader.schema(hit[1])
+    else:
+        hit = None
+        witness = _witness_file(path)
+    with _driver_listing(spark, path):
+        df = reader.parquet(path)
+    if hit is None and witness is not None:
+        _INDEX_SCHEMAS[key] = (witness, df.schema)
+    return df
 
 
 def subtract_tombstones(df: DataFrame, tombs: DataFrame | None,
@@ -232,8 +302,9 @@ def index_rows(spark: SparkSession, index_path: str,
     """Read an index's data rows with delete propagation applied — the
     one-call form every partitioned-index reader uses (the
     ``_tombstones`` subdir is underscore-hidden, so Spark's partition
-    discovery never reads it as data)."""
-    return subtract_tombstones(spark.read.parquet(index_path),
+    discovery never reads it as data).  Both reads go through
+    :func:`read_index`, so building the frame runs no Spark job."""
+    return subtract_tombstones(read_index(spark, index_path),
                                load_tombstones(spark, index_path, id_col),
                                id_col)
 

@@ -580,8 +580,8 @@ EAGER_QUERIES: frozenset[str] = frozenset({
     # which trains on a cache miss at construction)
     "ann_ivf_kmeans",
     "ann_ivf_recall_bounds",
-    # PQ codebook training + index build + probed-cell resolution run
-    # at construction (r14)
+    # PQ codebook training + index build run at construction on a cache
+    # miss (r14)
     "ann_ivf_pq",
     "ann_pq_recall_bounds",
     # the BPE driver loop collects one argmax row per merge iteration

@@ -205,16 +205,19 @@ def corpus_rows_estimate(df: DataFrame, path: str | None = None) -> int | None:
     defined (CBO / ANALYZE TABLE stats — the real-cluster source), else
     the parquet footer metadata of ``path``.  None when neither is
     available — callers fall back to their pinned configuration."""
+    import pyarrow as pa
+    from py4j.protocol import Py4JJavaError
+
     try:
         rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
         if rc.isDefined():
             return int(rc.get())
-    except Exception:
+    except Py4JJavaError:   # the plan's statistics could not be computed
         pass
     if path is not None:
         try:
             return _parquet_meta_rows(path)
-        except Exception:
+        except (OSError, pa.ArrowInvalid):  # missing or not parquet
             return None
     return None
 
@@ -237,7 +240,7 @@ def _corpus_rows(spark: SparkSession, sf_dir: str):
     IVF K)."""
     def estimate() -> int | None:
         path = f"{sf_dir}/embeddings.parquet"
-        return corpus_rows_estimate(spark.read.parquet(path), path)
+        return corpus_rows_estimate(_rps(spark, path), path)
     return estimate
 
 
@@ -658,10 +661,25 @@ def _write_index(rows: DataFrame, key: str, path: str, mode: str) -> None:
      .write.mode(mode).partitionBy(key).parquet(path))
 
 
-def _stored_centroids(spark: SparkSession, index_path: str) -> list:
-    """The (cid, cvec) rows of an index's ``_centroids`` sidecar."""
-    return [(r.cid, r.cvec) for r in spark.read.parquet(
-        os.path.join(index_path, "_centroids")).collect()]
+def _stored_centroids(path: str, sidecar: str = "_centroids") -> list:
+    """The rows of a centroid sidecar as tuples in file column order,
+    sorted: an index's ``_centroids`` gives (cid, cvec), a PQ index's
+    ``_codebooks`` (m, cid, cvec), and a trained-centroid dir's
+    ``centroids.parquet`` (cid, cvec).  Read driver-side with pyarrow:
+    K x dim numbers of index metadata, no Spark job.  Values are the
+    stored ones bit for bit (a float32 vector reads as the same values
+    in Python floats)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(path, sidecar))
+    return sorted(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+
+
+def _cb_df(spark: SparkSession, rows) -> DataFrame:
+    """The (m, cid, cvec) PQ codebook relation from driver-side rows."""
+    return literal_df(spark, [(int(m), int(c), [float(x) for x in v])
+                              for m, c, v in rows],
+                      "m int, cid int, cvec array<double>")
 
 
 def _coerce_to_stored(spark: SparkSession, index_path: str,
@@ -671,7 +689,9 @@ def _coerce_to_stored(spark: SparkSession, index_path: str,
     the write silently and then fails every vectorized read of the
     index (schema merge picks one physical type) — fail-safe at admit
     time instead."""
-    stored_t = spark.read.parquet(index_path).schema["embedding"].dataType
+    from .deletion import read_index
+
+    stored_t = read_index(spark, index_path).schema["embedding"].dataType
     return batch.select(
         "vec_id", F.col("embedding").cast(stored_t).alias("embedding"))
 
@@ -816,19 +836,44 @@ def _probe_cells(q: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     """Per-query probe list shared by EVERY IVF serve path (r19 review:
     this block was copy-pasted four times with only the centroid source
     varying, and the r19 serve-path fix had to patch two copies
-    individually): each query scores the K broadcast centroids with the
-    oracle's round(cosine, 6) trajectory and keeps its ``nprobe``
-    nearest cells, ties to the larger cell id.  ``q`` carries
-    (q_id, q_emb); ``cent`` carries (cid, cvec).  K rows per query —
-    metadata-scale, never corpus-scale."""
-    qsim = F.round(cosine(F.col("q_emb"), F.col("cvec")), 6)
-    qw = Window.partitionBy("q_id").orderBy(F.desc("qs"), F.desc("cell"))
-    return (q.crossJoin(F.broadcast(cent))
-            .select("q_id", "q_emb", F.col("cid").alias("cell"),
-                    qsim.alias("qs"))
-            .withColumn("pr", F.row_number().over(qw))
-            .where(F.col("pr") <= nprobe)
-            .select("q_id", "q_emb", "cell"))
+    individually): each query scores the K centroids with the oracle's
+    round(cosine, 6) trajectory and keeps its ``nprobe`` nearest cells,
+    ties to the larger cell id.  ``q`` carries (q_id, q_emb); ``cent``
+    carries (cid, cvec).
+
+    The queries must not shuffle here: the centroids ride as the one
+    broadcast row of :func:`_cent_arr`, and each query keeps the first
+    ``nprobe`` of its descending ``sort_array`` of (score, cell) structs
+    (score desc, then cell desc).  With a shuffle on this side, adaptive
+    execution re-plans the index serves' join broadcast after the
+    shuffle runs, the dynamic pruning subquery no longer matches it,
+    and the scan's pruning filter falls back to ``true``."""
+    score = lambda c: F.struct(  # noqa: E731
+        F.round(cosine_pre(F.col("q_emb"), c.getField("cvec"),
+                           F.col("__pqn"), c.getField("bnorm")), 6)
+        .alias("qs"),
+        c.getField("cid").alias("cell"))
+    top = F.slice(F.sort_array(F.transform("__cents", score), asc=False),
+                  1, nprobe)
+    return (q.withColumn("__pqn", vnorm(F.col("q_emb")))
+            .crossJoin(F.broadcast(_cent_arr(cent, "__cents")))
+            .select("q_id", "q_emb", F.explode(top).alias("__p"))
+            .select("q_id", "q_emb", F.col("__p.cell").alias("cell")))
+
+
+def _query_probes(spark: SparkSession, sf_dir: str, cent_rows,
+                  nprobe: int) -> DataFrame:
+    """(q_id, q_emb, cell) probes of the LSH_N_QUERIES query vectors
+    against a persisted index's stored centroids ``cent_rows`` — the
+    build side the index serves join on their raw ``cell`` partition
+    column.  ``cell`` is an int, the partition column's type, so the
+    join needs no cast on the scan side, and the queries do not shuffle
+    (:func:`_probe_cells`): dynamic partition pruning prunes the scan
+    to the probed cells."""
+    q = (_emb(spark, sf_dir).where(F.col("vec_id") < LSH_N_QUERIES)
+         .select(F.col("vec_id").alias("q_id"),
+                 F.col("embedding").alias("q_emb")))
+    return _probe_cells(q, _cent_df(spark, cent_rows), nprobe)
 
 
 def _serve_cached_sidecars(index_path: str, sidecars: list[str],
@@ -992,7 +1037,7 @@ def append_to_ivf_index(spark: SparkSession, index_path: str,
     RETRY of the same batch is a ledger-refused no-op (returns False),
     and a retry after a mid-land crash completes the batch without
     duplicating the rows that already landed (:func:`_admit_batch`)."""
-    cent_rows = _stored_centroids(spark, index_path)
+    cent_rows = _stored_centroids(index_path)
     cent = _cent_df(spark, cent_rows)
     batch_emb = _coerce_to_stored(spark, index_path, batch_emb)
 
@@ -1031,14 +1076,16 @@ def ann_ivf_indexed_df(spark: SparkSession, sf_dir: str,
                        nprobe: int | None = None) -> DataFrame:
     """IVF query against the persisted partitioned index.
 
-    The probed cell list is resolved driver-side from the index's OWN
-    stored ``_centroids`` sidecar (index metadata, not data) and becomes
-    a static ``isin`` predicate, so the parquet scan reads ONLY the
-    probed cell directories (partition pruning) — no corpus-wide scan,
-    no corpus shuffle.  r19: probes previously recomputed the first-k
-    corpus vectors as centroids — identical to the sidecar on a fresh
-    build (the build seeds first-k; float→double widening is exact), but
-    after :func:`retrain_ivf_index` rewrites the index geometry the
+    Probes score the index's OWN stored ``_centroids`` sidecar (index
+    metadata, read driver-side by :func:`_stored_centroids`), and the
+    index scan joins the broadcast probe list on its raw ``cell``
+    partition column, so dynamic partition pruning reads ONLY the
+    probed cell directories — no corpus-wide scan, no corpus shuffle,
+    and no Spark job while the frame is built (the probed cells are
+    never collected to the driver).  r19: probes previously recomputed
+    the first-k corpus vectors as centroids — identical to the sidecar
+    on a fresh build (the build seeds first-k; float→double widening is
+    exact), but after :func:`retrain_ivf_index` rewrites the index geometry the
     stored data is partitioned by RETRAINED cells, and first-k probes
     would prune to cells the neighbors are no longer in — silent recall
     loss with no error anywhere (pinned by
@@ -1057,16 +1104,11 @@ def ann_ivf_indexed_df(spark: SparkSession, sf_dir: str,
     if k is None:
         k = _auto_ivf_k(spark, sf_dir)
     index_path = build_ivf_index(spark, sf_dir, k=k)
-    emb = _emb(spark, sf_dir)
-    cent = (spark.read.parquet(os.path.join(index_path, "_centroids"))
-            .select("cid", "cvec"))
+    cent_rows = _stored_centroids(index_path)
     if nprobe is None:
-        nprobe = _auto_nprobe(cent.count(), IVF_NPROBE)
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"),
-                   F.col("embedding").alias("q_emb"))
-    probes = _probe_cells(q, cent, nprobe)
-    probed_cells = sorted({r.cell for r in probes.select("cell").collect()})
+        nprobe = _auto_nprobe(len(cent_rows), IVF_NPROBE)
+    probes = _query_probes(spark, sf_dir, cent_rows, nprobe) \
+        .withColumn("__qn", vnorm(F.col("q_emb")))
 
     from .deletion import index_rows
 
@@ -1074,13 +1116,10 @@ def ann_ivf_indexed_df(spark: SparkSession, sf_dir: str,
     # pruned cells hold ~nprobe/K of the corpus and the widening
     # exchange cost more than it spread (bench +0.15s when tried)
     idx = (index_rows(spark, index_path, id_col="vec_id")
-           .where(F.col("cell").isin(probed_cells))
            .select(F.col("vec_id").alias("n_id"),
-                   F.col("embedding").alias("n_emb"),
-                   F.col("cell").cast("long").alias("cell"),
+                   F.col("embedding").alias("n_emb"), "cell",
                    vnorm(F.col("embedding")).alias("__nn")))
-    cand = (idx.join(F.broadcast(probes.withColumn(
-                "__qn", vnorm(F.col("q_emb")))), "cell")
+    cand = (idx.join(F.broadcast(probes), "cell")
             .where(F.col("q_id") != F.col("n_id")))
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
     return (cand.select("q_id", "n_id",
@@ -1184,7 +1223,7 @@ def _stats_fn(spark: SparkSession, index_path: str, key: str):
     if key == "bucket":
         return _bucket_stats
     if key == "cell":
-        cent_rows = _stored_centroids(spark, index_path)
+        cent_rows = _stored_centroids(index_path)
         return lambda assigned: _assigned_cell_stats(assigned, cent_rows)
     raise ValueError(f"no _stats sidecar for an index partitioned by {key!r}")
 
@@ -1321,7 +1360,7 @@ def ivf_staleness_report(spark: SparkSession, index_path: str,
     (:func:`_stored_stats`); nothing corpus-sized shuffles either way.
     ``stale`` uses the ROUNDED ratios, so the flag is bit-stable across
     engines."""
-    cent_rows = _stored_centroids(spark, index_path)
+    cent_rows = _stored_centroids(index_path)
     k = len(cent_rows)
     totals = [F.sum("c").alias("n_vecs"), F.sum("qs").alias("qerr_sum"),
               F.max("c").alias("max_cell")]
@@ -1693,9 +1732,7 @@ def trained_ivf_centroids(spark: SparkSession, sf_dir: str, k: int,
     path = os.path.join(IVF_INDEX_ROOT, f"kmeans{k}-{tag}")
     file = os.path.join(path, "centroids.parquet")
     if _ilc.serve_cached(path, "_SUCCESS"):
-        t = pq.read_table(file)
-        return list(zip(t.column("cid").to_pylist(),
-                        t.column("cvec").to_pylist()))
+        return _stored_centroids(path, "centroids.parquet")
     cent = train_ivf_centroids(spark, sf_dir, k=k, iters=iters)
     os.makedirs(path, exist_ok=True)
     pq.write_table(pa.table({
@@ -2224,26 +2261,26 @@ def rebucket_lsh_index(spark: SparkSession, index_path: str, new_bits: int,
 
 def ann_lsh_indexed_df(spark: SparkSession, sf_dir: str,
                        bits: int | None = None) -> DataFrame:
-    """Bucketed ANN served from the persisted index: the query batch's
-    bucket list becomes a static ``isin`` predicate, so the parquet scan
-    reads ONLY those bucket directories (partition pruning — plan test).
+    """Bucketed ANN served from the persisted index: the index scan
+    joins the broadcast query batch on its raw ``bucket`` partition
+    column, so dynamic partition pruning reads ONLY the query buckets'
+    directories (plan test), and building the frame runs no Spark job.
     Result rows identical to ``ann_lsh_bucketed_df`` (same oracle)."""
     if bits is None:
         bits = _auto_ann_bits(spark, sf_dir)
     index_path = build_lsh_index(spark, sf_dir, bits)
+    # the bucket expression is an int, the partition column's type: the
+    # join needs no cast on the scan side, which would stop the pruning
     q = (_emb(spark, sf_dir)
          .where(F.col("vec_id") < LSH_N_QUERIES)
          .select(F.col("vec_id").alias("q_id"),
                  F.col("embedding").alias("q_emb"),
                  _bucket_expr(F.col("embedding"), bits).alias("bucket")))
-    q_buckets = sorted({r.bucket for r in q.select("bucket").collect()})
     from .deletion import index_rows
 
     idx = (index_rows(spark, index_path, id_col="vec_id")
-           .where(F.col("bucket").isin(q_buckets))
            .select(F.col("vec_id").alias("n_id"),
-                   F.col("embedding").alias("n_emb"),
-                   F.col("bucket").cast("int").alias("bucket"),
+                   F.col("embedding").alias("n_emb"), "bucket",
                    vnorm(F.col("embedding")).alias("__nn")))
     scored = (idx.join(F.broadcast(q.withColumn(
                   "__qn", vnorm(F.col("q_emb")))), "bucket")
@@ -2448,9 +2485,8 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str) -> dict:
             emb.where(F.col("vec_id") < PQ_K)).collect()
         cb = {(r.m, r.vec_id): [float(x) for x in r.sv] for r in init}
         for _ in range(PQ_ITERS):
-            cb_df = literal_df(spark,
-                [(m, c, v) for (m, c), v in sorted(cb.items())],
-                "m int, cid int, cvec array<double>")
+            cb_df = _cb_df(spark,
+                           [(m, c, v) for (m, c), v in sorted(cb.items())])
             # map-only argmin (r19 opt): the codebook rides as ONE
             # broadcast array-of-structs row and each (vec_id, m) row's
             # code is an array_min projection — the old broadcast-join +
@@ -2524,9 +2560,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str,
                               force):
         return index_path
     cb = train_pq_codebooks(spark, sf_dir)
-    cb_df = literal_df(spark, 
-        [(m, c, v) for (m, c), v in sorted(cb.items())],
-        "m int, cid int, cvec array<double>")
+    cb_df = _cb_df(spark, [(m, c, v) for (m, c), v in sorted(cb.items())])
     cent = (_emb(spark, sf_dir).where(F.col("vec_id") < k)
             .select(F.col("vec_id").alias("cid"),
                     F.col("embedding").alias("cvec")))
@@ -2561,8 +2595,8 @@ def append_to_pq_index(spark: SparkSession, index_path: str,
     (:func:`_admit_batch`); no stats sidecar to repair — the PQ index
     stores codes, not raw embeddings, so the torn-retry anti-join runs
     on the stored (vec_id) column alone."""
-    cb_df = spark.read.parquet(os.path.join(index_path, "_codebooks"))
-    cent = spark.read.parquet(os.path.join(index_path, "_centroids"))
+    cb_df = _cb_df(spark, _stored_centroids(index_path, "_codebooks"))
+    cent = _cent_df(spark, _stored_centroids(index_path))
     batch_emb = batch_emb.select("vec_id", "embedding")
 
     def land_data(b: DataFrame) -> None:
@@ -2606,41 +2640,37 @@ def ann_ivf_pq_df(spark: SparkSession, sf_dir: str,
     top-``rerank`` shortlist is then REFINED with exact cosine (raw
     vectors fetched for shortlist rows only — a fixed R per query, so
     the refine cost does not grow with the corpus) and the exact top-5
-    returned with both scores.  Probes resolve driver-side from the K
-    centroids (index metadata); ``nprobe=None`` resolves against the
-    STORED centroid count (see :func:`ann_ivf_indexed_df` — equal to
-    ``k`` on a fresh build, correct after a geometry rewrite).  EAGER
-    (training + index build run at construction)."""
+    returned with both scores.  Probes score the K stored centroids and
+    the scan joins them on its raw ``cell`` partition column, so
+    dynamic partition pruning reads only the probed cells (see
+    :func:`ann_ivf_indexed_df`); the codebooks and centroids are read
+    driver-side (:func:`_stored_centroids`), so a warm call builds the
+    frame with no Spark job.  ``nprobe=None`` resolves against the
+    STORED centroid count (equal to ``k`` on a fresh build, correct
+    after a geometry rewrite).  EAGER: a cache miss trains the
+    codebooks and builds the index at construction."""
     if k is None:
         k = _auto_ivf_k(spark, sf_dir)
     index_path = build_pq_index(spark, sf_dir, k=k)
-    cbrows = spark.read.parquet(
-        os.path.join(index_path, "_codebooks")).collect()
-    cb = {(r.m, r.cid): [float(x) for x in r.cvec] for r in cbrows}
-    emb = _emb(spark, sf_dir)
+    cb = {(m, c): v
+          for m, c, v in _stored_centroids(index_path, "_codebooks")}
     # probes route with the index's stored _centroids, matching the
     # codes' stored _codebooks read above — the r19 serve-path rule
     # (see ann_ivf_indexed_df): every serve-time artifact comes from
     # the index itself, so probe geometry can never desynchronize from
     # the data's cell layout.  Identical to the first-k corpus vectors
     # on a fresh build (the oracle's replay).
-    cent = (spark.read.parquet(os.path.join(index_path, "_centroids"))
-            .select("cid", "cvec"))
+    cent_rows = _stored_centroids(index_path)
     if nprobe is None:
-        nprobe = _auto_nprobe(cent.count(), IVF_NPROBE)
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"),
-                   F.col("embedding").alias("q_emb"))
-    probes = _probe_cells(q, cent, nprobe)
-    probed_cells = sorted({r.cell for r in probes.select("cell").collect()})
+        nprobe = _auto_nprobe(len(cent_rows), IVF_NPROBE)
+    probes = _query_probes(spark, sf_dir, cent_rows, nprobe)
 
     from .deletion import index_rows
 
     # index scan deliberately not widened (r19 opt, measured): ADC is
     # PQ_M table lookups per pruned-cell row — cheaper than the
     # widening exchange in a warm session (see ann_ivf_indexed_df)
-    idx = (index_rows(spark, index_path, id_col="vec_id")
-           .where(F.col("cell").isin(probed_cells)))
+    idx = index_rows(spark, index_path, id_col="vec_id")
     aw = Window.partitionBy("q_id").orderBy(F.desc("adc_cosine"),
                                             F.asc("n_id"))
     short = (idx.join(F.broadcast(probes), "cell")

@@ -1,9 +1,10 @@
 """The reference's shared doctest fixture (``/root/reference/src/Ringo.hs:26-140``)
 re-expressed in our model, used for golden tests of schema derivation;
 plus :func:`count_spark_jobs`, the job counter construction-layer tests
-share."""
+share, and the plan helpers the index-pruning tests share."""
 
 import contextlib
+import re
 import uuid
 
 from ringo_spark.model import (
@@ -141,3 +142,53 @@ def count_spark_jobs(spark):
         for p, v in saved.items():
             sc.setLocalProperty(p, v)
         out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan_nodes(node):
+    """Every physical node under ``node``, through AQE's wrappers: the
+    adaptive root, its query stages and reused exchanges."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+        return
+    if name == "ReusedExchangeExec":
+        yield from _plan_nodes(node.child())
+        return
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def partitions_read(df) -> list[int]:
+    """After ``df`` has run: the "number of partitions read" metric of
+    each scan of a partitioned parquet dir in its executed plan — the
+    count dynamic partition pruning leaves."""
+    out = []
+    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() == "FileSourceScanExec" and \
+                node.metrics().contains("numPartitions"):
+            out.append(int(node.metrics().apply("numPartitions").value()))
+    return out
+
+
+def index_scan_partition_filters(plan: str, root: str) -> str:
+    """The PartitionFilters of the formatted plan's parquet scan whose
+    Location lies under the index root ``root``."""
+    for block in plan.split("\n\n"):
+        if "Scan parquet" in block and root in block:
+            m = re.search(r"PartitionFilters: \[(.*)\]", block)
+            assert m, "index scan lost its partition filter"
+            return m.group(1)
+    raise AssertionError(f"no parquet scan under {root} in the plan")
+
+
+def assert_dynamic_pruning(filters: str, key: str) -> None:
+    """The scan is pruned at run time by the join's broadcast build side
+    (dynamic partition pruning on ``key``), not by a literal IN list
+    collected to the driver while the frame was built."""
+    assert f"dynamicpruningexpression({key}#" in filters, filters
+    assert re.search(r"IN \(", filters) is None, filters

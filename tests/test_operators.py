@@ -2454,6 +2454,46 @@ def test_index_stats_and_salted_writes_have_one_home():
     assert offenders == []
 
 
+def test_centroid_sidecars_have_one_reader():
+    """One driver-side metadata path for the IVF, LSH and PQ indexes:
+    across ``ringo_spark/``, only ``_stored_centroids`` reads a
+    ``_centroids`` or ``_codebooks`` sidecar.  A Spark read of one runs
+    a schema-inference job, and a collect or count of it another."""
+    import ast
+    import os
+
+    import ringo_spark
+
+    sidecars = {"_centroids", "_codebooks"}
+    pkg = os.path.dirname(ringo_spark.__file__)
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            tree = ast.parse(open(path).read())
+            for fn, node in _functions_of(tree):
+                if fn == "_stored_centroids" or not (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)):
+                    continue
+                chain, recv = [node.func.attr], node.func.value
+                while isinstance(recv, (ast.Attribute, ast.Call)):
+                    if isinstance(recv, ast.Call):
+                        recv = recv.func
+                    else:
+                        chain.append(recv.attr)
+                        recv = recv.value
+                is_read = node.func.attr == "read_table" or (
+                    node.func.attr == "parquet" and "read" in chain)
+                if is_read and any(
+                        isinstance(x, ast.Constant) and x.value in sidecars
+                        for a in node.args for x in ast.walk(a)):
+                    offenders.append((path, node.lineno, fn))
+    assert offenders == []
+
+
 def test_lsh_append_ledger_torn_retry_and_no_resurrection(spark, tmp_path):
     """The LSH side of the r17 admission ledger (VERDICT r16 item 2):
     lost-ack replay is a no-op; a torn retry (data landed, stats epoch
@@ -2785,6 +2825,75 @@ def test_ivf_indexed_serves_retrained_geometry(spark, tmp_path):
             .where(F.col("rank") <= LSH_TOP_K)
             .select("q_id", "n_id", "rank", "cosine")).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+@pytest.mark.parametrize("name", [
+    "ann_ivf_indexed", "ann_lsh_indexed", "ann_ivf_pq", "dedup_minhash_lsh",
+    "ann_ivf_kmeans"])
+def test_warm_construction_runs_no_spark_job(spark, name):
+    """A warm second call builds its DataFrame with no Spark job: the
+    persisted-index serves read their centroid sidecars driver-side and
+    prune the index scan by a join (no probed-cell collect), the index
+    and corpus schemas are memoized, and dedup_minhash_lsh is one lazy
+    plan (no eager checkpoints)."""
+    from ringo_spark.operators import dedup, similarity as sim
+    from tests.fixtures import count_spark_jobs
+
+    fn = getattr(dedup if name.startswith("dedup") else sim, f"{name}_df")
+    fn(spark, SF)
+    with count_spark_jobs(spark) as jobs:
+        fn(spark, SF)
+    assert jobs["jobs"] == 0
+
+
+def test_ivf_indexed_warm_serve_after_tombstone_and_append(spark, tmp_path):
+    """The job-free IVF serve stays correct as its index changes under
+    it.  With a tombstone log, a warm call still runs no Spark job and
+    the deleted ids are gone.  Right after append_to_ivf_index, the
+    first call runs no Spark job either (the memoized index schema
+    survives an append) yet scans the appended files: each query finds
+    its appended copy at cosine 1.0 in its one probed cell, and the scan
+    reads only the probed cells."""
+    import os
+    import shutil
+
+    from ringo_spark.operators import similarity as sim
+    from ringo_spark.operators.deletion import tombstone_docs
+    from tests.fixtures import count_spark_jobs, partitions_read
+
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    shutil.copyfile(f"{SF}/embeddings.parquet",
+                    f"{corpus}/embeddings.parquet")
+    # 32 cells: at the default 16 the 20 queries (the seed centroids
+    # among them) probe every cell, leaving nothing to prune
+    first = sim.ann_ivf_indexed_df(spark, corpus, k=32).collect()
+    p = sim.build_ivf_index(spark, corpus, k=32)
+
+    gone = sorted({r.n_id for r in first if r.rank == 1})
+    tombstone_docs(spark, p, gone, id_col="vec_id")
+    sim.ann_ivf_indexed_df(spark, corpus, k=32)
+    with count_spark_jobs(spark) as jobs:
+        df = sim.ann_ivf_indexed_df(spark, corpus, k=32)
+    assert jobs["jobs"] == 0
+    assert not {r.n_id for r in df.collect()} & set(gone)
+
+    offset = 1_000_000
+    copies = (spark.read.parquet(f"{corpus}/embeddings.parquet")
+              .where(F.col("vec_id") < sim.LSH_N_QUERIES)
+              .select((F.col("vec_id") + offset).alias("vec_id"),
+                      "embedding"))
+    assert sim.append_to_ivf_index(spark, p, copies)
+    with count_spark_jobs(spark) as jobs:
+        df = sim.ann_ivf_indexed_df(spark, corpus, k=32, nprobe=1)
+    assert jobs["jobs"] == 0
+    got = {(r.q_id, r.n_id): r.cosine for r in df.collect()}
+    assert all(got.get((q, q + offset)) == 1.0
+               for q in range(sim.LSH_N_QUERIES))
+    probed = (sim._query_probes(spark, corpus, sim._stored_centroids(p), 1)
+              .select("cell").distinct().count())
+    assert 0 < probed < sum(1 for d in os.listdir(p) if d.startswith("cell="))
+    assert partitions_read(df) == [probed]
 
 
 def test_lsh_append_width_defaults_to_stored_and_mismatch_raises(

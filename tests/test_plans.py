@@ -3,13 +3,19 @@ pipelines scale must stay visible in the plan — time predicates pushed to
 the parquet scan, dimension lookups as broadcast joins (never sort-merge),
 top-k as TakeOrderedAndProject, and no Python UDFs in the core path."""
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from ringo_spark.testbed import (
     fact_events_by_minute_df, fact_lineitem_by_day_df,
 )
 from ringo_spark.operators.relational import topk_df
 from ringo_spark.operators.dedup import dedup_exact_df
+from tests.fixtures import (
+    assert_dynamic_pruning, index_scan_partition_filters, partitions_read,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -114,19 +120,29 @@ def test_ann_lsh_is_bucket_equijoin(spark):
 
 
 def test_ivf_indexed_query_prunes_partitions(spark):
-    """The persisted-IVF query path must read ONLY the probed cells: the
-    parquet scan of the index shows a non-empty PartitionFilters on cell
-    (no corpus-wide rescan), and the probe side stays broadcast."""
-    import re
+    """The persisted-IVF query path must read ONLY the probed cells:
+    the index scan carries a dynamic-pruning filter on ``cell`` (no
+    literal cell list, no corpus-wide rescan), the probe side stays
+    broadcast, and once run the scan has read exactly as many cell
+    partitions as the queries probe."""
+    from ringo_spark.operators import similarity as sim
 
-    from ringo_spark.operators.similarity import ann_ivf_indexed_df
-
-    plan = plan_of(spark, ann_ivf_indexed_df(spark, SF))
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m, "index scan lost its partition filter"
-    assert "cell" in m.group(1) and "IN" in m.group(1)
+    plan = plan_of(spark, sim.ann_ivf_indexed_df(spark, SF))
+    assert_dynamic_pruning(
+        index_scan_partition_filters(plan, ".ivf_index"), "cell")
     assert "BroadcastExchange" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    # the seed centroids are the first K vectors, so at the default K=16
+    # the 20 queries probe every cell; 32 cells and one probe per query
+    # leave cells for the pruning to skip
+    p = sim.build_ivf_index(spark, SF, k=32)
+    probed = (sim._query_probes(spark, SF, sim._stored_centroids(p), 1)
+              .select("cell").distinct().count())
+    assert 0 < probed < sum(1 for d in os.listdir(p) if d.startswith("cell="))
+    df = sim.ann_ivf_indexed_df(spark, SF, k=32, nprobe=1)
+    df.collect()
+    assert partitions_read(df) == [probed]
 
 
 def test_training_ops_plan_shapes(spark):
@@ -150,14 +166,27 @@ def test_training_ops_plan_shapes(spark):
 
 def test_lsh_indexed_query_prunes_partitions(spark):
     """The persisted LSH index query must read only the query batch's
-    bucket directories (PartitionFilters on bucket), mirroring the IVF
-    index plan property."""
-    from ringo_spark.operators.similarity import ann_lsh_indexed_df
+    bucket directories: a dynamic-pruning filter on ``bucket``, and
+    once run exactly as many bucket partitions read as the queries hash
+    to — the IVF index plan property."""
+    from ringo_spark.operators import similarity as sim
 
-    plan = plan_of(spark, ann_lsh_indexed_df(spark, SF))
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:400]
+    plan = plan_of(spark, sim.ann_lsh_indexed_df(spark, SF))
+    assert_dynamic_pruning(
+        index_scan_partition_filters(plan, ".lsh_index"), "bucket")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    bits = sim._auto_ann_bits(spark, SF)
+    p = sim.build_lsh_index(spark, SF, bits)
+    probed = (spark.read.parquet(f"{SF}/embeddings.parquet")
+              .where(F.col("vec_id") < sim.LSH_N_QUERIES)
+              .select(sim._bucket_expr(F.col("embedding"), bits))
+              .distinct().count())
+    buckets = sum(1 for d in os.listdir(p) if d.startswith("bucket="))
+    assert 0 < probed < buckets
+    df = sim.ann_lsh_indexed_df(spark, SF)
+    df.collect()
+    assert partitions_read(df) == [probed]
 
 
 def test_tpch_join_query_plan_shapes(spark):

@@ -40,9 +40,15 @@ def test_pq_codebooks_shape_and_rounding(spark):
 def test_pq_index_stores_codes_only_and_prunes(spark):
     """The persisted index carries (vec_id, codes, cell) — NO raw
     embeddings (the 64x memory story) — with codes in [0, PQ_K) and
-    the cell partition column; the search plan reads only the probed
-    cell directories (PartitionFilters) and never the embedding
-    column from the index."""
+    the cell partition column; the search plan prunes the index scan
+    to the probed cell directories at run time (dynamic partition
+    pruning, no literal cell list), and once run the scan has read
+    exactly as many cells as the queries probe."""
+    from ringo_spark.operators import similarity as sim
+    from tests.fixtures import (
+        assert_dynamic_pruning, index_scan_partition_filters, partitions_read,
+    )
+
     p = build_pq_index(spark, SF)
     idx = spark.read.parquet(p)
     assert set(idx.columns) == {"vec_id", "codes", "cell"}
@@ -52,9 +58,21 @@ def test_pq_index_stores_codes_only_and_prunes(spark):
     assert idx.count() == spark.read.parquet(
         f"{SF}/embeddings.parquet").count()
 
-    df = ann_ivf_pq_df(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "cell IN" in plan or "cell#" in plan  # pruned scan visible
+    plan = ann_ivf_pq_df(spark, SF)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"))
+    assert_dynamic_pruning(index_scan_partition_filters(plan, p), "cell")
+
+    # 32 cells and one probe per query leave cells for the pruning to
+    # skip (at K=16 the 20 queries, seeds among them, probe every cell)
+    p32 = build_pq_index(spark, SF, k=32)
+    probed = (sim._query_probes(spark, SF, sim._stored_centroids(p32), 1)
+              .select("cell").distinct().count())
+    assert 0 < probed < sum(1 for d in os.listdir(p32)
+                            if d.startswith("cell="))
+    df = ann_ivf_pq_df(spark, SF, k=32, nprobe=1)
+    df.collect()
+    assert partitions_read(df) == [probed]
 
 
 def test_pq_search_refines_adc_shortlist(spark):

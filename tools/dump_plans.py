@@ -32,11 +32,11 @@ SELECTION = [
      "enter the self-join Exchange; verification joins are broadcast "
      "under AQE"),
     ("ann_ivf_indexed",
-     "PartitionFilters: cell IN (probed cells) — the parquet scan reads "
-     "only the probed cell directories of the persisted index.  (At "
-     "sf0.001 the 20 test queries happen to probe every one of the 16 "
-     "cells, so the INSET lists all of them; at scale K is ~sqrt(N) and "
-     "each query reads nprobe/K of the index)"),
+     "PartitionFilters: dynamicpruningexpression(cell IN dynamicpruning) "
+     "— the index scan joins the broadcast probe list on its raw cell "
+     "partition column, so dynamic partition pruning reads only the "
+     "probed cell directories of the persisted index at run time; no "
+     "probed-cell list is collected while the frame is built"),
     ("corpus_curation",
      "the composed pipeline stays ONE fused plan: quality/lang filters "
      "in the scan stage, one dedup shuffle, map-side split"),
