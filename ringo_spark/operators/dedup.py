@@ -37,8 +37,9 @@ from ..catalog import read_parquet_stable as _rps
 
 from .textfn import (
     MINHASH_A, MINHASH_B, MINHASH_P, cosine_pre, minhash_signature,
-    phash, shingle_hashes, shingles, sql_cosine, sql_minhash_signature,
-    sql_phash, sql_shingles, sql_tokens, tokens, vnorm,
+    explode_elements, phash, shingle_hashes, shingles, sql_cosine,
+    sql_minhash_signature, sql_phash, sql_shingles, sql_tokens, tokens,
+    vnorm,
 )
 
 NUM_PERM = 12
@@ -46,18 +47,6 @@ BANDS = 6          # rows per band = NUM_PERM // BANDS = 2
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.4
-
-
-# Execution strategy switch: localCheckpoint materializes the tiny
-# candidate/result sets so upstream caches can be released — but it also
-# truncates lineage, so `.explain()` on the returned frame shows only a
-# Scan ExistingRDD.  tools/dump_plans.py flips this off to render the
-# full logical shape; execution paths leave it on.
-CHECKPOINT = True
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True) if CHECKPOINT else df
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,6 +101,12 @@ def _assert_small_scale(df: DataFrame, op: str, scale_path: str) -> DataFrame:
        r12 review finding — so bytes alone must never clear a file
        input.)
     4. The exact count() — paid only when nothing above applies."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JJavaError
+
     n = None
     row_multiplying = True      # unknown plan shape reads as multiplying
     try:
@@ -129,19 +124,15 @@ def _assert_small_scale(df: DataFrame, op: str, scale_path: str) -> DataFrame:
             node in tree
             for node in ("Join", "Generate", "Expand", "CoGroup",
                          "Unpivot", "Union"))
-    except Exception:
+    except Py4JJavaError:   # the plan could not be optimized
         pass
+    files = [] if row_multiplying else list(df.inputFiles())
     try:
-        files = [] if row_multiplying else list(df.inputFiles())
         # ALL inputs must be local parquet (r17 review): a mixed
         # parquet+csv union would silently sum only the parquet side
         # and under-count; non-local / URL-encoded paths go to the
         # estimate/count steps instead of mangled-string fallbacks
         if files and all(".parquet" in f for f in files):
-            from urllib.parse import unquote, urlparse
-
-            import pyarrow.parquet as pq
-
             total = 0
             for f in files:
                 u = urlparse(f)
@@ -151,7 +142,7 @@ def _assert_small_scale(df: DataFrame, op: str, scale_path: str) -> DataFrame:
                 total += pq.ParquetFile(
                     unquote(u.path)).metadata.num_rows
             n = total
-    except Exception:
+    except (OSError, pa.ArrowInvalid):   # missing or not parquet
         n = None
     if n is None:
         try:
@@ -167,7 +158,7 @@ def _assert_small_scale(df: DataFrame, op: str, scale_path: str) -> DataFrame:
                 # multiply its input (an explode's estimate stays near
                 # its child's bytes while its rows do not)
                 return df
-        except Exception:
+        except Py4JJavaError:   # the plan's statistics could not be computed
             pass
     if n is None:
         n = df.count()
@@ -202,7 +193,10 @@ def _shingled(spark: SparkSession, sf_dir: str,
     # the old 4.3s dedup_minhash_lsh wall) and then AGAIN distributed.
     # ``size(tokens) >= n`` is the same predicate (shingles() yields a
     # non-empty array iff the doc has >= n tokens) over the cheap
-    # split() only.
+    # split() only.  Consumers that explode ``sh`` go through
+    # textfn.explode_elements for the same reason: an inner explode
+    # makes InferFiltersFromGenerate add that very ``size(sh) > 0``
+    # filter, and pushdown carries it under the exchange again.
     from ..functions.spread import spread_source
 
     if docs is None:
@@ -246,8 +240,7 @@ def sql_band_key(bands: int = BANDS) -> str:
 
 def _candidate_pairs(bands: DataFrame) -> DataFrame:
     """Banded-LSH candidate generation: band-key self-join with ordered
-    pair dedup.  Callers checkpoint the (tiny) result so upstream caches
-    can be released."""
+    pair dedup."""
     a, b = bands.alias("a"), bands.alias("b")
     return (a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
                    & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -514,12 +507,14 @@ def dedup_minhash_lsh_indexed_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_key) rows and the broadcast verification joins."""
     p = build_minhash_index(spark, sf_dir)
     bands, shingled = _index_tables(spark, p)
-    cand = _ckpt(_candidate_pairs(bands))
-    return _verify_pairs(cand, shingled)
+    return _verify_pairs(_candidate_pairs(bands), shingled)
 
 
-DELETED_DOC_ID = 8   # fixed demo takedown target: in near-dup pairs at
-                     # every test SF, so the deletion is non-vacuous
+# fixed demo takedown target: in near-dup pairs at sf0.001 and sf0.01,
+# so the deletion is non-vacuous there.  At sf0.1 doc 8 is in none of
+# the 256 pairs (and no single doc id is paired at all three test SFs),
+# so the deleted rows equal the plain ones at that scale.
+DELETED_DOC_ID = 8
 
 
 def dedup_minhash_lsh_deleted_df(spark: SparkSession,
@@ -534,7 +529,9 @@ def dedup_minhash_lsh_deleted_df(spark: SparkSession,
     the operator's contract: merge-on-read equals never-having-indexed
     the document.  Per-doc band rows are independent, so removal
     cannot create or destroy pairs between surviving docs."""
-    from .deletion import load_tombstones, tombstone_docs
+    import pyarrow.parquet as pq
+
+    from .deletion import TOMBSTONES, tombstone_docs
 
     fp = _ilc.source_fingerprint(sf_dir, "documents.parquet")
     # the layout version rides the tag exactly like the default path's
@@ -546,12 +543,13 @@ def dedup_minhash_lsh_deleted_df(spark: SparkSession,
     p = build_minhash_index(
         spark, sf_dir,
         index_path=_os.path.join(MINHASH_INDEX_ROOT, f"del-{tag}"))
-    tombs = load_tombstones(spark, p)
-    if tombs is None or tombs.where(
-            F.col("doc_id") == DELETED_DOC_ID).count() == 0:
+    # the request-sized log is read driver-side: no Spark job per call
+    log = _os.path.join(p, TOMBSTONES)
+    if not (_os.path.isdir(log) and DELETED_DOC_ID in pq.read_table(
+            log, columns=["doc_id"]).column(0).to_pylist()):
         tombstone_docs(spark, p, [DELETED_DOC_ID])  # once; reruns no-op
     bands, shingled = _index_tables(spark, p)
-    return _verify_pairs(_ckpt(_candidate_pairs(bands)), shingled)
+    return _verify_pairs(_candidate_pairs(bands), shingled)
 
 
 def _index_tables(spark: SparkSession, index_path: str):
@@ -561,14 +559,15 @@ def _index_tables(spark: SparkSession, index_path: str):
     read time, so every indexed/incremental/streaming consumer forgets
     a deleted document without an index rewrite.  No tombstone log ->
     both joins are no-ops (the registered oracles see the identical
-    plan inputs)."""
-    from .deletion import load_tombstones, subtract_tombstones
+    plan inputs).  Read through ``deletion.read_index``, so a warm read
+    infers no schema with a Spark job."""
+    from .deletion import load_tombstones, read_index, subtract_tombstones
 
     tombs = load_tombstones(spark, index_path)
     bands = subtract_tombstones(
-        spark.read.parquet(_os.path.join(index_path, "bands")), tombs)
+        read_index(spark, _os.path.join(index_path, "bands")), tombs)
     shingled = subtract_tombstones(
-        spark.read.parquet(_os.path.join(index_path, "shingles")), tombs)
+        read_index(spark, _os.path.join(index_path, "shingles")), tombs)
     return bands, shingled
 
 
@@ -637,11 +636,11 @@ def dedup_containment_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths already collapse.
 
     Scale shape: one shuffle on the shingle key (posting lists bounded
-    by the cap), the tiny pair list materializes, verification joins it
-    back to the shingle table (AQE broadcasts the pair side — the
+    by the cap), then verification joins the tiny pair list back to
+    the shingle table (AQE broadcasts the pair side — the
     shingle arrays never shuffle)."""
-    shingled = _shingled(spark, sf_dir).persist()
-    sh_rows = shingled.select("doc_id", F.explode("sh").alias("g"))
+    shingled = _shingled(spark, sf_dir)
+    sh_rows = explode_elements(shingled, "sh", "g", "doc_id")
     rare = (sh_rows.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
             .where((F.col("df") >= 2)
                    & (F.col("df") <= CONTAINMENT_DF_CAP))
@@ -649,12 +648,11 @@ def dedup_containment_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts = sh_rows.join(rare, "g")
     a = posts.select("g", F.col("doc_id").alias("doc_a"))
     b = posts.select("g", F.col("doc_id").alias("doc_b"))
-    cand = _ckpt(
-        a.join(b, "g").where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("__shared"))
-        .where(F.col("__shared") >= CONTAINMENT_MIN_SHARED)
-        .select("doc_a", "doc_b"))
+    cand = (a.join(b, "g").where(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("__shared"))
+            .where(F.col("__shared") >= CONTAINMENT_MIN_SHARED)
+            .select("doc_a", "doc_b"))
     sa = shingled.select(F.col("doc_id").alias("doc_a"),
                          F.col("sh").alias("__sa"))
     sb = shingled.select(F.col("doc_id").alias("doc_b"),
@@ -663,16 +661,13 @@ def dedup_containment_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_ab = F.round(inter / F.size("__sa"), 6)
     c_ba = F.round(inter / F.size("__sb"), 6)
     jac = F.round(inter / (F.size("__sa") + F.size("__sb") - inter), 6)
-    out = _ckpt(
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b",
-                c_ab.alias("containment_a_in_b"),
-                c_ba.alias("containment_b_in_a"),
-                jac.alias("jaccard"))
-        .where(F.greatest("containment_a_in_b", "containment_b_in_a")
-               >= CONTAINMENT_THRESHOLD))
-    shingled.unpersist()
-    return out
+    return (cand.join(sa, "doc_a").join(sb, "doc_b")
+            .select("doc_a", "doc_b",
+                    c_ab.alias("containment_a_in_b"),
+                    c_ba.alias("containment_b_in_a"),
+                    jac.alias("jaccard"))
+            .where(F.greatest("containment_a_in_b", "containment_b_in_a")
+                   >= CONTAINMENT_THRESHOLD))
 
 
 DEDUP_CONTAINMENT_SQL = f"""
@@ -771,20 +766,15 @@ def dedup_minhash_lsh_capped_df(spark: SparkSession, sf_dir: str,
     ``return_candidates`` short-circuits after candidate generation
     (columns doc_a, doc_b) — used by the scale test to assert the
     candidate set cannot go quadratic."""
-    shingled = _shingled(spark, sf_dir, docs=_rep_docs(spark, sf_dir)).persist()
+    shingled = _shingled(spark, sf_dir, docs=_rep_docs(spark, sf_dir))
     sigs = (shingled
             .withColumn("hs", shingle_hashes(F.col("sh")))
             .select("doc_id",
-                    minhash_signature(F.col("hs"), NUM_PERM).alias("sig"))
-            .persist())
-    cand = _ckpt(_candidate_pairs(_capped_bands(_band_rows(sigs))))
-    sigs.unpersist()
+                    minhash_signature(F.col("hs"), NUM_PERM).alias("sig")))
+    cand = _candidate_pairs(_capped_bands(_band_rows(sigs)))
     if return_candidates:
-        shingled.unpersist()
         return cand
-    out = _ckpt(_verify_pairs(cand, shingled))
-    shingled.unpersist()
-    return out
+    return _verify_pairs(cand, shingled)
 
 
 def dedup_minhash_lsh_capped_indexed_df(spark: SparkSession,
@@ -798,9 +788,9 @@ def dedup_minhash_lsh_capped_indexed_df(spark: SparkSession,
     oracle applies."""
     p = build_minhash_index(spark, sf_dir, collapse=True)
     raw_bands, shingled = _index_tables(spark, p)
-    bands = _capped_bands(raw_bands)   # tombstones drop BEFORE capping:
-    cand = _ckpt(_candidate_pairs(bands))   # as if the doc were absent
-    return _verify_pairs(cand, shingled)
+    # tombstones drop BEFORE capping: as if the doc were absent
+    return _verify_pairs(_candidate_pairs(_capped_bands(raw_bands)),
+                         shingled)
 
 
 _REP_SHINGLE_BASE_CTE = f"""
@@ -885,7 +875,7 @@ def dedup_ngram_jaccard_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "dedup_ngram_jaccard", "dedup_minhash_lsh")
     base = _shingled(spark, sf_dir)
     sizes = base.select("doc_id", F.size("sh").alias("n"))
-    e = base.select("doc_id", F.explode("sh").alias("g"))
+    e = explode_elements(base, "sh", "g", "doc_id")
     a, b = e.alias("a"), e.alias("b")
     inter = (a.join(b, (F.col("a.g") == F.col("b.g"))
                     & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -981,7 +971,7 @@ def dedup_minhash_incremental_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim above describes the real ingestion shape, where the batch is
     a sliver (the r11 embedding twin's modulo split keeps its batch at
     a constant 5% instead)."""
-    shingled = _shingled(spark, sf_dir).persist()
+    shingled = _shingled(spark, sf_dir)
     sigs = (shingled
             .withColumn("hs", shingle_hashes(F.col("sh")))
             .select("doc_id",
@@ -991,9 +981,9 @@ def dedup_minhash_incremental_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .withColumnRenamed("doc_id", "doc_seen")
     batch = bands.where(F.col("doc_id") >= INGESTED_BELOW) \
                  .withColumnRenamed("doc_id", "doc_new")
-    cand = _ckpt(corpus.join(F.broadcast(batch), "band_key")
-                 .select("doc_new", "doc_seen")
-                 .dropDuplicates(["doc_new", "doc_seen"]))
+    cand = (corpus.join(F.broadcast(batch), "band_key")
+            .select("doc_new", "doc_seen")
+            .dropDuplicates(["doc_new", "doc_seen"]))
 
     sh_new = shingled.select(F.col("doc_id").alias("doc_new"),
                              F.col("sh").alias("sh_n"))
@@ -1001,11 +991,9 @@ def dedup_minhash_incremental_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.col("sh").alias("sh_s"))
     inter = F.size(F.array_intersect("sh_n", "sh_s"))
     jac = inter / (F.size("sh_n") + F.size("sh_s") - inter)
-    out = _ckpt(cand.join(sh_new, "doc_new").join(sh_seen, "doc_seen")
-                .select("doc_new", "doc_seen", F.round(jac, 6).alias("jaccard"))
-                .where(F.col("jaccard") >= JACCARD_THRESHOLD))
-    shingled.unpersist()
-    return out
+    return (cand.join(sh_new, "doc_new").join(sh_seen, "doc_seen")
+            .select("doc_new", "doc_seen", F.round(jac, 6).alias("jaccard"))
+            .where(F.col("jaccard") >= JACCARD_THRESHOLD))
 
 
 DEDUP_MINHASH_INCREMENTAL_SQL = f"""
@@ -1080,9 +1068,11 @@ def dedup_clusters_df(spark: SparkSession, sf_dir: str,
     # path-invariance pinned in tests).  Above it — a mass-duplication
     # corpus at real scale — the distributed pointer-jumping loop below
     # is unchanged.  The gate counts PAIRS (driver memory is bounded by
-    # 16 bytes/pair plus the label dict), env-tunable like the BPE one.
-    pairs = _ckpt(pairs)
-    if pairs.count() <= CC_LOCAL_MAX_PAIRS:
+    # 16 bytes/pair plus the label dict).  One bounded collect both
+    # decides the gate and feeds the local path: a count() followed by
+    # a collect() ran the whole pair plan twice.
+    rows = pairs.limit(CC_LOCAL_MAX_PAIRS + 1).collect()
+    if len(rows) <= CC_LOCAL_MAX_PAIRS:
         parent: dict = {}
 
         def find(x):
@@ -1093,7 +1083,7 @@ def dedup_clusters_df(spark: SparkSession, sf_dir: str,
                 parent[x], x = r, parent[x]
             return r
 
-        for a, b in pairs.collect():
+        for a, b in rows:
             if a not in parent:
                 parent[a] = a
             if b not in parent:
@@ -1489,16 +1479,16 @@ def dedup_winnowing_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.sequence(F.lit(0), F.size("gh") - WINNOW_W),
                        lambda i: F.array_min(F.slice("gh", i + 1, WINNOW_W))))
                    .alias("fp")))
-    fps = fps.persist()
-
+    # one hash exchange on doc_id carries the fingerprints to both
+    # consumers (signatures and verification): the two branches plan
+    # the same exchange and ReuseExchange runs it once, so the k-gram
+    # hashing runs once per doc
+    fps = fps.repartition("doc_id")
     sigs = fps.select(
         "doc_id", minhash_signature(F.col("fp"), NUM_PERM).alias("sig"))
-    cand = _ckpt(_candidate_pairs(_band_rows(sigs)))
-    out = _ckpt(_verify_pairs(cand, fps, set_col="fp",
-                              out_col="fp_jaccard",
-                              threshold=WINNOW_THRESHOLD))
-    fps.unpersist()
-    return out
+    return _verify_pairs(_candidate_pairs(_band_rows(sigs)), fps,
+                         set_col="fp", out_col="fp_jaccard",
+                         threshold=WINNOW_THRESHOLD)
 
 
 def _sql_minhash_over_ints(hs: str, num_perm: int) -> str:
@@ -1587,7 +1577,11 @@ def dedup_lsh_recall_bounds_df(spark: SparkSession, sf_dir: str,
     on a sample, the production path stays sub-quadratic."""
     if NUM_PERM % bands:
         raise ValueError(f"bands={bands} must divide NUM_PERM={NUM_PERM}")
-    base = _shingled(spark, sf_dir).persist()
+    # one hash exchange on doc_id carries the shingle sets to the
+    # corpus-wide consumers (postings, sizes, signatures): ReuseExchange
+    # runs it once, so the shingling runs once per doc (the audit-side
+    # branches push their doc_id filter under it and shingle 60 docs)
+    base = _shingled(spark, sf_dir).repartition("doc_id")
     audit_filter = F.col("doc_id") < LSH_RECALL_AUDIT_MAX
 
     # ground truth: exact Jaccard via the audit-restricted inverted
@@ -1595,9 +1589,10 @@ def dedup_lsh_recall_bounds_df(spark: SparkSession, sf_dir: str,
     # they BROADCAST: the corpus-sized posting explode stays map-local
     # instead of shuffling on the shingle key — only matched (a, b)
     # rows reach the groupBy exchange (r12 pin-ratio shave).
-    e_all = base.select("doc_id", F.explode("sh").alias("g"))
-    e_aud = (base.where(audit_filter)
-             .select(F.col("doc_id").alias("a_id"), F.explode("sh").alias("g")))
+    e_all = explode_elements(base, "sh", "g", "doc_id")
+    e_aud = explode_elements(base.where(audit_filter)
+                             .withColumnRenamed("doc_id", "a_id"),
+                             "sh", "g", "a_id")
     inter = (e_all.join(F.broadcast(e_aud), "g")
              .where(F.col("doc_id") != F.col("a_id"))
              .groupBy("a_id", F.col("doc_id").alias("b_id"))
@@ -1606,11 +1601,11 @@ def dedup_lsh_recall_bounds_df(spark: SparkSession, sf_dir: str,
     na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
     jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    truth = _ckpt(inter.join(na, "a_id").join(nb, "b_id")
-                  .where(F.round(jac, 6) >= JACCARD_THRESHOLD)
-                  .select(F.least("a_id", "b_id").alias("lo"),
-                          F.greatest("a_id", "b_id").alias("hi"))
-                  .distinct())
+    truth = (inter.join(na, "a_id").join(nb, "b_id")
+             .where(F.round(jac, 6) >= JACCARD_THRESHOLD)
+             .select(F.least("a_id", "b_id").alias("lo"),
+                     F.greatest("a_id", "b_id").alias("hi"))
+             .distinct())
 
     # candidates: the production band layout at the requested band
     # count — THROUGH the shared helper, so the audit can never
@@ -1623,13 +1618,12 @@ def dedup_lsh_recall_bounds_df(spark: SparkSession, sf_dir: str,
     a, b = brows.where(audit_filter).alias("a"), brows.alias("b")
     # audit band rows broadcast for the same reason: the corpus band
     # table never shuffles on the band key for the audit's sake
-    cand = _ckpt(b.join(F.broadcast(a),
-                        (F.col("a.band_key") == F.col("b.band_key"))
-                        & (F.col("a.doc_id") != F.col("b.doc_id")))
-                 .select(F.least("a.doc_id", "b.doc_id").alias("lo"),
-                         F.greatest("a.doc_id", "b.doc_id").alias("hi"))
-                 .distinct())
-    base.unpersist()
+    cand = (b.join(F.broadcast(a),
+                   (F.col("a.band_key") == F.col("b.band_key"))
+                   & (F.col("a.doc_id") != F.col("b.doc_id")))
+            .select(F.least("a.doc_id", "b.doc_id").alias("lo"),
+                    F.greatest("a.doc_id", "b.doc_id").alias("hi"))
+            .distinct())
 
     tot = truth.agg(F.count(F.lit(1)).alias("n_true"))
     caught = (truth.join(cand, ["lo", "hi"])
@@ -1742,11 +1736,6 @@ def doc_dup_chunk_fraction_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash key then doc_id.  No quadratic form exists at any step, so
     this runs at corpora where pairwise dedup cannot."""
     chunks = _chunk_hashes(_docs_wide(spark, sf_dir))
-    # cache: both the per-chunk doc count AND the per-doc rollup read the
-    # chunk table — without this the tokenize+md5 pass runs twice (the
-    # dedup_minhash_lsh shingle-cache pattern; on a cluster swap for
-    # .checkpoint() to reliable storage at very large corpora)
-    chunks = chunks.persist()
     docs_per_h = (chunks.groupBy("h")
                   .agg(F.countDistinct("doc_id").alias("nd")))
     per_doc = (chunks.join(docs_per_h, "h")
@@ -1755,13 +1744,11 @@ def doc_dup_chunk_fraction_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
                     .cast("long").alias("n_dup_chunks")))
     frac = F.round(F.col("n_dup_chunks") / F.col("n_chunks"), 6)
-    out = _ckpt(per_doc
-                .select("doc_id", "n_chunks", "n_dup_chunks",
-                        frac.alias("dup_fraction"),
-                        (frac < DUP_CHUNK_MAX_FRACTION).alias("keep"))
-                .orderBy("doc_id"))
-    chunks.unpersist()
-    return out
+    return (per_doc
+            .select("doc_id", "n_chunks", "n_dup_chunks",
+                    frac.alias("dup_fraction"),
+                    (frac < DUP_CHUNK_MAX_FRACTION).alias("keep"))
+            .orderBy("doc_id"))
 
 
 DOC_DUP_CHUNK_FRACTION_SQL = f"""
@@ -1821,8 +1808,7 @@ def doc_dedup_spans_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic and the heavy text/token payload never shuffles — the
     removal lists do."""
     base = (_docs_wide(spark, sf_dir)
-            .select("doc_id", tokens(F.col("text")).alias("__toks"))
-            .persist())
+            .select("doc_id", tokens(F.col("text")).alias("__toks")))
     chunks = _chunks_from_tokens(base, with_index=True)
     own = (chunks.groupBy("h")
            .agg(F.count(F.lit(1)).alias("cnt"),
@@ -1833,9 +1819,7 @@ def doc_dedup_spans_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                           & (F.col("i") == F.col("own.i"))))
                .groupBy("doc_id")
                .agg(F.sort_array(F.collect_list("i")).alias("rem")))
-    out = _ckpt(_spans_cleaned(base, removed))
-    base.unpersist()
-    return out
+    return _spans_cleaned(base, removed)
 
 
 def _spans_cleaned(base: DataFrame, removed: DataFrame,
@@ -1948,13 +1932,10 @@ def doc_dedup_spans_incremental_df(spark: SparkSession,
                 .select("h").distinct())
     base = (spread_source(docs.where(F.col("doc_id") >= INGESTED_BELOW),
                           f"{sf_dir}/documents.parquet")
-            .select("doc_id", tokens(F.col("text")).alias("__toks"))
-            .persist())
+            .select("doc_id", tokens(F.col("text")).alias("__toks")))
     removed = _span_removal_lists(
         _chunks_from_tokens(base, with_index=True), corpus_h)
-    out = _ckpt(_spans_cleaned(base, removed))
-    base.unpersist()
-    return out
+    return _spans_cleaned(base, removed)
 
 
 def _span_removal_lists(chunks: DataFrame,
@@ -2046,8 +2027,7 @@ def doc_dup_chunk_fraction_incremental_df(spark: SparkSession,
     index = (_chunk_hashes(docs.where(F.col("doc_id") < INGESTED_BELOW))
              .select("h").distinct()
              .withColumn("__in_corpus", F.lit(True)))
-    batch = _chunk_hashes(
-        docs.where(F.col("doc_id") >= INGESTED_BELOW)).persist()
+    batch = _chunk_hashes(docs.where(F.col("doc_id") >= INGESTED_BELOW))
     in_batch = (batch.groupBy("h")
                 .agg(F.countDistinct("doc_id").alias("__nb")))
     dup = F.coalesce("__in_corpus", F.lit(False)) | (F.col("__nb") > 1)
@@ -2058,13 +2038,11 @@ def doc_dup_chunk_fraction_incremental_df(spark: SparkSession,
                     F.sum(dup.cast("int")).cast("long")
                     .alias("n_dup_chunks")))
     frac = F.round(F.col("n_dup_chunks") / F.col("n_chunks"), 6)
-    out = _ckpt(per_doc
-                .select("doc_id", "n_chunks", "n_dup_chunks",
-                        frac.alias("dup_fraction"),
-                        (frac < DUP_CHUNK_MAX_FRACTION).alias("keep"))
-                .orderBy("doc_id"))
-    batch.unpersist()
-    return out
+    return (per_doc
+            .select("doc_id", "n_chunks", "n_dup_chunks",
+                    frac.alias("dup_fraction"),
+                    (frac < DUP_CHUNK_MAX_FRACTION).alias("keep"))
+            .orderBy("doc_id"))
 
 
 DOC_DUP_CHUNK_FRACTION_INCREMENTAL_SQL = f"""

@@ -134,54 +134,58 @@ GROUP BY 1, 2
 def training_prep_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-split accounting (n_docs, n_chunks, total_chunk_tokens) of the
     fully prepared training corpus."""
+    from ..functions.spread import spread_source
     from .text import BENCHMARK_BELOW, CONTAM_N, CONTAM_THRESHOLD
-    from .textfn import shingles
+    from .textfn import explode_elements, shingles
     from .training import CHUNK_SIZE, CHUNK_STRIDE
 
     # spread the CPU-heavy token/shingle expressions across cores first
     # (single-file testdata -> few input splits; a no-op at real scale,
     # same rationale as dedup._shingled)
-    docs = (_rps(spark, f"{sf_dir}/documents.parquet")
-            .repartition(spark.sparkContext.defaultParallelism))
-    base = docs.select("doc_id", "lang", "text",
-                       tokens(F.col("text")).alias("toks"))
+    path = f"{sf_dir}/documents.parquet"
+    base = (spread_source(_rps(spark, path), path)
+            .select("doc_id", "lang", "text",
+                    tokens(F.col("text")).alias("toks")))
+    # kept feeds THREE consumers (contamination explode, the decon
+    # semi-join, and the chunk assembly).  The optimizer pushes its
+    # filters below the widening exchange, so the quality pass runs in
+    # the scan stage; as long as every consumer sees the same filter
+    # there, that exchange is planned once and reused (ReusedExchange)
+    # and the pass runs once per doc.  r19 opt (guide §2.3, project
+    # before the exchange): kept is pruned to exactly what the
+    # consumers read — doc_id, the md5 text hash (the dedup key; the
+    # raw text never leaves the scan stage), and the token array.
     kept = (base.where(F.col("doc_id") >= BENCHMARK_BELOW)
             .withColumn("n_words", F.size("toks"))
             .withColumn("q", F.round(quality_score_expr(), 6))
             .where((F.col("n_words") >= MIN_WORDS)
                    & (F.col("q") >= MIN_QUALITY)
-                   & F.col("lang").isin(*KEEP_LANGS)))
-    # kept feeds THREE consumers (contamination explode, the decon
-    # semi-join, and the chunk assembly) — materialize it once instead of
-    # re-running the scan + tokenize + quality pass per branch (measured
-    # 5.5s -> 2.6s at sf0.1).  Shares dedup's CHECKPOINT toggle so
-    # tools/dump_plans can still render the full lineage.
-    # r19 opt (guide §2.3, project before the exchange): the
-    # materialized columns are pruned to exactly what the consumers
-    # read — doc_id, the md5 text hash (the dedup key; the raw text
-    # never leaves the scan stage), and the token array.
-    from .dedup import _ckpt
-
-    kept = _ckpt(kept.select(
-        "doc_id", F.md5("text").alias("__h"), "toks"))
+                   & F.col("lang").isin(*KEEP_LANGS))
+            .select("doc_id", F.md5("text").alias("__h"), "toks"))
 
     # decontamination: drop docs whose 5-gram overlap with the benchmark
     # set (docs below BENCHMARK_BELOW — NOT quality-filtered: the eval
     # suite is given, not curated) crosses the threshold
-    bench = (base.where(F.col("doc_id") < BENCHMARK_BELOW)
-             .select(F.explode(shingles(F.col("toks"), CONTAM_N)).alias("g"))
-             .distinct())
+    bench = explode_elements(
+        base.where(F.col("doc_id") < BENCHMARK_BELOW)
+        .select(shingles(F.col("toks"), CONTAM_N).alias("sh")),
+        "sh", "g").distinct()
     # single shingling pass per train doc: n_sh rides the explode, the
     # hit count comes from a LEFT join so zero-hit docs survive (same
-    # shape as text.benchmark_contamination_df)
-    tr_ex = (kept
-             .select("doc_id", shingles(F.col("toks"), CONTAM_N).alias("sh"))
-             .select("doc_id", F.size("sh").alias("n_sh"),
-                     F.explode("sh").alias("g")))
+    # shape as text.benchmark_contamination_df).  n_sh is aggregated,
+    # not grouped on: as a grouping key, the isnotnull(n_sh) that the
+    # ratio filter implies is pushed down into the scan stage as a
+    # second shingling of every doc, and that branch's exchange then
+    # differs from the other consumers' and cannot be reused
+    tr_ex = explode_elements(
+        kept.select("doc_id", shingles(F.col("toks"), CONTAM_N).alias("sh"))
+        .withColumn("n_sh", F.size("sh")),
+        "sh", "g", "doc_id", "n_sh")
     clean_ids = (tr_ex.join(F.broadcast(bench.withColumn("__hit", F.lit(1))),
                             "g", "left")
-                 .groupBy("doc_id", "n_sh")
-                 .agg(F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
+                 .groupBy("doc_id")
+                 .agg(F.max("n_sh").alias("n_sh"),
+                      F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
                       .alias("n_hit"))
                  .where(F.col("n_hit") / F.col("n_sh") < CONTAM_THRESHOLD)
                  .select("doc_id"))

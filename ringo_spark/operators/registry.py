@@ -641,9 +641,8 @@ FAMILY_SOURCES: dict[str, list[str]] = {
     "ann": ["ringo_spark/operators/similarity.py", _TEXTFN, _DELETION],
     # text executes similarity's index-lifecycle helpers since r14
     # (build_bpe_tokenizer: fingerprint/touch/GC) and, transitively,
-    # deletion (similarity's index readers); since the r19 opt it also
-    # executes dedup's _ckpt (the shared-scoring materializer in
-    # _scored_docs)
+    # deletion (similarity's index readers); it also executes dedup's
+    # _docs_wide (the widened scan of the per-doc scoring lanes)
     "text": ["ringo_spark/operators/text.py", _TEXTFN,
              "ringo_spark/operators/similarity.py", _DELETION,
              "ringo_spark/operators/dedup.py"],

@@ -160,8 +160,9 @@ def sample_cluster_split_indexed_df(spark: SparkSession,
     seeds) actually uses.  Identical result to the live recompute (same
     cluster table, pytest-pinned), so the oracle applies unchanged."""
     from .dedup import build_cluster_table
+    from .deletion import read_index
 
-    clusters = spark.read.parquet(build_cluster_table(spark, sf_dir))
+    clusters = read_index(spark, build_cluster_table(spark, sf_dir))
     return _cluster_split(_docs(spark, sf_dir), clusters)
 
 

@@ -140,19 +140,14 @@ FROM documents
 QUALITY_PCT_FLOOR = 0.25
 
 
-def _scored_docs(spark: SparkSession, sf_dir: str,
-                 ckpt: bool = False) -> DataFrame:
+def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality-gate family's scoring pass: (doc_id, source,
     quality_score) for scorable docs, over the data-scaled-width
-    ``_docs`` scan (r19 opt, guide §2.6).  ``ckpt=True`` materializes
-    the scored rows for builders with several consumers."""
-    from .dedup import _ckpt
-
+    ``_docs`` scan (r19 opt, guide §2.6)."""
     q = F.round(quality_score_expr(), 6)
-    scored = (_docs(spark, sf_dir)
-              .select("doc_id", "source", q.alias("quality_score"))
-              .where(F.col("quality_score").isNotNull()))
-    return _ckpt(scored) if ckpt else scored
+    return (_docs(spark, sf_dir)
+            .select("doc_id", "source", q.alias("quality_score"))
+            .where(F.col("quality_score").isNotNull()))
 
 
 def quality_source_percentile_df(spark: SparkSession,

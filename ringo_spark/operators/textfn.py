@@ -18,7 +18,7 @@ covers md5/regexp/higher-order array functions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Explicit whitespace class, NOT \s (r17 review): Java regex (Spark)
@@ -50,6 +50,22 @@ def shingles(toks: Column, n: int = 3) -> Column:
     )
     return F.when(F.size(toks) >= n, F.array_distinct(sh)) \
             .otherwise(F.array().cast("array<string>"))
+
+
+def explode_elements(df: DataFrame, arr: str, alias: str,
+                     *keep: str) -> DataFrame:
+    """``df.select(*keep, explode(arr).alias(alias))`` for an array that
+    is computed above a widening exchange (shingle and token arrays).
+
+    For an inner explode the optimizer's InferFiltersFromGenerate rule
+    adds ``size(arr) > 0 AND isnotnull(arr)`` under the Generate, and
+    predicate pushdown carries it — array expression and all — through
+    ``spread_source``'s round-robin exchange, so the whole corpus's
+    shingling runs once more, in the scan's task.  explode_outer gets
+    no inferred filter; dropping its null element afterwards yields the
+    same rows, since these arrays never hold a null element."""
+    return (df.select(*keep, F.explode_outer(arr).alias(alias))
+            .where(F.col(alias).isNotNull()))
 
 
 # Universal-hash permutation constants: h_k(x) = (A[k]*(x mod P) + B[k]) mod P.

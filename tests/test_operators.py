@@ -703,12 +703,15 @@ def test_capped_indexed_matches_live_capped(spark):
 def test_minhash_index_append_equals_full_rebuild(spark, tmp_path):
     """Index lifecycle: corpus index + appended batch == index built from
     the full corpus (per-doc signatures are independent), so admission
-    cost stays O(batch) while queries see the same candidate space."""
+    cost stays O(batch) while queries see the same candidate space.  The
+    index reader's memoized schemas stay valid across the append: a read
+    after it runs no Spark job and sees the appended rows."""
     import os
 
     from ringo_spark.operators.dedup import (
-        append_to_minhash_index, build_minhash_index,
+        _index_tables, append_to_minhash_index, build_minhash_index,
     )
+    from tests.fixtures import count_spark_jobs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     corpus_dir = str(tmp_path / "corpus")
@@ -720,13 +723,16 @@ def test_minhash_index_append_equals_full_rebuild(spark, tmp_path):
     docs.write.parquet(f"{full_dir}/documents.parquet")
 
     grown = build_minhash_index(spark, corpus_dir)
+    _index_tables(spark, grown)
     append_to_minhash_index(spark, grown,
                             docs.where(F.col("doc_id") >= 300))
     full = build_minhash_index(spark, full_dir)
 
-    for part in ("bands", "shingles"):
-        a = {tuple(map(str, r))
-             for r in spark.read.parquet(os.path.join(grown, part)).collect()}
+    with count_spark_jobs(spark) as jobs:
+        tables = _index_tables(spark, grown)
+    assert jobs["jobs"] == 0
+    for part, got in zip(("bands", "shingles"), tables):
+        a = {tuple(map(str, r)) for r in got.collect()}
         b = {tuple(map(str, r))
              for r in spark.read.parquet(os.path.join(full, part)).collect()}
         assert a == b and a, part
@@ -2829,17 +2835,24 @@ def test_ivf_indexed_serves_retrained_geometry(spark, tmp_path):
 
 @pytest.mark.parametrize("name", [
     "ann_ivf_indexed", "ann_lsh_indexed", "ann_ivf_pq", "dedup_minhash_lsh",
-    "ann_ivf_kmeans"])
+    "ann_ivf_kmeans", "dedup_minhash_lsh_indexed",
+    "dedup_minhash_lsh_capped", "dedup_minhash_lsh_capped_indexed",
+    "dedup_minhash_lsh_deleted", "dedup_containment",
+    "dedup_minhash_incremental", "dedup_winnowing",
+    "dedup_lsh_recall_bounds", "doc_dup_chunk_fraction",
+    "doc_dup_chunk_fraction_incremental", "doc_dedup_spans",
+    "doc_dedup_spans_incremental", "training_prep",
+    "sample_cluster_split_indexed"])
 def test_warm_construction_runs_no_spark_job(spark, name):
     """A warm second call builds its DataFrame with no Spark job: the
     persisted-index serves read their centroid sidecars driver-side and
     prune the index scan by a join (no probed-cell collect), the index
-    and corpus schemas are memoized, and dedup_minhash_lsh is one lazy
-    plan (no eager checkpoints)."""
-    from ringo_spark.operators import dedup, similarity as sim
+    and corpus schemas are memoized, and the dedup builders are one lazy
+    plan each (no eager checkpoints)."""
+    from ringo_spark.operators.registry import OPERATOR_QUERIES
     from tests.fixtures import count_spark_jobs
 
-    fn = getattr(dedup if name.startswith("dedup") else sim, f"{name}_df")
+    fn = OPERATOR_QUERIES[name][0]
     fn(spark, SF)
     with count_spark_jobs(spark) as jobs:
         fn(spark, SF)

@@ -285,18 +285,10 @@ def test_broadcast_gate_unit(spark, tmp_path):
 def test_training_prep_plan_shape(spark):
     """The composed prep pipeline stays JVM-side with its filters at the
     scan: language IN-filter pushed down, benchmark shingle set joined
-    broadcast, no Python evaluator anywhere.  (CHECKPOINT off so the
-    materialized `kept` stage doesn't truncate the visible lineage —
-    same toggle tools/dump_plans uses.)"""
-    import ringo_spark.operators.dedup as dedup_mod
+    broadcast, no Python evaluator anywhere."""
     from ringo_spark.operators.pipeline import training_prep_df
 
-    old = dedup_mod.CHECKPOINT
-    dedup_mod.CHECKPOINT = False
-    try:
-        plan = plan_of(spark, training_prep_df(spark, SF))
-    finally:
-        dedup_mod.CHECKPOINT = old
+    plan = plan_of(spark, training_prep_df(spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "In(lang" in plan
     assert "BroadcastHashJoin" in plan
@@ -595,7 +587,7 @@ def test_r10_partsupp_mapped_decorrelation_plan_shapes(spark):
     assert "LeftSemi" in plan_of(spark, q20_surplus_suppliers_df(spark, SF))
 
 
-def test_doc_dedup_spans_plan_shape(spark, monkeypatch):
+def test_doc_dedup_spans_plan_shape(spark):
     """Span removal must stay hash-shuffled and JVM-side: the only
     corpus-sized Exchange keys on the 16-byte chunk hash (canonical-min
     groupBy), the removal-list join back to docs is not a sort-merge of
@@ -603,7 +595,6 @@ def test_doc_dedup_spans_plan_shape(spark, monkeypatch):
     contract for the ingestion twin."""
     from ringo_spark.operators import dedup as D
 
-    monkeypatch.setattr(D, "CHECKPOINT", False)  # render the full plan
     for fn in (D.doc_dedup_spans_df, D.doc_dedup_spans_incremental_df):
         plan = plan_of(spark, fn(spark, SF))
         assert "hashpartitioning(h#" in plan
@@ -612,6 +603,40 @@ def test_doc_dedup_spans_plan_shape(spark, monkeypatch):
         # the token-array frame joins via broadcast of the (small)
         # removal lists — never a corpus sort-merge on doc_id
         assert "SortMergeJoin" not in plan
+
+
+def _filters_under_round_robin(df) -> list[str]:
+    """The condition of every Filter below a round-robin exchange (the
+    widening ``spread_source`` adds) in ``df``'s physical plan."""
+    from tests.fixtures import _plan_nodes
+
+    out = []
+    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec" and \
+                "RoundRobinPartitioning" in \
+                node.outputPartitioning().toString():
+            out += [n.condition().toString() for n in _plan_nodes(node)
+                    if n.getClass().getSimpleName() == "FilterExec"]
+    return out
+
+
+def test_shingling_stays_above_the_widening_exchange(spark):
+    """The shingle arrays are computed above the round-robin exchange
+    that widens the documents scan: no filter below it evaluates the
+    shingle expression (``transform(sequence(…``).  An inner explode of
+    ``sh`` makes the optimizer infer ``size(sh) > 0`` and push it there,
+    which shingles the whole corpus in the scan's task; training_prep's
+    contamination ratio did the same through an inferred
+    ``isnotnull(size(sh))``."""
+    from ringo_spark.operators import dedup as D
+    from ringo_spark.operators.pipeline import training_prep_df
+
+    for fn in (D.dedup_containment_df, D.dedup_lsh_recall_bounds_df,
+               training_prep_df):
+        conds = _filters_under_round_robin(fn(spark, SF))
+        assert conds, fn.__name__      # the widened scan is in the plan
+        assert not [c for c in conds if "transform(sequence(" in c], \
+            fn.__name__
 
 
 def test_r13_operators_plan_shapes(spark):

@@ -175,9 +175,10 @@ def test_salt_expression_has_one_definition():
 
 def test_byte_floors_live_only_in_spread_module():
     """One widening rule, one floor table: no module but
-    functions/spread.py passes a numeric literal as ``bytes_per_task``,
-    and no module defines a second widener named ``spread`` (one that
-    probes the plan through ``df.rdd``)."""
+    functions/spread.py passes a numeric literal as ``bytes_per_task``
+    or calls ``repartition`` with a width derived from
+    ``defaultParallelism``, and no module defines a second widener named
+    ``spread`` (one that probes the plan through ``df.rdd``)."""
     import ringo_spark
 
     pkg = os.path.dirname(ringo_spark.__file__)
@@ -198,6 +199,14 @@ def test_byte_floors_live_only_in_spread_module():
                             isinstance(c.value, (int, float))
                             for c in ast.walk(node.value)):
                     offenders.append((path, node.value.lineno))
+                if isinstance(node, ast.Call) and path != home and \
+                        isinstance(node.func, ast.Attribute) and \
+                        node.func.attr == "repartition" and \
+                        any(isinstance(c, (ast.Attribute, ast.Name)) and
+                            "defaultParallelism" in
+                            getattr(c, "attr", getattr(c, "id", ""))
+                            for a in node.args for c in ast.walk(a)):
+                    offenders.append((path, node.lineno))
     assert offenders == []
 
 

@@ -16,6 +16,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
+PLAN_PARALLELISM = 32
 
 # (query name, what to look for in the plan)
 SELECTION = [
@@ -49,9 +50,10 @@ SELECTION = [
     ("asof_join",
      "per-key ordered matching without a range crossJoin"),
     ("dedup_winnowing",
-     "fingerprints explode to (fingerprint, doc_id) rows before the "
-     "inverted-index self-join — the heavy gram arrays never enter the "
-     "Exchange"),
+     "the fingerprint sets cross one hashpartitioning(doc_id) exchange "
+     "that both consumers read (banded-MinHash candidates and the "
+     "exact verification); only (doc_id, band_key) rows enter the band "
+     "self-join Exchange"),
     ("scd2_dim",
      "both windows share one hashpartitioning(o_custkey) exchange — "
      "change detection and interval close are within-partition"),
@@ -204,14 +206,11 @@ def main():
 
     import __spark_entry__ as entrymod
 
-    import ringo_spark.operators.dedup as dedup_mod
-
-    spark = get_spark("plan-dump")
+    # a fixed width, not the machine's cores: spread_source widens scans
+    # to defaultParallelism, so the dump would otherwise change with the
+    # core count of whoever regenerates it (32 is the committed width)
+    spark = get_spark("plan-dump", cpus=PLAN_PARALLELISM)
     spark.sparkContext.setLogLevel("ERROR")
-    # checkpoints truncate lineage (a checkpointed result explains as a
-    # bare Scan ExistingRDD) — disable them so the dedup plans show their
-    # full shape; execution paths keep them on
-    dedup_mod.CHECKPOINT = False
     qs = entrymod.queries()
     out = [
         "# PLANS — physical plans of the headline queries (sf0.001)",

@@ -95,9 +95,6 @@ def main():
                 print(_fmt_stage(s))
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            import ringo_spark.operators.dedup as dedup_mod
-            ckpt_was = dedup_mod.CHECKPOINT
-            dedup_mod.CHECKPOINT = False
             try:
                 df = qs[name](spark, args.sf_dir)
                 plan = df._jdf.queryExecution().explainString(
@@ -109,8 +106,6 @@ def main():
                 print(f" plan -> {p}")
             except Exception as e:  # eager builders may refuse plan-only
                 print(f" plan dump failed: {e}")
-            finally:
-                dedup_mod.CHECKPOINT = ckpt_was
         spark.sparkContext.setJobDescription(None)
 
 
