@@ -12,8 +12,23 @@ same artifacts for orchestration parity:
 
 Execution model (Spark-first):
 
-- Dimensions first (topo order), then facts; a fact re-reads its persisted
-  dimensions so surrogate keys are consistent across facts sharing a dim.
+- A refresh is one DAG: the derived tables ``run`` (every persistent fact)
+  or ``run_fact`` (one fact) populates, with the edges
+  :func:`extractor.extract_dependencies` computes — the same DAG the
+  reference writes to ``dependencies.json`` for an orchestrator.  A table
+  starts as soon as every derived table it depends on has committed, in
+  a worker thread of its own (at most one thread per table; started
+  through ``pyspark.inheritable_thread_target`` so job groups and other
+  local properties reach its jobs).  A fact re-reads its persisted
+  dimensions, so surrogate keys are consistent across facts sharing a
+  dim; each dimension runs once per DAG, with the window of the first
+  fact (in env order) that needs it.
+- Failure rule: when a table raises, nothing that depends on it starts,
+  nothing else new starts, and tables already in flight finish; the
+  first failure in topo order is then re-raised.  Sidecar state
+  (watermarks, inflight journal, window and batch-tag ledgers) is
+  rewritten under one per-engine lock; manifest commits are serialized
+  per table by the manifest flock.
 - Full refresh writes to a staging directory then atomically renames over
   the live one (the reference's ``{{suff}}`` staging-table swap,
   Generator/Internal.hs:38-41).
@@ -33,22 +48,26 @@ import json
 import logging
 import os
 import shutil
+import threading
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import cast_to_declared
+from .catalog import cast_to_declared, load_catalog
 from .extractor import (
-    extract_dependencies, extract_dimension_tables, extract_fact_table,
-    topo_order,
+    extract_all_dimension_tables, extract_dependencies,
+    extract_dimension_tables, extract_fact_table, topo_order,
 )
 from .generator import sqlgen
 from .model import DimTime, Env, Fact, PopulationMode, TenantId
-
-log = logging.getLogger(__name__)
 from .populate.dimension import dimension_population_df
 from .populate.fact import fact_population_df
+
+log = logging.getLogger(__name__)
 
 
 class ManifestConflict(RuntimeError):
@@ -95,6 +114,9 @@ class Engine:
         # (populate/fact.py docstring; shape in functions/skew.py)
         self.salt_tenant_buckets = salt_tenant_buckets
         self.sources: dict[str, DataFrame] = {}
+        # serializes every sidecar read-modify-write (_update_json): the
+        # DAG's worker threads share the sidecar files and their ".tmp"
+        self._sidecar_lock = threading.Lock()
         os.makedirs(storage_path, exist_ok=True)
 
     # --- sources -----------------------------------------------------------
@@ -104,10 +126,13 @@ class Engine:
         self.sources[name] = cast_to_declared(df, table) if table else df
 
     def load_sources(self, sf_dir: str) -> None:
-        for t in self.env.tables:
-            path = f"{sf_dir}/{t.name}.parquet"
-            if os.path.exists(path):
-                self.register_source(t.name, self.spark.read.parquet(path))
+        """Register ``<sf_dir>/<table>.parquet`` for every declared table
+        that has one, through :func:`catalog.load_catalog`: cast to the
+        declared schema, with the footer schema memoized per file, so a
+        repeat load of unchanged files runs no Spark job."""
+        present = [t for t in self.env.tables
+                   if os.path.exists(f"{sf_dir}/{t.name}.parquet")]
+        self.sources.update(load_catalog(self.spark, sf_dir, present))
 
     def parent_join_pairs(self) -> list[tuple]:
         """(child_table, child_cols, parent_table, parent_cols) for every
@@ -117,7 +142,6 @@ class Engine:
         composite FKs: the bucketer must bucket on ALL columns of a
         composite key or the promised no-Exchange join silently shuffles
         anyway (ADVICE r05)."""
-        from .extractor import extract_all_dimension_tables
         from .model import ForeignKey
 
         pairs = []
@@ -1071,6 +1095,22 @@ class Engine:
             json.dump(obj, fh, indent=2)
         os.replace(tmp, path)
 
+    def _update_json(self, path: str, edit) -> None:
+        """The one read-modify-write of a sidecar: under the engine's
+        sidecar lock, ``edit`` mutates the parsed dict in place (``{}``
+        when the file is absent) and returns False to skip the rewrite.
+        All writers of a sidecar share its ``path + ".tmp"``
+        (:meth:`_atomic_json`), so two unlocked writers — two tables of
+        one DAG committing at once — would lose entries or collide on
+        the tmp file."""
+        with self._sidecar_lock:
+            obj = {}
+            if os.path.exists(path):
+                with open(path) as fh:
+                    obj = json.load(fh)
+            if edit(obj) is not False:
+                self._atomic_json(path, obj)
+
     @property
     def _rename_windows_path(self) -> str:
         return os.path.join(self.storage, "_rename_windows.json")
@@ -1082,15 +1122,14 @@ class Engine:
         return {}
 
     def _stamp_rename_window(self, table: str, window: tuple) -> None:
-        stamps = self._rename_window_stamps()
-        stamps.setdefault(table, []).append(
-            [self._iso(window[0]), self._iso(window[1])])
-        self._atomic_json(self._rename_windows_path, stamps)
+        stamp = [self._iso(window[0]), self._iso(window[1])]
+        self._update_json(self._rename_windows_path,
+                          lambda stamps: stamps.setdefault(table, [])
+                          .append(stamp))
 
     def _clear_rename_windows(self, table: str) -> None:
-        stamps = self._rename_window_stamps()
-        if stamps.pop(table, None) is not None:
-            self._atomic_json(self._rename_windows_path, stamps)
+        self._update_json(self._rename_windows_path,
+                          lambda stamps: stamps.pop(table, None) is not None)
 
     # --- micro-batch tag ledger (r18) ---------------------------------------
     # Exactly-once for streaming fact appends: each micro-batch's content
@@ -1138,25 +1177,20 @@ class Engine:
         _write_full calls it for the rename-mode first-batch full write)."""
         if self.commit_mode == "manifest":
             return
-        tags = {}
-        if os.path.exists(self._batch_tags_path):
-            with open(self._batch_tags_path) as fh:
-                tags = json.load(fh)
-        per = tags.setdefault(table, [])
-        if tag not in per:
-            per.append(tag)
-            tags[table] = self._bound_tags(per)
-            self._atomic_json(self._batch_tags_path, tags)
+
+        def stamp(tags: dict) -> bool:
+            per = tags.setdefault(table, [])
+            if tag in per:
+                return False
+            tags[table] = self._bound_tags(per + [tag])
+            return True
+        self._update_json(self._batch_tags_path, stamp)
 
     def _clear_batch_tags(self, table: str) -> None:
         if self.commit_mode == "manifest":
             return            # the full publish writes batch_tags itself
-        if not os.path.exists(self._batch_tags_path):
-            return
-        with open(self._batch_tags_path) as fh:
-            tags = json.load(fh)
-        if tags.pop(table, None) is not None:
-            self._atomic_json(self._batch_tags_path, tags)
+        self._update_json(self._batch_tags_path,
+                          lambda tags: tags.pop(table, None) is not None)
 
     # --- watermarks --------------------------------------------------------
 
@@ -1176,21 +1210,20 @@ class Engine:
         run_fact).  Unbounded refreshes (upper=None) store nothing."""
         if upper is None:
             return
-        wm = self.watermarks()
-        wm[table] = upper.isoformat() if hasattr(upper, "isoformat") else str(upper)
-        self._atomic_json(self._wm_path, wm)
+        iso = upper.isoformat() if hasattr(upper, "isoformat") else str(upper)
+        self._update_json(self._wm_path, lambda wm: wm.update({table: iso}))
 
     def _commit_watermark(self, table: str, upper) -> None:
         """Watermark update + inflight-marker clear in ONE atomic write
         (r16 review): they live in the same file, and a crash between
         two separate writes left a stale inflight marker that bricked
         the next incremental run after a fully successful append."""
-        wm = self.watermarks()
-        if upper is not None:
-            wm[table] = (upper.isoformat()
-                         if hasattr(upper, "isoformat") else str(upper))
-        wm.get("__inflight__", {}).pop(table, None)
-        self._atomic_json(self._wm_path, wm)
+        def commit(wm: dict) -> None:
+            if upper is not None:
+                wm[table] = (upper.isoformat()
+                             if hasattr(upper, "isoformat") else str(upper))
+            wm.get("__inflight__", {}).pop(table, None)
+        self._update_json(self._wm_path, commit)
 
     # Incremental fact appends are not atomic with the watermark update:
     # a crash between the append's job commit and _store_watermark would
@@ -1205,24 +1238,25 @@ class Engine:
         return self.watermarks().get("__inflight__", {})
 
     def _mark_inflight(self, table: str, clear: bool = False) -> None:
-        wm = self.watermarks()
-        inf = wm.setdefault("__inflight__", {})
-        if clear:
-            inf.pop(table, None)
-        else:
-            # manifest mode records the pre-append manifest version: on
-            # resume, an unchanged version proves the append never became
-            # visible (crash before the pointer flip) and the retry is
-            # safe — only a version that DID advance means the append
-            # committed without its watermark (double-count risk).
-            # rename mode can't tell the two apart (files appear as they
-            # land), so it stores an opaque True and always refuses.
-            if self.commit_mode == "manifest":
-                m = self._read_manifest(table)
-                inf[table] = m["version"] if m else 0
+        # manifest mode records the pre-append manifest version: on
+        # resume, an unchanged version proves the append never became
+        # visible (crash before the pointer flip) and the retry is safe —
+        # only a version that DID advance means the append committed
+        # without its watermark (double-count risk).  rename mode can't
+        # tell the two apart (files appear as they land), so it stores an
+        # opaque True and always refuses.
+        marker = True
+        if not clear and self.commit_mode == "manifest":
+            m = self._read_manifest(table)
+            marker = m["version"] if m else 0
+
+        def mark(wm: dict) -> None:
+            inf = wm.setdefault("__inflight__", {})
+            if clear:
+                inf.pop(table, None)
             else:
-                inf[table] = True
-        self._atomic_json(self._wm_path, wm)
+                inf[table] = marker
+        self._update_json(self._wm_path, mark)
 
     def _inflight_retry_is_safe(self, table: str,
                                 window: tuple | None = None,
@@ -1311,35 +1345,90 @@ class Engine:
         append a no-op, so foreachBatch retries and checkpoint-lineage
         replays are exactly-once (see :meth:`_write_append`).  Dimension
         appends need no tag — their anti-join is replay-idempotent."""
-        # a DIRECT run_fact call repopulates dimensions: the memo only
-        # persists across the facts of one run() batch (r16 review — a
-        # long-lived Engine's second incremental run_fact previously
-        # skipped dimension population and misattributed new members to
-        # the missing-FK sentinel)
-        if not getattr(self, "_batch_dim_memo", False) or                 not hasattr(self, "_populated_this_run"):
-            self._populated_this_run = set()
-        from .extractor import extract_all_dimension_tables
+        return self._run_dag([fact], mode, time_upper, time_lower, resume,
+                             batch_tag)[0]
 
+    def run(self, mode: PopulationMode = PopulationMode.FULL, time_upper=None,
+            time_lower=None) -> list[str]:
+        """Populate every persistent fact (and all dimensions) as one DAG;
+        returns the fact table names in env order."""
+        return self._run_dag([f for f in self.env.facts if f.persistent],
+                             mode, time_upper, time_lower)
+
+    def _resume_lower(self, fact: Fact, mode: PopulationMode, time_lower,
+                      resume: bool):
+        """The window's lower bound for ``fact``: ``time_lower``, or on an
+        incremental resume without one, the fact table's stored
+        watermark."""
         if resume and mode == PopulationMode.INCREMENTAL and time_lower is None:
             stored = self.watermarks().get(extract_fact_table(self.env, fact).name)
             if stored is not None:
                 import datetime as _dt
 
-                time_lower = _dt.datetime.fromisoformat(stored)
+                return _dt.datetime.fromisoformat(stored)
+        return time_lower
 
-        for dim_fact, dim_table in extract_all_dimension_tables(self.env, fact):
-            if self.env.find_table(dim_table.name) is not None:
-                continue  # pre-existing (DimId) table, not ours to build
-            if dim_table.name in self._populated_this_run:
-                continue
-            self._run_dimension(dim_fact, dim_table.name, mode,
-                                time_upper, time_lower)
-            self._populated_this_run.add(dim_table.name)
-        produced = self._run_fact_table(fact, mode, time_upper, time_lower,
-                                        batch_tag=batch_tag)
-        # watermark + inflight-clear as ONE atomic write (r16 review)
-        self._commit_watermark(produced, time_upper)
+    def _run_dag(self, facts: list[Fact], mode: PopulationMode, time_upper,
+                 time_lower, resume: bool = True,
+                 batch_tag: str | None = None) -> list[str]:
+        """Populate ``facts`` and the derived dimensions they need as one
+        DAG (module docstring): a node per derived table, the edges of
+        :func:`extract_dependencies` between them.  A dimension is built
+        once, from the first fact (in ``facts`` order) that needs it and
+        in that fact's window.  Returns the fact table names."""
+        steps: dict[str, partial] = {}
+        deps: dict[str, list[str]] = {}
+        produced = []
+        for fact in facts:
+            lower = self._resume_lower(fact, mode, time_lower, resume)
+            for dim_fact, dim in extract_all_dimension_tables(self.env, fact):
+                if (self.env.find_table(dim.name) is None
+                        and dim.name not in steps):
+                    steps[dim.name] = partial(self._run_dimension, dim_fact,
+                                              dim.name, mode, time_upper,
+                                              lower)
+            name = extract_fact_table(self.env, fact).name
+            steps[name] = partial(self._run_fact_table, fact, mode,
+                                  time_upper, lower, batch_tag)
+            deps.update(extract_dependencies(self.env, fact))
+            produced.append(name)
+        self._run_steps(steps, {t: [d for d in deps.get(t, ()) if d in steps]
+                                for t in steps})
         return produced
+
+    def _run_steps(self, steps: dict, deps: dict[str, list[str]]) -> None:
+        """Run each step once every step it depends on has succeeded,
+        independent steps at the same time, one worker thread per step.
+        After the first failure nothing new starts; steps in flight
+        finish, then the failure first in topo order is re-raised."""
+        if not steps:
+            return
+        order = topo_order(deps)
+        waiting = {t: set(deps[t]) for t in order}
+        running, failed = {}, {}
+        with ThreadPoolExecutor(max_workers=len(order),
+                                thread_name_prefix="ringo-dag") as pool:
+            while True:
+                ready = [] if failed else [t for t in order
+                                           if t in waiting and not waiting[t]]
+                for t in ready:
+                    del waiting[t]
+                    # local properties (job group, scheduler pool) are
+                    # copied here, in the submitting thread
+                    step = inheritable_thread_target(self.spark)(steps[t])
+                    running[pool.submit(step)] = t
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    t = running.pop(fut)
+                    if fut.exception() is not None:
+                        failed[t] = fut.exception()
+                        continue
+                    for rest in waiting.values():
+                        rest.discard(t)
+        if failed:
+            raise failed[min(failed, key=order.index)]
 
     def _run_dimension(self, fact: Fact, dim_table: str, mode: PopulationMode,
                        time_upper, time_lower) -> None:
@@ -1360,9 +1449,7 @@ class Engine:
 
     def _run_fact_table(self, fact: Fact, mode: PopulationMode,
                         time_upper, time_lower,
-                        batch_tag: str | None = None) -> str:
-        from .extractor import extract_all_dimension_tables
-
+                        batch_tag: str | None = None) -> None:
         derived = extract_fact_table(self.env, fact)
         dim_names = {t.name for _, t in extract_all_dimension_tables(self.env, fact)
                      if self.env.find_table(t.name) is None}
@@ -1415,27 +1502,8 @@ class Engine:
             self._write_full(df, derived.name, partition_by,
                              batch_tag=batch_tag)
             self._mark_inflight(derived.name, clear=True)  # full run heals
-        return derived.name
-
-    def run(self, mode: PopulationMode = PopulationMode.FULL, time_upper=None,
-            time_lower=None) -> list[str]:
-        """Populate every persistent fact (and all dimensions) in topo order."""
-        # one dim-population memo across THIS batch's facts (facts
-        # sharing a dim build it once); direct run_fact calls outside a
-        # batch reset it per call — see run_fact
-        self._populated_this_run = set()
-        self._batch_dim_memo = True
-        try:
-            return self._run_batch(mode, time_upper, time_lower)
-        finally:
-            self._batch_dim_memo = False
-
-    def _run_batch(self, mode, time_upper, time_lower) -> list[str]:
-        out = []
-        for fact in self.env.facts:
-            if fact.persistent:
-                out.append(self.run_fact(fact, mode, time_upper, time_lower))
-        return out
+        # watermark + inflight-clear as ONE atomic write (r16 review)
+        self._commit_watermark(derived.name, time_upper)
 
     def compact_fact(self, fact: Fact) -> None:
         """Re-aggregate the persisted fact table to one row per grain key.
@@ -1529,8 +1597,6 @@ class Engine:
         """Names of every dim/fact table a full run materializes, in topo
         order (dims before the facts that reference them — FK-friendly
         load order for a relational sink)."""
-        from .extractor import extract_all_dimension_tables
-
         names: list[str] = []
         for fact in self.env.facts:
             if not fact.persistent:

@@ -50,7 +50,7 @@ from ..catalog import read_parquet_stable as _rps
 from .. import index_lifecycle as _ilc
 from ..functions.localrel import literal_df
 from .deletion import STATS_SIDECAR
-from .textfn import cosine, cosine_pre, dot, sql_cosine, vnorm
+from .textfn import cosine, cosine_pre, sql_cosine, vnorm
 
 TOP_K = 10
 N_QUERIES = 5
@@ -2607,25 +2607,39 @@ def append_to_pq_index(spark: SparkSession, index_path: str,
     return _admit_batch(spark, index_path, batch_emb, land_data)
 
 
-def _adc_cosine(q_col, codes_col, cb: dict):
+def _sql_dot(a: str, b: str) -> str:
+    """:func:`textfn.dot` spelled in Spark SQL: the same left-to-right
+    double fold, so it analyzes to the same expression."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
+            f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (x, y) -> x + y)")
+
+
+def _adc_cosine(q_col: str, codes_col: str, cb: dict):
     """Codegen'd asymmetric-distance scoring: per subspace, look the
     candidate's code up in the literal codebook and fold dot / norm
     terms in m order (matching the oracle's ordered list_reduce).
     Codes that dropped out during training never appear in any codes
-    array, so their zero placeholders are unreachable."""
+    array, so their zero placeholders are unreachable.
+
+    The whole score is ONE SQL expression, so building it is one JVM
+    call: one ``F.lit`` per codebook value and one lambda per fold cost
+    ~9k py4j round trips per construction.  ``repr`` is the shortest
+    string that parses back to the same double, so each constant-folded
+    codebook literal is bit-identical to the per-value form."""
     zero = [0.0] * PQ_DSUB
-    dots, n2 = None, None
+    dots, n2 = [], []
     for m in range(PQ_M):
-        code = F.element_at(codes_col, m + 1)
-        cvecs = F.array(*[
-            F.array(*[F.lit(float(x)) for x in cb.get((m, cid), zero)])
-            for cid in range(PQ_K)])
-        cm = F.element_at(cvecs, code + 1)
-        d = dot(_subvec(q_col, m), cm)
-        nn = dot(cm, cm)
-        dots = d if dots is None else dots + d
-        n2 = nn if n2 is None else n2 + nn
-    return F.round(dots / (F.sqrt(dot(q_col, q_col)) * F.sqrt(n2)), 6)
+        book = "array(" + ", ".join(
+            "array(" + ", ".join(f"{float(x)!r}D"
+                                 for x in cb.get((m, cid), zero)) + ")"
+            for cid in range(PQ_K)) + ")"
+        cm = f"element_at({book}, element_at({codes_col}, {m + 1}) + 1)"
+        sub = f"slice({q_col}, {m * PQ_DSUB + 1}, {PQ_DSUB})"
+        dots.append(_sql_dot(sub, cm))
+        n2.append(_sql_dot(cm, cm))
+    return F.expr(f"round(({' + '.join(dots)}) / "
+                  f"(sqrt({_sql_dot(q_col, q_col)}) * "
+                  f"sqrt({' + '.join(n2)})), 6)")
 
 
 def ann_ivf_pq_df(spark: SparkSession, sf_dir: str,
@@ -2676,7 +2690,7 @@ def ann_ivf_pq_df(spark: SparkSession, sf_dir: str,
     short = (idx.join(F.broadcast(probes), "cell")
              .where(F.col("q_id") != F.col("vec_id"))
              .select("q_id", "q_emb", F.col("vec_id").alias("n_id"),
-                     _adc_cosine(F.col("q_emb"), F.col("codes"), cb)
+                     _adc_cosine("q_emb", "codes", cb)
                      .alias("adc_cosine"))
              .withColumn("arank", F.row_number().over(aw))
              .where(F.col("arank") <= rerank)

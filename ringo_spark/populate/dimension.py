@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -65,11 +66,12 @@ DIM_ID_GATE_CONF_KEY = "ringo.dimIdSingleSortMaxBytes"
 
 
 def _plan_size_estimate(df: DataFrame) -> int | None:
-    """Catalyst's sizeInBytes estimate for ``df`` (no job), or None."""
+    """Catalyst's sizeInBytes estimate for ``df`` (no job), or None when
+    the JVM cannot compute plan statistics."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
-    except Exception:
+    except Py4JJavaError:
         return None
 
 
@@ -107,11 +109,8 @@ def _partitioned_row_numbers(rows: DataFrame, dim_cols: list[str],
     # counts job and the final projection would fail the population
     # with no lineage to recompute.  local[32] (tests, bench) has no
     # checkpoint dir and keeps the cheap local form.
-    try:
-        has_ckpt_dir = bool(spark.sparkContext._jsc.sc()
-                            .getCheckpointDir().isDefined())
-    except Exception:
-        has_ckpt_dir = False
+    has_ckpt_dir = bool(spark.sparkContext._jsc.sc()
+                        .getCheckpointDir().isDefined())
     part = (part.checkpoint(eager=True) if has_ckpt_dir
             else part.localCheckpoint(eager=True))
     counts = (part.groupBy("__pid")

@@ -175,9 +175,8 @@ class StreamingPipeline:
 
         tag = batch_fingerprint(batch_df, list(batch_df.columns))
         # per-batch bounds: the whole batch (time filtering already happened
-        # upstream in the stream); use open bounds.  run_fact repopulates
-        # dimensions per direct call since r16 (the old private
-        # _populated_this_run reset workaround is no longer needed).
+        # upstream in the stream); use open bounds.  Every run_fact call
+        # builds its fact's dimensions before the fact (one DAG per call).
         eng.run_fact(fact, PopulationMode.INCREMENTAL,
                      time_upper=None, time_lower=None, resume=False,
                      batch_tag=tag)

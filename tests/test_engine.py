@@ -1258,3 +1258,108 @@ def test_compaction_aborts_when_manifest_vanishes(spark, tmp_path):
         Engine._write_stage = real
     # nothing staged leaked on the abort path
     assert [d for d in os.listdir(eng.storage) if "__stage_" in d] == []
+
+
+ORDERS_DIMS = {"dim_order_status", "dim_order_priority", "dim_line_status"}
+ORDERS_FACTS = ("fact_orders_by_day", "fact_lineitem_by_day")
+
+
+def test_independent_dimensions_run_concurrently(engine, monkeypatch):
+    """``run`` executes the refresh's dependency DAG: the three
+    ORDERS_ENV dimensions depend on nothing derived, so all three are in
+    their full write at the same time.  A serial loop never gets the
+    three through the barrier (it breaks after its timeout)."""
+    import threading
+
+    barrier = threading.Barrier(len(ORDERS_DIMS), timeout=30)
+    real = Engine._write_full
+
+    def spy(self, df, table, *args, **kwargs):
+        if table in ORDERS_DIMS:
+            barrier.wait()
+        return real(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Engine, "_write_full", spy)
+    assert engine.run(PopulationMode.FULL, T_FAR) == list(ORDERS_FACTS)
+    assert all(engine.table_exists(t) for t in ORDERS_DIMS | set(ORDERS_FACTS))
+
+
+def test_dimension_failure_stops_the_dag(engine, monkeypatch):
+    """A dimension that raises fails ``run`` with its own error: no fact
+    that depends on it starts (both facts read dim_order_status), the
+    dimensions already in flight finish their swap, no staging dir is
+    left behind and every sidecar still parses."""
+    real = Engine._write_full
+
+    def failing(self, df, table, *args, **kwargs):
+        if table == "dim_order_status":
+            raise RuntimeError("injected dimension failure")
+        return real(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Engine, "_write_full", failing)
+    with pytest.raises(RuntimeError, match="injected dimension failure"):
+        engine.run(PopulationMode.FULL, T_FAR)
+    assert not any(engine.table_exists(t) for t in ORDERS_FACTS)
+    assert not engine.table_exists("dim_order_status")
+    assert engine.table_exists("dim_order_priority")
+    assert engine.table_exists("dim_line_status")
+    left = os.listdir(engine.storage)
+    assert [d for d in left if d.endswith(("__staging", "__old"))] == []
+    for name in left:
+        if name.endswith(".json"):
+            with open(os.path.join(engine.storage, name)) as fh:
+                json.load(fh)
+    assert set(engine.watermarks()) == {"dim_order_priority",
+                                        "dim_line_status"}
+
+
+def test_sidecar_writers_on_distinct_tables_lose_nothing(spark, tmp_path):
+    """Tables of one DAG commit from different threads: 8 threads each
+    stamping a watermark and an inflight marker for tables of their own
+    leave every entry in the shared sidecar."""
+    import sys
+    import threading
+
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "wh"))
+    start = threading.Barrier(8, timeout=30)
+    errors = []
+
+    def writer(i: int) -> None:
+        try:
+            start.wait()
+            for r in range(20):
+                eng._store_watermark(f"t{i}_{r}", T_FAR)
+                eng._mark_inflight(f"t{i}_{r}")
+        except Exception as e:       # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)      # interleave the read-modify-writes
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    names = {f"t{i}_{r}" for i in range(8) for r in range(20)}
+    wm = eng.watermarks()
+    assert set(wm) - {"__inflight__"} == names
+    assert set(wm["__inflight__"]) == names
+
+
+def test_reloading_sources_runs_no_spark_job(spark, tmp_path):
+    """``load_sources`` goes through the memoized catalog: loading the
+    same files again reads their schemas from the memo, with no Spark
+    job."""
+    from tests.fixtures import count_spark_jobs
+
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "wh"))
+    eng.load_sources("/root/testdata/sf0.001")
+    with count_spark_jobs(spark) as c:
+        eng.load_sources("/root/testdata/sf0.001")
+    assert c["jobs"] == 0
+    assert set(eng.sources) == {"orders", "lineitem", "customer"}
