@@ -117,13 +117,8 @@ def main(argv=None) -> int:
     p.add_argument("--mode", default="full", choices=["full", "incremental"])
     p.add_argument("--time-upper", help="ISO timestamp upper bound")
     p.add_argument("--time-lower", help="ISO timestamp lower bound (incremental)")
-    p.add_argument("--commit-mode", default="rename",
-                   choices=["rename", "manifest"],
-                   help="table publication protocol: POSIX staging-dir "
-                        "rename, or object-store-safe manifest pointers "
-                        "(atomic refreshes AND appends, time travel)")
     p.add_argument("--keep-versions", type=int, default=1,
-                   help="manifest mode: how many published snapshots stay "
+                   help="how many published snapshots of each table stay "
                         "readable (>1 enables read_table(version=N))")
     p.add_argument("--salt-tenant-buckets", type=int, metavar="N", default=0,
                    help="route TenantId-grain fact aggregations through "
@@ -176,8 +171,7 @@ def main(argv=None) -> int:
     from .engine import Engine
 
     spark = get_spark("ringo-cli")
-    eng = Engine(spark, env, args.storage, commit_mode=args.commit_mode,
-                 keep_versions=args.keep_versions,
+    eng = Engine(spark, env, args.storage, keep_versions=args.keep_versions,
                  salt_tenant_buckets=args.salt_tenant_buckets)
     eng.load_sources(args.data)
     if args.bucket_sources:

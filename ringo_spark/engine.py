@@ -26,15 +26,20 @@ Execution model (Spark-first):
 - Failure rule: when a table raises, nothing that depends on it starts,
   nothing else new starts, and tables already in flight finish; the
   first failure in topo order is then re-raised.  Sidecar state
-  (watermarks, inflight journal, window and batch-tag ledgers) is
-  rewritten under one per-engine lock; manifest commits are serialized
-  per table by the manifest flock.
-- Full refresh writes to a staging directory then atomically renames over
-  the live one (the reference's ``{{suff}}`` staging-table swap,
-  Generator/Internal.hs:38-41).
-- Incremental refresh appends the watermark window; the watermark store is
-  a JSON file next to the tables.  Dimension increments anti-join the
-  existing table and offset surrogate ids.
+  (watermarks and the inflight journal) is rewritten under one
+  per-engine lock; manifest commits are serialized per table by the
+  manifest flock.
+- Every table publishes through its manifest (the reference's
+  ``{{suff}}`` staging-table swap, Generator/Internal.hs:38-41): a write
+  lands in a stage dir, is promoted to an immutable ``<table>__vN`` dir,
+  and becomes visible when ``<table>.manifest.json`` flips to it — one
+  small atomic replace, so a reader sees the old table or the new one,
+  never neither, on a POSIX filesystem and on an object store alike.
+  Reads resolve the manifest and use the schema it recorded.
+- Incremental refresh appends the watermark window as a new dir of the
+  same snapshot (same pointer flip); the watermark store is a JSON file
+  next to the tables.  Dimension increments anti-join the existing table
+  and offset surrogate ids.
 - Fact tables are written partitioned by a derived day column
   (``<time>_day``) when ``partition_facts`` — the Spark analogue of the
   reference's time-column index (Create.hs:87-98): partition pruning at
@@ -75,30 +80,27 @@ class ManifestConflict(RuntimeError):
     read and its publish; the caller re-reads and retries."""
 
 
+class LegacyTableDir(RuntimeError):
+    """``<storage>/<table>/`` exists but ``<table>.manifest.json`` does
+    not: the table was published by the retired rename protocol.  The
+    engine neither reads nor replaces such a dir."""
+
+
 class Engine:
     def __init__(self, spark: SparkSession, env: Env, storage_path: str,
                  partition_facts: bool = False,
                  count_distinct_mode: str = "sketch",
-                 commit_mode: str = "rename",
+                 commit_mode: str = "manifest",
                  keep_versions: int = 1,
                  salt_tenant_buckets: int = 0):
-        # commit_mode picks the full-refresh publication protocol:
-        #   "rename"   — staging dir renamed over live (atomic on one
-        #                POSIX filesystem; the reference's {{suff}} swap,
-        #                Generator/Internal.hs:38-41).
-        #   "manifest" — each refresh writes an immutable versioned dir
-        #                and atomically flips a small manifest pointer.
-        #                On S3/GCS rename is copy+delete (not atomic), but
-        #                a single small-object PUT is — so the manifest is
-        #                the object-store-safe equivalent of the swap.
+        # commit_mode is ignored; removed once perfbench stops passing it
         if commit_mode not in ("rename", "manifest"):
             raise ValueError(f"unknown commit_mode: {commit_mode!r}")
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
-        self.commit_mode = commit_mode
-        # manifest mode only: how many published versions stay readable.
-        # keep_versions > 1 enables time-travel (`read_table(version=N)`) —
-        # pin a training run to a snapshot while refreshes continue.
+        # how many published versions stay readable.  keep_versions > 1
+        # enables time-travel (`read_table(version=N)`) — pin a training
+        # run to a snapshot while refreshes continue.
         self.keep_versions = keep_versions
         # count_distinct_mode defaults to "sketch" for persisted tables:
         # the reference stores mergeable HLL register state in the fact
@@ -233,19 +235,6 @@ class Engine:
             path_root=os.path.join(self.storage, "_bucketed"))
         return sorted({n for p in pairs for n in (p[0], p[2])})
 
-    # --- storage -----------------------------------------------------------
-
-    def _path(self, table: str, staging: bool = False) -> str:
-        return os.path.join(self.storage, table + ("__staging" if staging else ""))
-
-    def _recover_swap(self, table: str) -> None:
-        """Heal a swap that crashed between rename-aside and rename-in:
-        the previous table sits at ``<table>__old`` with no live dir."""
-        live = self._path(table)
-        old = live + "__old"
-        if not os.path.exists(live) and os.path.exists(old):
-            os.rename(old, live)
-
     # --- manifest-pointer commits (object-store-safe) ----------------------
 
     def _manifest_path(self, table: str) -> str:
@@ -344,8 +333,19 @@ class Engine:
         os.close(fd)
 
     def _read_manifest(self, table: str) -> dict | None:
+        """The table's manifest, or None when the table was never
+        published.  A bare ``<table>/`` dir beside a missing manifest is
+        a table the rename protocol wrote: treating it as absent would
+        turn an incremental run into a silent full rebuild and strand
+        the dir beside the new ``__v1`` forever, so it raises."""
         mp = self._manifest_path(table)
         if not os.path.exists(mp):
+            legacy = os.path.join(self.storage, table)
+            if os.path.isdir(legacy):
+                raise LegacyTableDir(
+                    f"{table}: {legacy} was published by the retired "
+                    "rename protocol and has no manifest — run a full "
+                    "refresh into a fresh storage dir")
             return None
         with open(mp) as fh:
             return json.load(fh)
@@ -585,11 +585,11 @@ class Engine:
     _STAGE_ORPHAN_AGE_SECS = 3600.0   # crashed-writer stage dirs
 
     def _write_stage(self, df: DataFrame, table: str, partition_by=()) -> str:
-        """Write the manifest-mode data payload into a writer-unique
-        stage dir (pid + random token) — promoted to its ``__vN`` name
-        under the publish lock.  Version-named dirs must never be write
-        targets: two writers computing the same next version would
-        overwrite each other's files before either publish."""
+        """Write the data payload into a writer-unique stage dir (pid +
+        random token) — promoted to its ``__vN`` name under the publish
+        lock.  Version-named dirs must never be write targets: two
+        writers computing the same next version would overwrite each
+        other's files before either publish."""
         stage = f"{table}__stage_{os.getpid()}_{os.urandom(4).hex()}"
         w = df.write.mode("overwrite")
         if partition_by:
@@ -681,54 +681,39 @@ class Engine:
                 f"(live={m['version']}, keep_versions={self.keep_versions})")
         return [os.path.join(self.storage, d) for d in dirs]
 
-    def _live_dir(self, table: str) -> str:
-        """Current readable directory — rename mode only (manifest
-        snapshots are dir *lists*; use :meth:`_snapshot_paths`)."""
-        self._recover_swap(table)
-        return self._path(table)
-
     def table_exists(self, table: str) -> bool:
-        if self.commit_mode == "manifest":
-            return self._read_manifest(table) is not None
-        self._recover_swap(table)
-        return os.path.exists(self._path(table))
+        return self._read_manifest(table) is not None
 
     def read_table(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the live table, or (manifest mode, ``keep_versions`` > 1)
-        time-travel to a still-retained published snapshot — e.g. pin a
-        training run to version N while refreshes and appends move the
-        pointer forward."""
-        if self.commit_mode == "manifest":
-            # ONE manifest read resolves both the dir list and the
-            # snapshot schema — a second read could land after a
-            # concurrent publish and pair version V's dirs with
-            # version V+1's schema (or a dropped table's None).
-            m = self._read_manifest(table)
-            paths = self._snapshot_paths(table, version, m=m)
-            # schema-on-manifest: the publish recorded the snapshot's
-            # authoritative schema, so mixed-schema snapshots (an append
-            # that ADDED columns) read correctly — older files null-fill
-            # the missing columns under the explicit reader schema.
-            # This is the scale-safe alternative to mergeSchema, which
-            # reads EVERY file footer (a non-starter on a 100 TB table);
-            # pre-schema manifests fall back to footer inference.
-            v = m["version"] if version is None else version
-            schema_json = (m.get("schemas") or {}).get(str(v))
-            if schema_json is not None:
-                from pyspark.sql import types as T
+        """Read the live table, or (``keep_versions`` > 1) time-travel to
+        a still-retained published snapshot — e.g. pin a training run to
+        version N while refreshes and appends move the pointer forward."""
+        # ONE manifest read resolves both the dir list and the snapshot
+        # schema — a second read could land after a concurrent publish
+        # and pair version V's dirs with version V+1's schema (or a
+        # dropped table's None).
+        m = self._read_manifest(table)
+        paths = self._snapshot_paths(table, version, m=m)
+        # schema-on-manifest: the publish recorded the snapshot's
+        # authoritative schema, so the read runs no footer-inference job
+        # and mixed-schema snapshots (an append that ADDED columns) read
+        # correctly — older files null-fill the missing columns under the
+        # explicit reader schema.  This is the scale-safe alternative to
+        # mergeSchema, which reads EVERY file footer (a non-starter on a
+        # 100 TB table); pre-schema manifests fall back to footer
+        # inference.
+        v = m["version"] if version is None else version
+        schema_json = (m.get("schemas") or {}).get(str(v))
+        if schema_json is not None:
+            from pyspark.sql import types as T
 
-                return (self.spark.read
-                        .schema(T.StructType.fromJson(json.loads(schema_json)))
-                        .parquet(*paths))
-            return self.spark.read.parquet(*paths)
-        if version is not None:
-            raise ValueError("time-travel reads need commit_mode='manifest'")
-        return self.spark.read.parquet(self._live_dir(table))
+            return (self.spark.read
+                    .schema(T.StructType.fromJson(json.loads(schema_json)))
+                    .parquet(*paths))
+        return self.spark.read.parquet(*paths)
 
     def table_versions(self, table: str) -> list[int]:
         """Retained (readable) versions, oldest first; [] when absent."""
-        if self.commit_mode != "manifest":
-            return [1] if self.table_exists(table) else []
         m = self._read_manifest(table)
         if m is None:
             return []
@@ -739,17 +724,11 @@ class Engine:
                     preserve_windows: bool = False,
                     expected_input_version: int | None = None,
                     batch_tag: str | None = None) -> None:
-        """Crash-safe full-refresh publication, per ``commit_mode``.
-
-        rename: the previous live directory is renamed *aside* before
-        staging is renamed in, so a crash at any point leaves either the
-        old table or the new one readable — never neither.  The aside copy
-        is deleted last (and reclaimed on the next swap if the delete
-        itself crashed).
-
-        manifest: the refresh lands in an immutable ``<table>__vN`` dir;
+        """Crash-safe full-refresh publication: the refresh lands in a
+        stage dir that is promoted to an immutable ``<table>__vN`` dir;
         the manifest pointer flips only after the write completes, then
-        stale versions are garbage-collected.
+        stale versions are garbage-collected.  A crash at any point
+        leaves the old snapshot or the new one readable — never neither.
 
         ``expected_input_version`` (compaction only, ADVICE r16): a full
         refresh whose payload was DERIVED from a specific published
@@ -759,73 +738,27 @@ class Engine:
         the compacted snapshot.  The CAS loop's own retry-on-conflict is
         WRONG for such writers, so a version advance aborts with
         ManifestConflict and the caller reruns over the new snapshot."""
-        if self.commit_mode == "manifest":
-            stage = self._write_stage(df, table, partition_by)
-            try:
-                self._full_manifest_cas(df, table, stage, absorbed,
-                                        expected_input_version,
-                                        preserve_windows, batch_tag)
-            except BaseException:
-                # same stage-leak rule as _write_append: any raise after
-                # the payload staged (version-advance abort, CAS
-                # exhaustion) must reclaim the staged copy (ADVICE r16)
-                shutil.rmtree(os.path.join(self.storage, stage),
-                              ignore_errors=True)
-                raise
-            return
-        staging, live = self._path(table, True), self._path(table)
-        old = live + "__old"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(staging)
-        if batch_tag is not None:
-            # inflight bracket around the tagged first-batch full write
-            # (ADVICE r18): the tag sidecar lands only AFTER the live
-            # rename below, so a crash in between left committed data
-            # with no recorded tag and no marker — a foreachBatch replay
-            # then took the append path untagged and double-counted.
-            # With the marker, the replay's _inflight_retry_is_safe
-            # refuses loudly (tag absent + opaque rename marker), and a
-            # replay after a crash that DID reach the stamp no-op-skips
-            # on the tag and heals the marker, exactly like the
-            # bracketed append path.
-            self._mark_inflight(table)
-        self._recover_swap(table)     # heal a swap crashed before rename-in
-        if os.path.exists(old):       # leftover from a crash mid-delete
-            shutil.rmtree(old)
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(staging, live)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if not preserve_windows:
-            # a full refresh recomputes every window, so previously
-            # stamped appends no longer exist to double-count against.
-            # Compaction passes preserve_windows=True: it MERGES the
-            # stamped rows (they still exist), so the ledger must keep
-            # refusing their reruns (r16 review).  Batch tags follow the
-            # same rule (compaction merges the tagged rows; a true full
-            # refresh replaces them).
-            self._clear_rename_windows(table)
-            self._clear_batch_tags(table)
-        if batch_tag is not None:
-            # a streaming pipeline's FIRST micro-batch lands as a full
-            # write (table doesn't exist yet) — its tag must still be
-            # recorded or a later replay of that batch, arriving once the
-            # table exists, would take the append path untagged and
-            # double-count (r18)
-            self._stamp_batch_tag(table, batch_tag)
-            self._mark_inflight(table, clear=True)
+        stage = self._write_stage(df, table, partition_by)
+        try:
+            self._full_manifest_cas(df, table, stage, absorbed,
+                                    expected_input_version,
+                                    preserve_windows, batch_tag)
+        except BaseException:
+            # same stage-leak rule as _write_append: any raise after the
+            # payload staged (version-advance abort, CAS exhaustion)
+            # must reclaim the staged copy (ADVICE r16)
+            shutil.rmtree(os.path.join(self.storage, stage),
+                          ignore_errors=True)
+            raise
 
     def _full_manifest_cas(self, df: DataFrame, table: str, stage: str,
                            absorbed: list | None,
                            expected_input_version: int | None,
                            preserve_windows: bool = False,
                            batch_tag: str | None = None) -> None:
-        """The manifest-mode full-refresh publish: bounded CAS retry
-        promoting the already-staged payload (stage cleanup on raise is
-        the caller's job — see :meth:`_write_full`)."""
+        """The full-refresh publish: bounded CAS retry promoting the
+        already-staged payload (stage cleanup on raise is the caller's
+        job — see :meth:`_write_full`)."""
         for _ in range(16):    # bounded CAS retry; no data rewrite
             m = self._read_manifest(table)
             if expected_input_version is not None and \
@@ -892,31 +825,20 @@ class Engine:
         recorded for the table means the batch is fully committed — the
         append is a SKIPPED no-op (exactly-once across foreachBatch
         retries and checkpoint-lineage resets, where unbounded windows
-        can't protect: they are refused as stamps below).  Manifest mode
-        records the tag in the SAME atomic pointer flip as the data;
-        rename mode stamps a sidecar after the files land (same crash
-        exposure as its window ledger, bracketed by the inflight
-        journal).
+        can't protect: they are refused as stamps below).  The tag is
+        recorded in the SAME atomic pointer flip as the data.
 
         ``window=(lower, upper)`` stamps the dir with the time window it
         carries and REPLACES any live dirs whose recorded window the new
         one fully covers — MERGE/replaceWhere semantics on the window
-        key, manifest mode only.  A re-run of an already-committed fact
-        window (late-arriving data, a healing rerun after a crash) then
-        swaps the recomputed rows in atomically instead of double-
-        counting them (pinned by
+        key.  A re-run of an already-committed fact window (late-arriving
+        data, a healing rerun after a crash) then swaps the recomputed
+        rows in atomically instead of double-counting them (pinned by
         ``test_incremental_rerun_same_window_is_idempotent``).  Forward
         windows are disjoint from every recorded stamp, so a normal
-        incremental run is a pure append, exactly as before.  Replaced
-        dirs stay on disk while an older retained snapshot references
-        them (time travel); GC reclaims them on the usual horizon.
-        Rename mode CANNOT merge — file-level appends have no atomic
-        swap — so instead of silently double-counting it stamps each
-        windowed append in a sidecar ledger and REFUSES a rerun whose
-        window covers a recorded stamp (raising with the two honest ways
-        out: full refresh, or manifest mode — the 100 TB path — whose
-        swap-in semantics the refusal mirrors; pinned by
-        ``test_rename_mode_same_window_rerun_refuses``).
+        incremental run is a pure append.  Replaced dirs stay on disk
+        while an older retained snapshot references them (time travel);
+        GC reclaims them on the usual horizon.
         A window with an unbounded (None) upper is refused as a stamp:
         it delimits nothing, and an unbounded stamp would cover every
         other unbounded stamp (the streaming micro-batch data-loss
@@ -925,65 +847,35 @@ class Engine:
             window = None
         if batch_tag is not None and batch_tag in self._recorded_tags(table):
             return            # batch already committed: retry is a no-op
-        if self.commit_mode == "manifest":
-            # the append lands in its OWN immutable dir and the pointer
-            # flip adds it to the snapshot's dir list — appends are as
-            # atomic as full refreshes on an object store (a crashed
-            # append leaves an unreferenced orphan, never a half-visible
-            # table).  The inflight journal still brackets the
-            # append-then-watermark pair (see below): manifest atomicity
-            # covers table visibility, not the separate watermark file.
-            if self._read_manifest(table) is None:
-                raise FileNotFoundError(f"no manifest for table {table!r}")
-            stage = self._write_stage(df, table, partition_by)
-            try:
-                self._append_manifest_cas(df, table, stage, window,
-                                          batch_tag)
-            except BaseException:
-                # a refused rerun (absorbed-window overlap) or CAS
-                # exhaustion raises AFTER the stage payload landed —
-                # without this, every refusal leaks a full copy of the
-                # append on disk until some later successful publish's
-                # _gc_versions ages it out (ADVICE r16).  A successful
-                # publish renamed the stage away, so the rmtree is a
-                # no-op there.
-                shutil.rmtree(os.path.join(self.storage, stage),
-                              ignore_errors=True)
-                raise
-            return
-        if window is not None:
-            stamps = self._rename_window_stamps().get(table, [])
-            covered = [s for s in stamps if self._window_covers(window, s)]
-            if covered:
-                lo, hi = (self._iso(b) for b in window)
-                raise ValueError(
-                    f"{table}: append window [{lo}, {hi}) covers "
-                    f"{len(covered)} already-committed window(s) "
-                    f"(e.g. [{covered[0][0]}, {covered[0][1]})) — rename "
-                    "mode has no atomic swap, so re-appending would "
-                    "double-count those rows.  Re-run as a full refresh, "
-                    "or use commit_mode='manifest' for MERGE semantics")
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._live_dir(table))
-        if window is not None:
-            # stamped AFTER the files land: a crash in between leaves the
-            # ledger behind the data, but fact appends are bracketed by
-            # the inflight journal (below), which already refuses a
-            # rerun after a mid-append crash in rename mode.
-            self._stamp_rename_window(table, window)
-        if batch_tag is not None:
-            # same land-then-stamp order and crash bracket as the window
-            # ledger above
-            self._stamp_batch_tag(table, batch_tag)
+        # the append lands in its OWN immutable dir and the pointer flip
+        # adds it to the snapshot's dir list — appends are as atomic as
+        # full refreshes on an object store (a crashed append leaves an
+        # unreferenced orphan, never a half-visible table).  The inflight
+        # journal still brackets the append-then-watermark pair (see
+        # _run_fact_table): manifest atomicity covers table visibility,
+        # not the separate watermark file.
+        if self._read_manifest(table) is None:
+            raise FileNotFoundError(f"no manifest for table {table!r}")
+        stage = self._write_stage(df, table, partition_by)
+        try:
+            self._append_manifest_cas(df, table, stage, window, batch_tag)
+        except BaseException:
+            # a refused rerun (absorbed-window overlap) or CAS exhaustion
+            # raises AFTER the stage payload landed — without this, every
+            # refusal leaks a full copy of the append on disk until some
+            # later successful publish's _gc_versions ages it out (ADVICE
+            # r16).  A successful publish renamed the stage away, so the
+            # rmtree is a no-op there.
+            shutil.rmtree(os.path.join(self.storage, stage),
+                          ignore_errors=True)
+            raise
 
     def _append_manifest_cas(self, df: DataFrame, table: str, stage: str,
                              window: tuple | None,
                              batch_tag: str | None = None) -> None:
-        """The manifest-mode append publish: bounded CAS retry promoting
-        the already-staged payload dir into the next snapshot.  Factored
-        out of :meth:`_write_append` so the caller can guarantee stage
+        """The append publish: bounded CAS retry promoting the
+        already-staged payload dir into the next snapshot.  Factored out
+        of :meth:`_write_append` so the caller can guarantee stage
         cleanup on ANY raise (absorbed-window refusal, CAS exhaustion —
         ADVICE r16: each leaked a full payload copy on disk)."""
         legacy_schema_cache: dict = {}
@@ -1009,8 +901,7 @@ class Engine:
             if window is not None:
                 # windows a compaction merged away have no dir to
                 # swap — an overlapping rerun would silently double
-                # those rows, so it is refused (the rename-mode
-                # semantics; r16 review)
+                # those rows, so it is refused (r16 review)
                 hit = [s for s in m.get("absorbed", [])
                        if self._window_overlaps(window, s)]
                 if hit:
@@ -1076,20 +967,15 @@ class Engine:
         raise ManifestConflict(
             f"{table}: append lost the manifest CAS 16 times")
 
-    # --- rename-mode window ledger -----------------------------------------
-    # Manifest mode records per-dir window stamps inside the manifest;
-    # rename mode appends files into one live dir, so its stamps live in
-    # a sidecar JSON keyed by table.  A full refresh clears the table's
-    # stamps (it covers everything, same as manifest dropping old dirs).
+    # --- sidecar state ------------------------------------------------------
 
     @staticmethod
     def _atomic_json(path: str, obj) -> None:
-        """Sidecar state files (watermarks, inflight journal, window
-        ledger) rewrite via tmp + os.replace — an in-place open('w')
-        truncate-then-write leaves partial JSON after a crash/disk-full,
-        and these files ARE the crash-recovery state (r16 review; the
-        manifest pointer and index_lifecycle.flip_pointer already used
-        this pattern)."""
+        """Sidecar state files (watermarks, inflight journal) rewrite via
+        tmp + os.replace — an in-place open('w') truncate-then-write
+        leaves partial JSON after a crash/disk-full, and these files ARE
+        the crash-recovery state (r16 review; the manifest pointer and
+        index_lifecycle.flip_pointer already used this pattern)."""
         tmp = path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(obj, fh, indent=2)
@@ -1111,34 +997,13 @@ class Engine:
             if edit(obj) is not False:
                 self._atomic_json(path, obj)
 
-    @property
-    def _rename_windows_path(self) -> str:
-        return os.path.join(self.storage, "_rename_windows.json")
-
-    def _rename_window_stamps(self) -> dict:
-        if os.path.exists(self._rename_windows_path):
-            with open(self._rename_windows_path) as fh:
-                return json.load(fh)
-        return {}
-
-    def _stamp_rename_window(self, table: str, window: tuple) -> None:
-        stamp = [self._iso(window[0]), self._iso(window[1])]
-        self._update_json(self._rename_windows_path,
-                          lambda stamps: stamps.setdefault(table, [])
-                          .append(stamp))
-
-    def _clear_rename_windows(self, table: str) -> None:
-        self._update_json(self._rename_windows_path,
-                          lambda stamps: stamps.pop(table, None) is not None)
-
     # --- micro-batch tag ledger (r18) ---------------------------------------
     # Exactly-once for streaming fact appends: each micro-batch's content
-    # fingerprint is recorded with the data it produced (inside the
-    # manifest in manifest mode — atomic with the pointer flip; in this
-    # sidecar in rename mode), and _write_append skips a batch whose tag
-    # is already recorded.  Unbounded micro-batch windows are refused as
-    # window stamps (see _run_fact_table), so without tags a foreachBatch
-    # retry double-counted silently.
+    # fingerprint is recorded with the data it produced, inside the
+    # manifest (atomic with the pointer flip), and _write_append skips a
+    # batch whose tag is already recorded.  Unbounded micro-batch windows
+    # are refused as window stamps (see _run_fact_table), so without tags
+    # a foreachBatch retry double-counted silently.
 
     # Tag retention bound (ADVICE r18): without one, every micro-batch
     # grew the ledger forever — manifest size and the per-append
@@ -1158,39 +1023,9 @@ class Engine:
         appended in commit order, so the slice drops the oldest."""
         return tags[-self.BATCH_TAG_RETENTION:]
 
-    @property
-    def _batch_tags_path(self) -> str:
-        return os.path.join(self.storage, "_batch_tags.json")
-
     def _recorded_tags(self, table: str) -> list:
-        if self.commit_mode == "manifest":
-            m = self._read_manifest(table)
-            return m.get("batch_tags", []) if m else []
-        if os.path.exists(self._batch_tags_path):
-            with open(self._batch_tags_path) as fh:
-                return json.load(fh).get(table, [])
-        return []
-
-    def _stamp_batch_tag(self, table: str, tag: str) -> None:
-        """Rename-mode sidecar stamp (manifest mode records tags inside
-        the manifest publish itself — never call this there for appends;
-        _write_full calls it for the rename-mode first-batch full write)."""
-        if self.commit_mode == "manifest":
-            return
-
-        def stamp(tags: dict) -> bool:
-            per = tags.setdefault(table, [])
-            if tag in per:
-                return False
-            tags[table] = self._bound_tags(per + [tag])
-            return True
-        self._update_json(self._batch_tags_path, stamp)
-
-    def _clear_batch_tags(self, table: str) -> None:
-        if self.commit_mode == "manifest":
-            return            # the full publish writes batch_tags itself
-        self._update_json(self._batch_tags_path,
-                          lambda tags: tags.pop(table, None) is not None)
+        m = self._read_manifest(table)
+        return m.get("batch_tags", []) if m else []
 
     # --- watermarks --------------------------------------------------------
 
@@ -1238,15 +1073,12 @@ class Engine:
         return self.watermarks().get("__inflight__", {})
 
     def _mark_inflight(self, table: str, clear: bool = False) -> None:
-        # manifest mode records the pre-append manifest version: on
-        # resume, an unchanged version proves the append never became
-        # visible (crash before the pointer flip) and the retry is safe —
-        # only a version that DID advance means the append committed
-        # without its watermark (double-count risk).  rename mode can't
-        # tell the two apart (files appear as they land), so it stores an
-        # opaque True and always refuses.
-        marker = True
-        if not clear and self.commit_mode == "manifest":
+        # the marker is the pre-append manifest version: on resume, an
+        # unchanged version proves the append never became visible (crash
+        # before the pointer flip) and the retry is safe — only a version
+        # that DID advance means the append committed without its
+        # watermark (double-count risk).
+        if not clear:
             m = self._read_manifest(table)
             marker = m["version"] if m else 0
 
@@ -1267,16 +1099,16 @@ class Engine:
         rerun atomically swaps the half-committed window out instead of
         doubling it — or (tagged micro-batches, r18) when the batch's
         content tag is already recorded: the interrupted run provably
-        COMPLETED its append (tag and data commit together in manifest
-        mode), only the watermark commit was lost, and the retry's
-        _write_append will no-op-skip before this run re-commits it."""
+        COMPLETED its append (tag and data commit together), only the
+        watermark commit was lost, and the retry's _write_append will
+        no-op-skip before this run re-commits it."""
         if batch_tag is not None and batch_tag in self._recorded_tags(table):
             return True
         marker = self._inflight().get(table)
-        # bool is an int subclass: a rename-mode opaque `True` marker read
-        # by a manifest-mode engine must NOT compare equal to version 1
-        if (self.commit_mode != "manifest" or isinstance(marker, bool)
-                or not isinstance(marker, int)):
+        # bool is an int subclass: the opaque `True` marker the retired
+        # rename protocol wrote proves nothing and must NOT compare equal
+        # to version 1
+        if isinstance(marker, bool) or not isinstance(marker, int):
             return False
         m = self._read_manifest(table)
         if m is None:
@@ -1479,23 +1311,23 @@ class Engine:
                     f"previous incremental append to {derived.name} did not "
                     f"complete (crash between append and watermark update); "
                     f"the window may be partially committed — re-run the "
-                    f"same window (manifest mode swaps it in atomically), "
+                    f"same window (it is swapped in atomically), "
                     f"run a full refresh, or verify the table and clear "
                     f"the '__inflight__' entry in _watermarks.json")
             self._mark_inflight(derived.name)
             # window-stamped: a rerun of an already-committed window
             # REPLACES that window's dirs instead of double-counting
-            # (manifest mode; see _write_append)
+            # (see _write_append)
             try:
                 self._write_append(df, derived.name, partition_by,
                                    window=window, batch_tag=batch_tag)
             except ValueError:
-                # a window REFUSAL (rename-ledger cover / compaction-
-                # absorbed overlap) raises before anything lands in the
-                # live table — clearing the bracket keeps the next run's
-                # inflight check telling the truth (a stale marker here
-                # would surface as a spurious mid-append-crash error
-                # once the manifest version moves, e.g. via compaction)
+                # a window REFUSAL (compaction-absorbed overlap) raises
+                # before anything lands in the live table — clearing the
+                # bracket keeps the next run's inflight check telling the
+                # truth (a stale marker here would surface as a spurious
+                # mid-append-crash error once the manifest version moves,
+                # e.g. via compaction)
                 self._mark_inflight(derived.name, clear=True)
                 raise
         else:
@@ -1520,24 +1352,18 @@ class Engine:
 
         s = self.env.settings
         derived = extract_fact_table(self.env, fact)
-        # manifest mode: ONE manifest read anchors the whole compaction —
-        # the input rows, the absorbed refuse-keys, and the publish's
-        # expected version all come from the same snapshot.  A concurrent
-        # commit between this read and the publish makes _write_full
-        # abort (ManifestConflict) instead of publishing a snapshot
-        # missing that commit's rows and window stamp (ADVICE r16 TOCTOU;
-        # previously the CAS loop silently retried over the advance).
-        input_version: int | None = None
-        m0 = None
-        if self.commit_mode == "manifest":
-            m0 = self._read_manifest(derived.name)
-            if m0 is not None:
-                input_version = m0["version"]
-                df = self.read_table(derived.name, version=input_version)
-            else:
-                df = self.read_table(derived.name)
-        else:
-            df = self.read_table(derived.name)
+        # ONE manifest read anchors the whole compaction — the input rows,
+        # the absorbed refuse-keys, and the publish's expected version all
+        # come from the same snapshot.  A concurrent commit between this
+        # read and the publish makes _write_full abort (ManifestConflict)
+        # instead of publishing a snapshot missing that commit's rows and
+        # window stamp (ADVICE r16 TOCTOU; previously the CAS loop
+        # silently retried over the advance).
+        m0 = self._read_manifest(derived.name)
+        if m0 is None:
+            raise FileNotFoundError(f"no manifest for table {derived.name!r}")
+        input_version = m0["version"]
+        df = self.read_table(derived.name, version=input_version)
         measure_aggs, measures = [], set()
         for fc in fact.columns:
             c, t = fc.target_column, fc.type
@@ -1570,25 +1396,23 @@ class Engine:
         out = df.groupBy(*keys).agg(*measure_aggs).select(
             *[F.col(c).cast(types[c]).alias(c) if c in measures else c
               for c in df.columns])
-        # safe: _write_full materializes into the staging dir before the
-        # live dir (our input) is replaced; re-applying the partitioning
-        # keeps the day/tenant directory layout through compaction
+        # safe: _write_full materializes into a new dir; the input
+        # snapshot's dirs stay untouched until the pointer flips.
+        # Re-applying the partitioning keeps the day/tenant directory
+        # layout through compaction
         out, partition_by = self._with_fact_partitioning(fact, out)
         # compaction is NOT a full refresh: the windowed rows it merges
         # still exist in the output, so the same-window rerun protection
         # must survive it (r16 review — _write_full's default clears it,
-        # silently re-enabling double-counting appends).  Manifest mode
-        # carries every live dir's stamp (plus previously absorbed ones)
-        # forward as refuse-keys; rename mode keeps its ledger.
-        absorbed = None
-        if m0 is not None:
-            live = self._manifest_versions(m0)[str(m0["version"])]
-            stamps = m0.get("windows", {})
-            absorbed = (list(m0.get("absorbed", []))
-                        + [stamps[d] for d in live if stamps.get(d)])
-            absorbed = absorbed or None
+        # silently re-enabling double-counting appends).  Every live
+        # dir's stamp (plus previously absorbed ones) carries forward as
+        # a refuse-key.
+        live = self._manifest_versions(m0)[str(input_version)]
+        stamps = m0.get("windows", {})
+        absorbed = (list(m0.get("absorbed", []))
+                    + [stamps[d] for d in live if stamps.get(d)])
         self._write_full(out, derived.name, partition_by,
-                         absorbed=absorbed, preserve_windows=True,
+                         absorbed=absorbed or None, preserve_windows=True,
                          expected_input_version=input_version)
 
     # --- JDBC sink (Postgres-sink parity, Main.hs:35-83) -------------------

@@ -367,11 +367,13 @@ def _docs_meta_rows(sf_dir: str) -> int | None:
     """Footer row count of the documents table (exact upper bound for
     the rep-collapsed build; driver-side, cached) — None when
     unreadable."""
+    import pyarrow as pa
+
     from .similarity import _parquet_meta_rows
 
     try:
         return _parquet_meta_rows(f"{sf_dir}/documents.parquet")
-    except Exception:
+    except (OSError, pa.ArrowException):   # absent or unreadable footer
         return None
 
 

@@ -196,7 +196,7 @@ def _read_stats_log(stats_path: str):
         # and the strict concat threw OUTSIDE the old try, crashing the
         # report path instead of falling back to the rescan
         return pa.concat_tables(tables, promote_options="permissive")
-    except Exception:
+    except (OSError, pa.ArrowException):   # torn or unreadable part file
         return None
 
 

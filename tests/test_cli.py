@@ -97,6 +97,13 @@ def test_cli_settings_flags_reach_artifacts(input_yaml, tmp_path):
     assert "fact_events_per_hour" in deps
 
 
+def read_published(spark, wh, table):
+    """The live snapshot of ``table``: the dirs its manifest names."""
+    m = json.load(open(os.path.join(wh, f"{table}.manifest.json")))
+    return spark.read.parquet(*(os.path.join(wh, d)
+                                for d in m["versions"][str(m["version"])]))
+
+
 def test_cli_artifacts_mode(input_yaml, tmp_path):
     out = str(tmp_path / "out")
     assert main([input_yaml, out]) == 0
@@ -134,7 +141,7 @@ def test_cli_execute_mode(spark, input_yaml, tmp_path):
                "--data", "/root/testdata/sf0.001", "--storage", wh,
                "--time-unit", "minute", "--time-upper", "2100-01-01"])
     assert rc == 0
-    fact = spark.read.parquet(os.path.join(wh, "fact_events_by_minute"))
+    fact = read_published(spark, wh, "fact_events_by_minute")
     assert fact.count() > 0
     wm = json.load(open(os.path.join(wh, "_watermarks.json")))
     assert "fact_events_by_minute" in wm
@@ -145,7 +152,7 @@ def test_cli_execute_manifest_mode(spark, input_yaml, tmp_path):
     rc = main([input_yaml, out, "--execute",
                "--data", "/root/testdata/sf0.001", "--storage", wh,
                "--time-unit", "minute", "--time-upper", "2100-01-01",
-               "--commit-mode", "manifest", "--keep-versions", "2"])
+               "--keep-versions", "2"])
     assert rc == 0
     m = json.load(open(os.path.join(
         wh, "fact_events_by_minute.manifest.json")))
@@ -195,8 +202,8 @@ def test_cli_salt_tenant_buckets_flag(spark, input_yaml, tmp_path):
                    "--time-unit", "minute", "--time-upper", "2100-01-01",
                    *extra])
         assert rc == 0
-    a = spark.read.parquet(os.path.join(plain_wh, "fact_events_by_minute"))
-    b = spark.read.parquet(os.path.join(salted_wh, "fact_events_by_minute"))
+    a = read_published(spark, plain_wh, "fact_events_by_minute")
+    b = read_published(spark, salted_wh, "fact_events_by_minute")
     assert sorted(a.columns) == sorted(b.columns)
     cols = sorted(a.columns)
     assert sorted(map(tuple, a.select(*cols).collect())) == \

@@ -54,8 +54,11 @@ def test_full_refresh_swaps_atomically(engine, tmp_path):
     engine.run(PopulationMode.FULL, T_FAR)  # second full refresh: swap, not append
     after = engine.read_table("fact_orders_by_day").count()
     assert before == after
-    assert not os.path.exists(
-        os.path.join(engine.storage, "fact_orders_by_day__staging"))
+    # the live snapshot is the one refreshed dir; no stage dir is left
+    (live,) = engine._snapshot_paths("fact_orders_by_day")
+    assert os.path.basename(live) == "fact_orders_by_day__v2"
+    assert not [d for d in os.listdir(engine.storage)
+                if d.startswith("fact_orders_by_day__stage_")]
 
 
 def test_artifacts(engine, tmp_path):
@@ -80,7 +83,7 @@ def test_partitioned_fact_write(spark, tmp_path):
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "w2"), partition_facts=True)
     eng.load_sources("/root/testdata/sf0.001")
     eng.run_fact(ORDERS_ENV.find_fact("orders"), PopulationMode.FULL, T_FAR)
-    base = os.path.join(eng.storage, "fact_orders_by_day")
+    (base,) = eng._snapshot_paths("fact_orders_by_day")
     # hive-style day partitions on disk -> partition pruning at read time
     assert any(d.startswith("o_orderdate_day=") for d in os.listdir(base))
 
@@ -94,47 +97,19 @@ def test_compact_preserves_partitioning(spark, tmp_path):
     eng.compact_fact(fact)
     after = eng.read_table("fact_orders_by_day")
     assert after.count() == before  # full refresh was already one-row-per-grain
-    base = os.path.join(eng.storage, "fact_orders_by_day")
+    (base,) = eng._snapshot_paths("fact_orders_by_day")
     assert any(d.startswith("o_orderdate_day=") for d in os.listdir(base)), \
         "compaction dropped the day directory partitioning"
-
-
-def test_crash_during_swap_leaves_readable_table(engine, monkeypatch):
-    """Kill the swap between rename-aside and rename-in: the previous table
-    must stay recoverable, and the next write must heal it."""
-    import ringo_spark.engine as engmod
-
-    engine.run(PopulationMode.FULL, T_ORDERS_MID)
-    before = engine.read_table("fact_orders_by_day").count()
-
-    real_rename = os.rename
-
-    def crashing_rename(src, dst):
-        # crash exactly at the fact table's rename-in step (dims already
-        # swapped), after live was renamed aside
-        if src.endswith("__staging") and "fact_orders_by_day" in src:
-            raise RuntimeError("simulated crash mid-swap")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(engmod.os, "rename", crashing_rename)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        engine.run(PopulationMode.FULL, T_FAR)
-    monkeypatch.undo()
-
-    # crashed between live->old and staging->live: read recovers from old
-    assert engine.read_table("fact_orders_by_day").count() == before
-    # and a clean re-run completes the refresh
-    engine.run(PopulationMode.FULL, T_FAR)
-    assert engine.read_table("fact_orders_by_day").count() >= before
-    assert not os.path.exists(
-        os.path.join(engine.storage, "fact_orders_by_day__old"))
 
 
 def test_resume_refuses_after_unclean_incremental_append(engine, monkeypatch):
     """A crash between an incremental fact append and its watermark update
     must NOT lead to a silent double-append on resume (doubled counts are
-    indistinguishable from mergeable partials) — the engine fails loudly;
-    a full refresh heals."""
+    indistinguishable from mergeable partials).  A resume whose window
+    does not cover the committed append cannot swap it out, so the
+    engine fails loudly; a full refresh heals.  (A same-window resume
+    swaps the committed window in instead; see
+    ``test_manifest_append_crash_after_publish_heals_by_window_swap``.)"""
     engine.run(PopulationMode.FULL, T_ORDERS_MID)
 
     orig = Engine._commit_watermark
@@ -149,9 +124,10 @@ def test_resume_refuses_after_unclean_incremental_append(engine, monkeypatch):
         engine.run(PopulationMode.INCREMENTAL, T_FAR)
     monkeypatch.undo()
 
-    # the append committed but the watermark didn't: resume refuses
+    # the append committed but the watermark didn't: a resume that
+    # cannot cover the committed window refuses
     with pytest.raises(RuntimeError, match="did not complete"):
-        engine.run(PopulationMode.INCREMENTAL, T_FAR)
+        engine.run(PopulationMode.INCREMENTAL, T_FAR - dt.timedelta(days=1))
 
     # full refresh heals the table and clears the in-flight marker
     engine.run(PopulationMode.FULL, T_FAR)
@@ -175,16 +151,8 @@ def test_incremental_resumes_from_stored_watermark(engine):
     assert df.count() == df.select(*keys).distinct().count()
 
 
-@pytest.fixture
-def manifest_engine(spark, tmp_path):
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "mwarehouse"),
-                 commit_mode="manifest")
-    eng.load_sources("/root/testdata/sf0.001")
-    return eng
-
-
-def test_manifest_full_and_incremental_run(manifest_engine):
-    eng = manifest_engine
+def test_manifest_full_and_incremental_run(engine):
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     n1 = eng.read_table("fact_orders_by_day").count()
     m = json.load(open(os.path.join(eng.storage,
@@ -205,8 +173,8 @@ def test_manifest_full_and_incremental_run(manifest_engine):
                                    "fact_orders_by_day__v2"]
 
 
-def test_manifest_refresh_bumps_version_and_gcs_old(manifest_engine):
-    eng = manifest_engine
+def test_manifest_refresh_bumps_version_and_gcs_old(engine):
+    eng = engine
     eng.run(PopulationMode.FULL, T_FAR)
     before = eng.read_table("fact_orders_by_day").count()
     eng.run(PopulationMode.FULL, T_FAR)
@@ -220,13 +188,13 @@ def test_manifest_refresh_bumps_version_and_gcs_old(manifest_engine):
 
 
 def test_manifest_crash_before_publish_leaves_old_version_live(
-        manifest_engine, monkeypatch):
+        engine, monkeypatch):
     """Kill the refresh after the new version dir is written but before
     the pointer flips: readers must still resolve the previous complete
     version, and a clean re-run must converge (GC'ing the orphan)."""
     import ringo_spark.engine as engmod
 
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     before = eng.read_table("fact_orders_by_day").count()
 
@@ -256,14 +224,14 @@ def test_manifest_crash_before_publish_leaves_old_version_live(
 
 
 def test_manifest_append_crash_leaves_snapshot_unchanged(
-        manifest_engine, monkeypatch):
+        engine, monkeypatch):
     """A crash between the append's data write and the pointer flip must
     leave the previous snapshot intact — the failure mode that motivated
     the dirs-list manifest (plain directory appends are visible the
     moment files land)."""
     import ringo_spark.engine as engmod
 
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     before = eng.read_table("fact_orders_by_day").count()
 
@@ -288,7 +256,7 @@ def test_manifest_append_crash_leaves_snapshot_unchanged(
 
 
 def test_manifest_append_crash_after_publish_heals_by_window_swap(
-        manifest_engine, monkeypatch):
+        engine, monkeypatch):
     """Crash AFTER the pointer flip but before the watermark lands: the
     appended window is visible without its watermark.  Window-stamped
     appends (r12) make the same-window rerun SAFE — the recomputed
@@ -298,7 +266,7 @@ def test_manifest_append_crash_after_publish_heals_by_window_swap(
     refuses (the conservative direction is unchanged)."""
     import datetime as _dt
 
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
 
     real_store = eng._commit_watermark
@@ -325,8 +293,7 @@ def test_manifest_append_crash_after_publish_heals_by_window_swap(
               eng.read_table("fact_orders_by_day").collect()}
 
     # reference: the same two runs on a fresh engine with no crash
-    ref = Engine(eng.spark, ORDERS_ENV, eng.storage + "_ref",
-                 commit_mode="manifest")
+    ref = Engine(eng.spark, ORDERS_ENV, eng.storage + "_ref")
     ref.load_sources("/root/testdata/sf0.001")
     ref.run(PopulationMode.FULL, T_ORDERS_MID)
     ref.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
@@ -335,13 +302,13 @@ def test_manifest_append_crash_after_publish_heals_by_window_swap(
     assert healed == want
 
 
-def test_incremental_rerun_same_window_is_idempotent(manifest_engine):
+def test_incremental_rerun_same_window_is_idempotent(engine):
     """The MERGE contract (r11 VERDICT item 8): re-running an
     already-committed incremental window — late-arriving data, an
     operator retry — REPLACES that window's rows instead of appending
     them again.  The unstamped full-refresh base dir is never touched;
     the replaced dir leaves the live dir list."""
-    eng = manifest_engine
+    eng = engine
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
     once = sorted(tuple(r) for r in
@@ -360,26 +327,6 @@ def test_incremental_rerun_same_window_is_idempotent(manifest_engine):
     assert m["versions"]["3"] == ["fact_orders_by_day__v1",
                                   "fact_orders_by_day__v3"]
     assert set(m["windows"]) == {"fact_orders_by_day__v3"}
-
-
-def test_rename_mode_same_window_rerun_refuses(engine):
-    """VERDICT r12 item 2: rename mode cannot MERGE a recomputed window
-    (no atomic swap), so a same-window rerun must REFUSE instead of
-    silently appending the rows twice.  A full refresh clears the
-    ledger — every stamped window was just recomputed — after which the
-    same incremental window commits cleanly again."""
-    eng = engine                      # default commit_mode='rename'
-    eng.run(PopulationMode.FULL, T_ORDERS_MID)
-    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    once = eng.read_table("fact_orders_by_day").count()
-
-    with pytest.raises(ValueError, match="double-count"):
-        eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    assert eng.read_table("fact_orders_by_day").count() == once
-
-    eng.run(PopulationMode.FULL, T_ORDERS_MID)   # clears the ledger
-    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_ORDERS_MID)
-    assert eng.read_table("fact_orders_by_day").count() == once
 
 
 def test_iso_normalizes_tz_aware_bounds_to_utc():
@@ -422,7 +369,7 @@ def test_window_covers_semantics():
 
 def test_manifest_time_travel_reads_retained_versions(spark, tmp_path):
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "ttwarehouse"),
-                 commit_mode="manifest", keep_versions=2)
+                 keep_versions=2)
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_ORDERS_MID)
     n1 = eng.read_table("fact_orders_by_day").count()
@@ -448,8 +395,7 @@ def test_manifest_compaction_folds_snapshot_to_single_dir(spark, tmp_path):
     version, and the superseded dirs are GC'd after the pointer flip."""
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "cwh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "cwh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
@@ -483,8 +429,7 @@ def test_manifest_append_after_compaction(spark, tmp_path):
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
     table = "fact_events_by_minute"
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "acwh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "acwh"))
     eng.load_sources("/root/testdata/sf0.001")
     t_early = dt.datetime(2024, 1, 10)
     eng.run(PopulationMode.FULL, t_early)
@@ -492,8 +437,7 @@ def test_manifest_append_after_compaction(spark, tmp_path):
     eng.compact_fact(EVENTS_FACT)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
 
-    ref = Engine(spark, EVENTS_ENV, str(tmp_path / "acref"),
-                 commit_mode="manifest")
+    ref = Engine(spark, EVENTS_ENV, str(tmp_path / "acref"))
     ref.load_sources("/root/testdata/sf0.001")
     ref.run(PopulationMode.FULL, T_FAR)
 
@@ -643,8 +587,7 @@ def test_manifest_cas_rejects_interleaved_publish(spark, tmp_path):
     version that has since advanced is rejected, never last-writer-wins."""
     import ringo_spark.engine as engmod
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "cas"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "cas"))
     eng._write_full(spark.range(5), "t")
     m = eng._read_manifest("t")
     assert m["version"] == 1
@@ -660,8 +603,8 @@ def test_manifest_two_interleaved_appenders_lose_nothing(spark, tmp_path):
     the CAS retry A's first publish loses, re-reads, and re-publishes a
     snapshot containing BOTH appends; the final table holds every row."""
     store = str(tmp_path / "mw")
-    A = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
-    B = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
+    A = Engine(spark, ORDERS_ENV, store)
+    B = Engine(spark, ORDERS_ENV, store)
     A._write_full(spark.range(0, 10), "t")        # v1: ids 0..9
     stale = A._read_manifest("t")
 
@@ -697,8 +640,7 @@ def test_manifest_lock_crash_timeout_and_replace(spark, tmp_path):
     replaced lock file is detected by the inode re-check."""
     import fcntl
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lk"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lk"))
     os.makedirs(eng.storage, exist_ok=True)
     lock = eng._lock_path("t")
 
@@ -744,8 +686,7 @@ def test_manifest_lock_error_paths_are_bounded(spark, tmp_path, monkeypatch):
     cannot make acquisition spin forever."""
     import errno
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lkerr"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "lkerr"))
     os.makedirs(eng.storage, exist_ok=True)
 
     # (a) genuine error: raise ENOLCK from flock — must propagate as
@@ -789,14 +730,14 @@ def test_manifest_concurrent_append_stress(spark, tmp_path):
     import threading
 
     store = str(tmp_path / "stress")
-    eng = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, store)
     eng._write_full(spark.range(0, 10), "t")          # v1: ids 0..9
 
     N_PER_WRITER = 4
     errs = []
 
     def writer(base):
-        w = Engine(spark, ORDERS_ENV, store, commit_mode="manifest")
+        w = Engine(spark, ORDERS_ENV, store)
         try:
             for i in range(N_PER_WRITER):
                 lo = base + i * 10
@@ -831,8 +772,7 @@ def test_gc_never_deletes_higher_version_dirs(spark, tmp_path):
     this writer's publish belongs to a concurrent writer that published
     meanwhile — it must survive.  Unreferenced dirs at or below the
     published version are true orphans and go."""
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "gcv"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "gcv"))
     eng._write_full(spark.range(5), "t")               # publishes v1
     # fake a crash orphan at v1-era naming and a concurrent writer's v2
     os.makedirs(os.path.join(eng.storage, "t__v0"))    # stale orphan
@@ -857,7 +797,7 @@ def test_manifest_schema_evolution_on_append(spark, tmp_path):
     from pyspark.sql import functions as F
 
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "evo"),
-                 commit_mode="manifest", keep_versions=2)
+                 keep_versions=2)
     os.makedirs(eng.storage, exist_ok=True)
 
     eng._write_full(spark.range(0, 5).select(F.col("id")), "t")
@@ -890,7 +830,7 @@ def test_manifest_schema_drop_requires_full_refresh(spark, tmp_path):
     from pyspark.sql import functions as F
 
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "drop"),
-                 commit_mode="manifest", keep_versions=3)
+                 keep_versions=3)
     os.makedirs(eng.storage, exist_ok=True)
 
     eng._write_full(
@@ -928,7 +868,7 @@ def test_append_onto_pre_schema_manifest_infers_prev_schema(spark, tmp_path):
     from pyspark.sql import functions as F
 
     eng = Engine(spark, ORDERS_ENV, str(tmp_path / "pre"),
-                 commit_mode="manifest", keep_versions=2)
+                 keep_versions=2)
     os.makedirs(eng.storage, exist_ok=True)
     # legacy snapshot spanning TWO dirs with heterogeneous file schemas
     # (a wide refresh + a narrow append) — the fallback must footer-
@@ -961,8 +901,7 @@ def test_read_table_reads_manifest_exactly_once(spark, tmp_path):
     manifest read per read_table call."""
     from pyspark.sql import functions as F
 
-    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "once"),
-                 commit_mode="manifest")
+    eng = Engine(spark, ORDERS_ENV, str(tmp_path / "once"))
     os.makedirs(eng.storage, exist_ok=True)
     eng._write_full(spark.range(0, 3).select("id"), "t")
 
@@ -1011,8 +950,7 @@ def test_window_merge_model_based(spark, tmp_path):
     def run(ops):
         counter[0] += 1
         eng = Engine(spark, ORDERS_ENV,
-                     str(tmp_path / f"wmb{counter[0]}"),
-                     commit_mode="manifest")
+                     str(tmp_path / f"wmb{counter[0]}"))
         model = {}   # payload id -> window (or None) of surviving dirs
         for step, op in enumerate(ops):
             df = spark.range(step * 100, step * 100 + 3) \
@@ -1043,42 +981,37 @@ def test_window_merge_model_based(spark, tmp_path):
 
 def test_compaction_preserves_same_window_rerun_protection(spark, tmp_path):
     """r16 review finding 1: compaction merges the windowed dirs' rows,
-    so the same-window rerun protection must SURVIVE it.  Manifest
-    mode: the absorbed windows become refuse-keys (their dirs no longer
-    exist to swap, so an overlapping append would silently double-count
-    the merged rows); rename mode: the ledger is preserved.  A true
-    full refresh still clears both."""
+    so the same-window rerun protection must SURVIVE it: the absorbed
+    windows become refuse-keys (their dirs no longer exist to swap, so
+    an overlapping append would silently double-count the merged rows).
+    A true full refresh still clears them."""
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
-    for mode in ("manifest", "rename"):
-        eng = Engine(spark, EVENTS_ENV, str(tmp_path / f"wh_{mode}"),
-                     commit_mode=mode)
-        eng.load_sources("/root/testdata/sf0.001")
-        eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
+    eng.load_sources("/root/testdata/sf0.001")
+    eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
+    table = "fact_events_by_minute"
+    total = eng.read_table(table).agg(
+        {"event_count": "sum"}).collect()[0][0]
+
+    eng.compact_fact(EVENTS_FACT)
+    # rerun of the absorbed window must refuse, not double-count
+    with pytest.raises(ValueError, match="compaction"):
         eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-        table = "fact_events_by_minute"
-        total = eng.read_table(table).agg(
-            {"event_count": "sum"}).collect()[0][0]
+    assert eng.read_table(table).agg(
+        {"event_count": "sum"}).collect()[0][0] == total
 
-        eng.compact_fact(EVENTS_FACT)
-        # rerun of the absorbed window must refuse, not double-count
-        with pytest.raises(ValueError,
-                           match="compaction" if mode == "manifest"
-                                 else "double-count"):
-            eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-        assert eng.read_table(table).agg(
-            {"event_count": "sum"}).collect()[0][0] == total
-
-        # protection survives a further compaction too
-        eng.compact_fact(EVENTS_FACT)
-        with pytest.raises(ValueError):
-            eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-
-        # a true full refresh recomputes everything and clears the keys
-        eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    # protection survives a further compaction too
+    eng.compact_fact(EVENTS_FACT)
+    with pytest.raises(ValueError):
         eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
-        assert eng.read_table(table).agg(
-            {"event_count": "sum"}).collect()[0][0] == total
+
+    # a true full refresh recomputes everything and clears the keys
+    eng.run(PopulationMode.FULL, T_EVENTS_MID)
+    eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
+    assert eng.read_table(table).agg(
+        {"event_count": "sum"}).collect()[0][0] == total
 
 
 def test_direct_run_fact_repopulates_dimensions(spark, tmp_path):
@@ -1164,8 +1097,7 @@ def test_refused_append_cleans_its_stage(spark, tmp_path):
     unpromoted stages until some later successful publish)."""
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
     eng.run(PopulationMode.INCREMENTAL, T_FAR, T_EVENTS_MID)
@@ -1186,13 +1118,11 @@ def test_compaction_aborts_when_manifest_advances(spark, tmp_path):
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
     table = "fact_events_by_minute"
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
 
-    other = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                   commit_mode="manifest")
+    other = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     other.load_sources("/root/testdata/sf0.001")
 
     real = Engine._write_stage
@@ -1234,8 +1164,7 @@ def test_compaction_aborts_when_manifest_vanishes(spark, tmp_path):
     from ringo_spark.testbed import EVENTS_ENV, EVENTS_FACT, T_EVENTS_MID
 
     table = "fact_events_by_minute"
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources("/root/testdata/sf0.001")
     eng.run(PopulationMode.FULL, T_EVENTS_MID)
 
@@ -1287,7 +1216,7 @@ def test_independent_dimensions_run_concurrently(engine, monkeypatch):
 def test_dimension_failure_stops_the_dag(engine, monkeypatch):
     """A dimension that raises fails ``run`` with its own error: no fact
     that depends on it starts (both facts read dim_order_status), the
-    dimensions already in flight finish their swap, no staging dir is
+    dimensions already in flight finish their publish, no stage dir is
     left behind and every sidecar still parses."""
     real = Engine._write_full
 
@@ -1304,7 +1233,7 @@ def test_dimension_failure_stops_the_dag(engine, monkeypatch):
     assert engine.table_exists("dim_order_priority")
     assert engine.table_exists("dim_line_status")
     left = os.listdir(engine.storage)
-    assert [d for d in left if d.endswith(("__staging", "__old"))] == []
+    assert [d for d in left if "__stage_" in d] == []
     for name in left:
         if name.endswith(".json"):
             with open(os.path.join(engine.storage, name)) as fh:
@@ -1363,3 +1292,51 @@ def test_reloading_sources_runs_no_spark_job(spark, tmp_path):
         eng.load_sources("/root/testdata/sf0.001")
     assert c["jobs"] == 0
     assert set(eng.sources) == {"orders", "lineitem", "customer"}
+
+
+def test_reading_published_tables_runs_no_spark_job(engine):
+    """``read_table`` resolves the manifest and reads with the schema the
+    publish recorded, so reading every published table back infers
+    nothing from footers: no Spark job (a footer-inference read runs
+    one job per table)."""
+    from tests.fixtures import count_spark_jobs
+
+    engine.run(PopulationMode.FULL, T_FAR)
+    tables = engine.published_tables()
+    assert set(tables) == ORDERS_DIMS | set(ORDERS_FACTS)
+    with count_spark_jobs(engine.spark) as c:
+        frames = [engine.read_table(t) for t in tables]
+    assert c["jobs"] == 0
+    assert all(df.columns for df in frames)
+
+
+def test_rename_era_table_dir_is_refused(engine):
+    """A ``<storage>/<table>/`` dir with no manifest is a table the
+    retired rename protocol published.  Reading it, or refreshing over
+    it in either mode, raises a typed error naming the table and the
+    fix instead of publishing ``__v1`` beside the stale dir."""
+    from ringo_spark.engine import LegacyTableDir
+
+    legacy = os.path.join(engine.storage, "dim_order_status")
+    engine.spark.range(3).write.parquet(legacy)
+    with pytest.raises(LegacyTableDir, match="dim_order_status.*full "
+                                             "refresh into a fresh storage"):
+        engine.read_table("dim_order_status")
+    for mode in (PopulationMode.INCREMENTAL, PopulationMode.FULL):
+        with pytest.raises(LegacyTableDir, match="dim_order_status"):
+            engine.run(mode, T_FAR)
+    assert not [d for d in os.listdir(engine.storage)
+                if d.startswith("dim_order_status__")]
+    assert os.listdir(legacy)
+
+
+def test_commit_mode_keyword_selects_nothing(spark, tmp_path):
+    """Both accepted ``commit_mode`` strings give the one manifest
+    protocol; any other value is refused."""
+    for mode in ("rename", "manifest"):
+        eng = Engine(spark, ORDERS_ENV, str(tmp_path / mode), commit_mode=mode)
+        eng._write_full(spark.range(2), "t")
+        assert eng.table_versions("t") == [1]
+        assert not hasattr(eng, "commit_mode")
+    with pytest.raises(ValueError, match="commit_mode"):
+        Engine(spark, ORDERS_ENV, str(tmp_path / "x"), commit_mode="copy")

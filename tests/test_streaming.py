@@ -140,8 +140,7 @@ def test_streaming_pipeline_with_manifest_commits(spark, tmp_path):
     third2.coalesce(1).write.mode("append").parquet(src)
     third3.coalesce(1).write.mode("append").parquet(src)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     stream = (spark.readStream.schema(_events_schema(spark))
@@ -395,8 +394,7 @@ def test_streaming_append_crash_between_write_and_pointer_flip(
     half.coalesce(1).write.parquet(src)
     cat["events"].subtract(half).coalesce(1).write.mode("append").parquet(src)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     fact_table = "fact_events_by_minute"
 
@@ -1613,8 +1611,7 @@ def test_pipeline_batch_replay_is_exactly_once(spark, tmp_path):
     b1 = cat["events"].limit(n // 2)
     b2 = cat["events"].subtract(b1)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     table = "fact_events_by_minute"
@@ -1657,8 +1654,7 @@ def test_pipeline_retry_after_lost_watermark_commit(spark, tmp_path):
     b1 = cat["events"].limit(n // 2)
     b2 = cat["events"].subtract(b1)
 
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"),
-                 commit_mode="manifest")
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     table = "fact_events_by_minute"
@@ -1686,80 +1682,46 @@ def test_pipeline_retry_after_lost_watermark_commit(spark, tmp_path):
         F.sum("event_count")).collect()[0][0] == n
 
 
-def test_pipeline_replay_is_noop_in_rename_mode(spark, tmp_path):
-    """Rename-mode twin: batch tags live in the _batch_tags.json sidecar
-    (no manifest to ride), stamped after the files land — a committed
-    batch's replay is skipped, and a true full refresh clears the
-    table's tags with its windows."""
+def test_pipeline_first_batch_crash_before_tag_is_bracketed(spark, tmp_path,
+                                                            monkeypatch):
+    """ADVICE r18: a streaming pipeline's FIRST micro-batch lands as a
+    full write, and its batch tag must never be separable from its data.
+    The tag rides the same manifest publish as the data: a crash before
+    the pointer flip leaves no table and no tag, so the replay rewrites
+    the batch once; a crash after the publish but before the inflight
+    bracket clears leaves data and tag together, so the replay
+    no-op-skips and heals the marker."""
+    import ringo_spark.engine as engmod
+
     cat = load_catalog(spark, SF, [EVENTS])
     n = cat["events"].count()
     b1 = cat["events"].limit(n // 2)
-    b2 = cat["events"].subtract(b1)
 
     eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     eng.load_sources(SF)
     pipe = StreamingPipeline(eng, EVENTS_FACT)
     table = "fact_events_by_minute"
-    pipe.process_batch(b1, 0)
-    pipe.process_batch(b2, 1)
+
+    real = os.replace
+
+    def crash(src, dst):
+        if dst.endswith(f"{table}.manifest.json"):
+            raise RuntimeError("injected crash before the pointer flip")
+        return real(src, dst)
+
+    monkeypatch.setattr(engmod.os, "replace", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        pipe.process_batch(b1, 0)              # full write, then crash
+    monkeypatch.undo()
+    # nothing published: neither the data nor its tag
+    assert not eng.table_exists(table)
+    pipe.process_batch(b1, 0)                  # replay writes it once
+    assert eng._recorded_tags(table) != []
     assert eng.read_table(table).agg(
-        F.sum("event_count")).collect()[0][0] == n
-    pipe.process_batch(b1, 0)                  # replay: sidecar-skipped
-    pipe.process_batch(b2, 7)
-    assert eng.read_table(table).agg(
-        F.sum("event_count")).collect()[0][0] == n
-    assert len(eng._recorded_tags(table)) == 2
-    # a true full refresh recomputes everything -> tags cleared
-    eng.sources["events"] = cat["events"]
-    eng.run(PopulationMode.FULL, T_FAR)
-    assert eng._recorded_tags(table) == []
+        F.sum("event_count")).collect()[0][0] == n // 2   # no double
 
-
-def test_pipeline_first_batch_crash_before_tag_is_bracketed(spark, tmp_path):
-    """ADVICE r18: the rename-mode FIRST micro-batch lands as a full
-    write whose batch tag is stamped only after the live rename — a
-    crash in between left committed data with no tag and no marker, so
-    a foreachBatch replay took the append path untagged and silently
-    double-counted.  The tagged full write is now inflight-bracketed:
-    the crash leaves the marker, the replay refuses loudly (tag absent,
-    opaque rename marker), and a crash that DID reach the stamp heals
-    on replay exactly like the bracketed append path."""
-    cat = load_catalog(spark, SF, [EVENTS])
-    n = cat["events"].count()
-    b1 = cat["events"].limit(n // 2)
-
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))   # rename mode
-    eng.load_sources(SF)
-    pipe = StreamingPipeline(eng, EVENTS_FACT)
-    table = "fact_events_by_minute"
-
-    real = Engine._stamp_batch_tag
-    boom = []
-
-    def crash_once(self, tbl, tag):
-        if not boom:
-            boom.append(True)
-            raise RuntimeError("injected crash before tag stamp")
-        return real(self, tbl, tag)
-
-    Engine._stamp_batch_tag = crash_once
-    try:
-        with pytest.raises(RuntimeError, match="injected"):
-            pipe.process_batch(b1, 0)          # full write, then crash
-        # data is live (rename completed) but untagged — the bracket
-        # must have left the marker so the replay cannot double-count
-        assert eng.table_exists(table)
-        assert eng._recorded_tags(table) == []
-        assert table in eng._inflight()
-        with pytest.raises(RuntimeError, match="did not complete"):
-            pipe.process_batch(b1, 0)          # replay refused loudly
-        assert eng.read_table(table).agg(
-            F.sum("event_count")).collect()[0][0] == n // 2   # no double
-    finally:
-        Engine._stamp_batch_tag = real
-
-    # the other crash window — between the stamp and the bracket clear:
-    # replay is provably safe (tag recorded), no-op-skips, heals marker
+    # the other crash window — between the publish and the bracket
+    # clear: replay is provably safe (tag recorded), no-op-skips, heals
     eng2 = Engine(spark, EVENTS_ENV, str(tmp_path / "wh2"))
     eng2.load_sources(SF)
     pipe2 = StreamingPipeline(eng2, EVENTS_FACT)
@@ -1778,11 +1740,12 @@ def test_batch_tag_ledger_retention_bound(spark, tmp_path):
     now keeps the newest BATCH_TAG_RETENTION tags; replay protection
     therefore covers the last N batches (foreachBatch retries and
     recent lineage resets), and an older tag ages out FIFO."""
-    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))   # rename mode
+    eng = Engine(spark, EVENTS_ENV, str(tmp_path / "wh"))
     assert Engine.BATCH_TAG_RETENTION >= 1024   # real bound is generous
     eng.BATCH_TAG_RETENTION = 3                 # instance-scoped shrink
-    for i in range(5):
-        eng._stamp_batch_tag("t", f"tag{i}")
+    eng._write_full(spark.range(1), "t", batch_tag="tag0")
+    for i in range(1, 5):
+        eng._write_append(spark.range(1), "t", batch_tag=f"tag{i}")
     assert eng._recorded_tags("t") == ["tag2", "tag3", "tag4"]
     # _bound_tags is what both manifest publish arms apply
     assert eng._bound_tags([f"x{i}" for i in range(7)]) == ["x4", "x5", "x6"]
