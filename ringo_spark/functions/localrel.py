@@ -50,22 +50,20 @@ def literal_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """A DataFrame of ``rows`` (tuples/Rows) under DDL ``schema``, built
     through the Arrow path when possible (see module docstring); falls
     back to plain ``createDataFrame`` for empty, oversized, or
-    unsupported-typed input."""
+    unsupported-typed input.  An Arrow conversion that still fails takes
+    PySpark's own non-Arrow fallback, with a warning
+    (``spark.sql.execution.arrow.pyspark.fallback.enabled``, on by
+    default)."""
     rows = list(rows)
     st = T._parse_datatype_string(schema)
     if (not rows or len(rows) > MAX_ARROW_ROWS
             or not all(_supported(f.dataType) for f in st.fields)):
         return spark.createDataFrame(rows, schema)
-    try:
-        import pandas as pd
+    import pandas as pd
 
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = pd.DataFrame(
-            {f.name: pd.Series([r[i] for r in rows], dtype=object)
-             for i, f in enumerate(st.fields)},
-            columns=[f.name for f in st.fields])
-        return spark.createDataFrame(pdf, schema=st)
-    except Exception:
-        # any Arrow/pandas conversion surprise degrades to the exact
-        # old path rather than failing the caller
-        return spark.createDataFrame(rows, schema)
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    pdf = pd.DataFrame(
+        {f.name: pd.Series([r[i] for r in rows], dtype=object)
+         for i, f in enumerate(st.fields)},
+        columns=[f.name for f in st.fields])
+    return spark.createDataFrame(pdf, schema=st)

@@ -309,6 +309,74 @@ def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
                          bytes_per_task=INTERPRETED_FOLD_BYTES)
 
 
+def _audit_queries(emb: DataFrame, n_queries: int, *extra) -> DataFrame:
+    """(q_id, q_emb, *extra) for the first ``n_queries`` vectors of
+    ``emb``: the audit query set every ANN lane searches and every
+    recall contract scores.  ``extra`` columns are evaluated against
+    ``emb`` (a query's bucket, its norm).  Spelled as SQL strings: one
+    JVM call each instead of a Column call per name and alias."""
+    return (emb.where(f"vec_id < {int(n_queries)}")
+            .select(F.expr("vec_id AS q_id"), F.expr("embedding AS q_emb"),
+                    *extra))
+
+
+def _seed_centroids(emb: DataFrame, k: int) -> DataFrame:
+    """(cid, cvec): the deterministic seed centroids, the first ``k``
+    vectors of ``emb``."""
+    return (emb.where(f"vec_id < {int(k)}")
+            .selectExpr("vec_id AS cid", "embedding AS cvec"))
+
+
+def _top_k(scored: DataFrame, k: int, *extra, score: str = "cosine",
+           rank: str = "rank") -> DataFrame:
+    """The ANN family's one rank policy: per ``q_id``, the ``k`` rows of
+    highest ``score``, ties to the smaller ``n_id``, numbered 1..k in
+    ``rank``.  Returns (q_id, n_id, rank, score, *extra); a query with
+    fewer than ``k`` rows keeps them all."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("n_id"))
+    return (scored.withColumn(rank, F.row_number().over(w))
+            .where(F.col(rank) <= k)
+            .select("q_id", "n_id", rank, score, *extra))
+
+
+def _score_candidates(corpus: DataFrame, probes: DataFrame,
+                      key: str) -> DataFrame:
+    """(q_id, n_id, cosine) for every corpus row that shares its ``key``
+    (LSH bucket or IVF cell) with a probe row, q_id != n_id.  The corpus
+    side carries (vec_id, embedding, key, __nn) and the broadcast probe
+    side (q_id, q_emb, key, __qn): both norms are hoisted per row, so
+    each pair folds only its dot product before the round(cosine, 6)."""
+    return (corpus.selectExpr("vec_id AS n_id", "embedding AS n_emb", key,
+                              "__nn")
+            .join(F.broadcast(probes), key)
+            .where(F.col("q_id") != F.col("n_id"))
+            .select("q_id", "n_id",
+                    F.round(cosine_pre(F.col("q_emb"), F.col("n_emb"),
+                                       F.col("__qn"), F.col("__nn")), 6)
+                    .alias("cosine")))
+
+
+def _recall_bounds(emb: DataFrame, truth: DataFrame, found: DataFrame,
+                   n_queries: int, top_k: int, floor: float) -> DataFrame:
+    """The recall contracts' shared tail: per audit query, how many of
+    its ``truth`` (q_id, n_id) neighbors ``found`` recovers (``hits``),
+    ``recall`` = hits / top_k, the ``mean_recall`` over all
+    ``n_queries`` queries and ``meets_floor`` against ``floor``.  A
+    query with no hit still gets its row (hits 0)."""
+    q = _audit_queries(emb, n_queries).select("q_id")
+    hits = (truth.join(found, ["q_id", "n_id"])
+            .groupBy("q_id").agg(F.count(F.lit(1)).alias("h")))
+    gw = Window.partitionBy()
+    return (q.join(hits, "q_id", "left")
+            .select("q_id",
+                    F.coalesce(F.col("h"), F.lit(0)).cast("long")
+                    .alias("hits"))
+            .withColumn("recall", F.round(F.col("hits") / F.lit(top_k), 6))
+            .withColumn("mean_recall", F.round(F.avg("recall").over(gw), 6))
+            .withColumn("meets_floor", F.col("mean_recall") >= F.lit(floor))
+            .orderBy("q_id"))
+
+
 def _brute_scored_pairs(spark: SparkSession, sf_dir: str,
                         n_queries: int) -> DataFrame:
     """Shared brute-force audit scorer: (q_id, n_id, cosine) for the
@@ -326,21 +394,24 @@ def _brute_scored_pairs(spark: SparkSession, sf_dir: str,
         collect_query_vectors
 
     q_rows = collect_query_vectors(
-        _emb(spark, sf_dir).where(F.col("vec_id") < n_queries),
-        "vec_id", "embedding")
+        _audit_queries(_emb(spark, sf_dir), n_queries), "q_id", "q_emb")
     return (brute_cosine_pairs(_emb_arrow(spark, sf_dir),
                                "vec_id", "embedding", q_rows)
             .select("q_id", "n_id",
                     F.round(F.col("__cos_raw"), 6).alias("cosine")))
 
 
+def _brute_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(q_id, n_id): the exact top-LSH_TOP_K neighbors of the
+    LSH_N_QUERIES audit queries, the recall contracts' brute-force
+    ground truth (a Q x N audit scan, never a production path)."""
+    return _top_k(_brute_scored_pairs(spark, sf_dir, LSH_N_QUERIES),
+                  LSH_TOP_K).select("q_id", "n_id")
+
+
 def ann_cosine_topk_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 cosine neighbors for the first 5 query vectors."""
-    scored = _brute_scored_pairs(spark, sf_dir, N_QUERIES)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    return _top_k(_brute_scored_pairs(spark, sf_dir, N_QUERIES), TOP_K)
 
 
 ANN_COSINE_TOPK_SQL = f"""
@@ -383,23 +454,10 @@ def ann_lsh_bucketed_df(spark: SparkSession, sf_dir: str,
         "bucket", _bucket_expr(F.col("embedding"), bits))
     # per-side norms hoisted (batch 8): computed once per corpus row,
     # folded once per IN-BUCKET pair instead of three times
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"),
-                   F.col("embedding").alias("q_emb"), "bucket",
-                   vnorm(F.col("embedding")).alias("__qn"))
-    c = emb.select(F.col("vec_id").alias("n_id"),
-                   F.col("embedding").alias("n_emb"), "bucket",
-                   vnorm(F.col("embedding")).alias("__nn"))
-    scored = (c.join(F.broadcast(q), ["bucket"])
-              .where(F.col("q_id") != F.col("n_id"))
-              .select("q_id", "n_id",
-                      F.round(cosine_pre(F.col("q_emb"), F.col("n_emb"),
-                                         F.col("__qn"), F.col("__nn")), 6)
-                      .alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    q = _audit_queries(emb, LSH_N_QUERIES, "bucket",
+                       vnorm(F.col("embedding")).alias("__qn"))
+    c = emb.withColumn("__nn", vnorm(F.col("embedding")))
+    return _top_k(_score_candidates(c, q, "bucket"), LSH_TOP_K)
 
 
 def ann_lsh_bucketed12_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,26 +479,12 @@ def ann_lsh_multiprobe_df(spark: SparkSession, sf_dir: str,
     probes = F.array(F.col("bucket"),
                      *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
                        for j in range(bits)])
-    q = (emb.where(F.col("vec_id") < LSH_N_QUERIES)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb"),
-                 F.explode(probes).alias("bucket"),
-                 vnorm(F.col("embedding")).alias("__qn")))
+    q = _audit_queries(emb, LSH_N_QUERIES, F.explode(probes).alias("bucket"),
+                       vnorm(F.col("embedding")).alias("__qn"))
     # corpus side deliberately not widened (see ann_lsh_bucketed_df);
     # per-side norms hoisted (batch 8)
-    c = emb.select(F.col("vec_id").alias("n_id"),
-                   F.col("embedding").alias("n_emb"), "bucket",
-                   vnorm(F.col("embedding")).alias("__nn"))
-    scored = (c.join(F.broadcast(q), ["bucket"])
-              .where(F.col("q_id") != F.col("n_id"))
-              .select("q_id", "n_id",
-                      F.round(cosine_pre(F.col("q_emb"), F.col("n_emb"),
-                                         F.col("__qn"), F.col("__nn")), 6)
-                      .alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    c = emb.withColumn("__nn", vnorm(F.col("embedding")))
+    return _top_k(_score_candidates(c, q, "bucket"), LSH_TOP_K)
 
 
 IVF_K = 16          # centroid-count FLOOR: the contract-corpus configuration
@@ -559,9 +603,7 @@ def ann_ivf_df(spark: SparkSession, sf_dir: str, k: int | None = None,
     if nprobe is None:
         nprobe = _auto_nprobe(k, IVF_NPROBE)
     emb = _emb(spark, sf_dir)
-    cent = (emb.where(F.col("vec_id") < k)
-            .select(F.col("vec_id").alias("cid"),
-                    F.col("embedding").alias("cvec")))
+    cent = _seed_centroids(emb, k)
     # map-only argmax (_with_cell): the assignment carries the
     # embedding through, so there is no cells-to-emb join-back.  The
     # corpus scan is widened first (see _emb_wide): the scoring is pure
@@ -569,25 +611,10 @@ def ann_ivf_df(spark: SparkSession, sf_dir: str, k: int | None = None,
     # kept and reused by the candidate scoring below.
     cells = _with_cell(_emb_wide(spark, sf_dir), cent, keep_norm="__nn")
 
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"),
-                   F.col("embedding").alias("q_emb"))
     # per-probe-row q norm (Q x nprobe rows — metadata scale)
-    probes = _probe_cells(q, cent, nprobe) \
+    probes = _probe_cells(_audit_queries(emb, LSH_N_QUERIES), cent, nprobe) \
         .withColumn("__qn", vnorm(F.col("q_emb")))
-
-    cand = (cells.select(F.col("vec_id").alias("n_id"),
-                         F.col("embedding").alias("n_emb"), "cell", "__nn")
-            .join(F.broadcast(probes), "cell")
-            .where(F.col("q_id") != F.col("n_id")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (cand.select("q_id", "n_id",
-                        F.round(cosine_pre(F.col("q_emb"), F.col("n_emb"),
-                                           F.col("__qn"), F.col("__nn")), 6)
-                        .alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    return _top_k(_score_candidates(cells, probes, "cell"), LSH_TOP_K)
 
 
 ANN_IVF_SQL = f"""
@@ -708,10 +735,7 @@ _source_fingerprint = _ilc.source_fingerprint
 def _ivf_centroid_rows(emb: DataFrame, k: int = IVF_K) -> list:
     """Deterministic seed centroids (first K vectors), collected — K rows,
     the planner-side metadata of the index."""
-    return (emb.where(F.col("vec_id") < k)
-            .select(F.col("vec_id").alias("cid"),
-                    F.col("embedding").alias("cvec"))
-            .collect())
+    return _seed_centroids(emb, k).collect()
 
 
 # Ceiling for the literal-expression reference form below: each
@@ -870,10 +894,8 @@ def _query_probes(spark: SparkSession, sf_dir: str, cent_rows,
     join needs no cast on the scan side, and the queries do not shuffle
     (:func:`_probe_cells`): dynamic partition pruning prunes the scan
     to the probed cells."""
-    q = (_emb(spark, sf_dir).where(F.col("vec_id") < LSH_N_QUERIES)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb")))
-    return _probe_cells(q, _cent_df(spark, cent_rows), nprobe)
+    return _probe_cells(_audit_queries(_emb(spark, sf_dir), LSH_N_QUERIES),
+                        _cent_df(spark, cent_rows), nprobe)
 
 
 def _serve_cached_sidecars(index_path: str, sidecars: list[str],
@@ -1115,20 +1137,9 @@ def ann_ivf_indexed_df(spark: SparkSession, sf_dir: str,
     # index scan deliberately not widened (r19 opt, measured): the
     # pruned cells hold ~nprobe/K of the corpus and the widening
     # exchange cost more than it spread (bench +0.15s when tried)
-    idx = (index_rows(spark, index_path, id_col="vec_id")
-           .select(F.col("vec_id").alias("n_id"),
-                   F.col("embedding").alias("n_emb"), "cell",
-                   vnorm(F.col("embedding")).alias("__nn")))
-    cand = (idx.join(F.broadcast(probes), "cell")
-            .where(F.col("q_id") != F.col("n_id")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (cand.select("q_id", "n_id",
-                        F.round(cosine_pre(F.col("q_emb"), F.col("n_emb"),
-                                           F.col("__qn"), F.col("__nn")), 6)
-                        .alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    idx = index_rows(spark, index_path, id_col="vec_id") \
+        .withColumn("__nn", vnorm(F.col("embedding")))
+    return _top_k(_score_candidates(idx, probes, "cell"), LSH_TOP_K)
 
 
 # --- IVF index staleness signal (VERDICT r14 item 4) -------------------------
@@ -1769,24 +1780,10 @@ def ann_ivf_kmeans_df(spark: SparkSession, sf_dir: str,
     emb = _emb_wide(spark, sf_dir)
     # corpus-side norm computed ONCE per row and shared between the
     # cell assignment and the candidate scoring (r20, ADVICE r19)
-    cells = _with_cell(emb, cent, keep_norm="__nn") \
-        .select("vec_id", "embedding", "cell", "__nn")
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"),
-                   F.col("embedding").alias("q_emb"))
-    probes = _probe_cells(q, cent, nprobe) \
+    cells = _with_cell(emb, cent, keep_norm="__nn")
+    probes = _probe_cells(_audit_queries(emb, LSH_N_QUERIES), cent, nprobe) \
         .withColumn("__qn", vnorm(F.col("q_emb")))
-    cand = (cells.join(F.broadcast(probes), "cell")
-            .where(F.col("q_id") != F.col("vec_id")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (cand.select("q_id", F.col("vec_id").alias("n_id"),
-                        F.round(cosine_pre(F.col("q_emb"),
-                                           F.col("embedding"),
-                                           F.col("__qn"), F.col("__nn")), 6)
-                        .alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    return _top_k(_score_candidates(cells, probes, "cell"), LSH_TOP_K)
 
 
 IVF_RECALL_NPROBE = 4     # fixed probe width the recall contract measures
@@ -1823,31 +1820,8 @@ def ann_ivf_recall_bounds_df(spark: SparkSession, sf_dir: str,
         nprobe = _auto_nprobe(k, IVF_RECALL_NPROBE)
     ivf = ann_ivf_kmeans_df(spark, sf_dir, nprobe=nprobe, k=k) \
         .select("q_id", "n_id")
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"))
-    # brute-force ground truth from the bit-exact Arrow kernel (r20;
-    # see _brute_scored_pairs) — Q x N scoring in numpy at the widened
-    # scan's parallelism, round-6 ranking unchanged
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    brute = (_brute_scored_pairs(spark, sf_dir, LSH_N_QUERIES)
-             .withColumn("rank", F.row_number().over(w))
-             .where(F.col("rank") <= LSH_TOP_K)
-             .select("q_id", "n_id"))
-    hits = (brute.join(ivf, ["q_id", "n_id"])
-            .groupBy("q_id").agg(F.count(F.lit(1)).alias("h")))
-    gw = Window.partitionBy()
-    return (q.join(hits, "q_id", "left")
-            .select("q_id",
-                    F.coalesce(F.col("h"), F.lit(0)).cast("long")
-                    .alias("hits"))
-            .withColumn("recall",
-                        F.round(F.col("hits") / F.lit(LSH_TOP_K), 6))
-            .withColumn("mean_recall",
-                        F.round(F.avg("recall").over(gw), 6))
-            .withColumn("meets_floor",
-                        F.col("mean_recall") >= F.lit(IVF_RECALL_FLOOR))
-            .orderBy("q_id"))
+    return _recall_bounds(_emb(spark, sf_dir), _brute_truth(spark, sf_dir),
+                          ivf, LSH_N_QUERIES, LSH_TOP_K, IVF_RECALL_FLOOR)
 
 
 def _sql_kmeans_ctes(iters: int) -> tuple[str, str]:
@@ -1989,10 +1963,8 @@ def ann_rank_fusion_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = (cands.groupBy("q_id", "n_id")
              .agg(contrib.alias("rrf_score"),
                   F.count(F.lit(1)).cast("int").alias("n_lists")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("rrf_score"), F.asc("n_id"))
-    return (fused.withColumn("fused_rank", F.row_number().over(w))
-            .where(F.col("fused_rank") <= RRF_TOP_K)
-            .select("q_id", "n_id", "fused_rank", "rrf_score", "n_lists"))
+    return _top_k(fused, RRF_TOP_K, "n_lists", score="rrf_score",
+                  rank="fused_rank")
 
 
 ANN_RANK_FUSION_SQL = f"""
@@ -2271,28 +2243,14 @@ def ann_lsh_indexed_df(spark: SparkSession, sf_dir: str,
     index_path = build_lsh_index(spark, sf_dir, bits)
     # the bucket expression is an int, the partition column's type: the
     # join needs no cast on the scan side, which would stop the pruning
-    q = (_emb(spark, sf_dir)
-         .where(F.col("vec_id") < LSH_N_QUERIES)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb"),
-                 _bucket_expr(F.col("embedding"), bits).alias("bucket")))
+    q = _audit_queries(_emb(spark, sf_dir), LSH_N_QUERIES,
+                       _bucket_expr(F.col("embedding"), bits).alias("bucket"))
     from .deletion import index_rows
 
-    idx = (index_rows(spark, index_path, id_col="vec_id")
-           .select(F.col("vec_id").alias("n_id"),
-                   F.col("embedding").alias("n_emb"), "bucket",
-                   vnorm(F.col("embedding")).alias("__nn")))
-    scored = (idx.join(F.broadcast(q.withColumn(
-                  "__qn", vnorm(F.col("q_emb")))), "bucket")
-              .where(F.col("q_id") != F.col("n_id"))
-              .select("q_id", "n_id",
-                      F.round(cosine_pre(F.col("q_emb"), F.col("n_emb"),
-                                         F.col("__qn"), F.col("__nn")), 6)
-                      .alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine"))
+    idx = index_rows(spark, index_path, id_col="vec_id") \
+        .withColumn("__nn", vnorm(F.col("embedding")))
+    probes = q.withColumn("__qn", vnorm(F.col("q_emb")))
+    return _top_k(_score_candidates(idx, probes, "bucket"), LSH_TOP_K)
 
 
 # --- hard-negative mining ----------------------------------------------------
@@ -2325,16 +2283,12 @@ def ann_hard_negatives_df(spark: SparkSession, sf_dir: str,
     # every pair's round-6 score, which the kernel emits unchanged
     scored = _brute_scored_pairs(spark, sf_dir, LSH_N_QUERIES)
     wq = Window.partitionBy("q_id")
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    return (scored
-            .withColumn("n_near_dup_excluded",
-                        F.sum(F.when(F.col("cosine") >= ceil, 1)
-                              .otherwise(0)).over(wq).cast("long"))
-            .where(F.col("cosine") < ceil)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine",
-                    "n_near_dup_excluded"))
+    return _top_k(scored
+                  .withColumn("n_near_dup_excluded",
+                              F.sum(F.when(F.col("cosine") >= ceil, 1)
+                                    .otherwise(0)).over(wq).cast("long"))
+                  .where(F.col("cosine") < ceil),
+                  LSH_TOP_K, "n_near_dup_excluded")
 
 
 ANN_HARD_NEGATIVES_SQL = f"""
@@ -2561,9 +2515,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str,
         return index_path
     cb = train_pq_codebooks(spark, sf_dir)
     cb_df = _cb_df(spark, [(m, c, v) for (m, c), v in sorted(cb.items())])
-    cent = (_emb(spark, sf_dir).where(F.col("vec_id") < k)
-            .select(F.col("vec_id").alias("cid"),
-                    F.col("embedding").alias("cvec")))
+    cent = _seed_centroids(_emb(spark, sf_dir), k)
     # encode + cell-route fused into ONE map-only pass over the widened
     # scan (r19 opt): both are broadcast-array argmin/argmax
     # projections, so there is no encode-to-cells join on vec_id — the
@@ -2685,30 +2637,22 @@ def ann_ivf_pq_df(spark: SparkSession, sf_dir: str,
     # PQ_M table lookups per pruned-cell row — cheaper than the
     # widening exchange in a warm session (see ann_ivf_indexed_df)
     idx = index_rows(spark, index_path, id_col="vec_id")
-    aw = Window.partitionBy("q_id").orderBy(F.desc("adc_cosine"),
-                                            F.asc("n_id"))
-    short = (idx.join(F.broadcast(probes), "cell")
-             .where(F.col("q_id") != F.col("vec_id"))
-             .select("q_id", "q_emb", F.col("vec_id").alias("n_id"),
-                     _adc_cosine("q_emb", "codes", cb)
-                     .alias("adc_cosine"))
-             .withColumn("arank", F.row_number().over(aw))
-             .where(F.col("arank") <= rerank)
-             .drop("arank"))
+    adc = (idx.join(F.broadcast(probes), "cell")
+           .where(F.col("q_id") != F.col("vec_id"))
+           .select("q_id", "q_emb", F.col("vec_id").alias("n_id"),
+                   _adc_cosine("q_emb", "codes", cb).alias("adc_cosine")))
+    short = _top_k(adc, rerank, "q_emb", score="adc_cosine", rank="arank") \
+        .select("q_id", "q_emb", "n_id", "adc_cosine")
     # rerank side deliberately NOT widened (r19 opt, measured): the
     # refine computes cosine for only Q x R shortlist matches of the
     # broadcast join — a corpus-wide widening exchange buys nothing
     nemb = _emb(spark, sf_dir).select(F.col("vec_id").alias("n_id"),
                                       F.col("embedding").alias("n_emb"))
-    rw = Window.partitionBy("q_id").orderBy(F.desc("cosine"),
-                                            F.asc("n_id"))
-    return (F.broadcast(short).join(nemb, "n_id")
-            .select("q_id", "n_id", "adc_cosine",
-                    F.round(cosine(F.col("q_emb"), F.col("n_emb")), 6)
-                    .alias("cosine"))
-            .withColumn("rank", F.row_number().over(rw))
-            .where(F.col("rank") <= LSH_TOP_K)
-            .select("q_id", "n_id", "rank", "cosine", "adc_cosine"))
+    return _top_k(F.broadcast(short).join(nemb, "n_id")
+                  .select("q_id", "n_id", "adc_cosine",
+                          F.round(cosine(F.col("q_emb"), F.col("n_emb")), 6)
+                          .alias("cosine")),
+                  LSH_TOP_K, "adc_cosine")
 
 
 def ann_pq_recall_bounds_df(spark: SparkSession, sf_dir: str,
@@ -2731,31 +2675,8 @@ def ann_pq_recall_bounds_df(spark: SparkSession, sf_dir: str,
         nprobe = _auto_nprobe(k, IVF_RECALL_NPROBE)
     pq = ann_ivf_pq_df(spark, sf_dir, k=k, nprobe=nprobe,
                        rerank=rerank).select("q_id", "n_id")
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < LSH_N_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"))
-    # brute-force ground truth from the bit-exact Arrow kernel (r20;
-    # see _brute_scored_pairs) — Q x N scoring in numpy at the widened
-    # scan's parallelism, round-6 ranking unchanged
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    brute = (_brute_scored_pairs(spark, sf_dir, LSH_N_QUERIES)
-             .withColumn("rank", F.row_number().over(w))
-             .where(F.col("rank") <= LSH_TOP_K)
-             .select("q_id", "n_id"))
-    hits = (brute.join(pq, ["q_id", "n_id"])
-            .groupBy("q_id").agg(F.count(F.lit(1)).alias("h")))
-    gw = Window.partitionBy()
-    return (q.join(hits, "q_id", "left")
-            .select("q_id",
-                    F.coalesce(F.col("h"), F.lit(0)).cast("long")
-                    .alias("hits"))
-            .withColumn("recall",
-                        F.round(F.col("hits") / F.lit(LSH_TOP_K), 6))
-            .withColumn("mean_recall",
-                        F.round(F.avg("recall").over(gw), 6))
-            .withColumn("meets_floor",
-                        F.col("mean_recall") >= F.lit(PQ_RECALL_FLOOR))
-            .orderBy("q_id"))
+    return _recall_bounds(_emb(spark, sf_dir), _brute_truth(spark, sf_dir),
+                          pq, LSH_N_QUERIES, LSH_TOP_K, PQ_RECALL_FLOOR)
 
 
 def _pq_sql_ctes(nprobe_base: int) -> str:

@@ -339,7 +339,8 @@ def embed_quantize_recall_bounds_df(spark: SparkSession, sf_dir: str,
     itself is map-only."""
     from ..functions.arrowkern import brute_cosine_pairs, \
         collect_query_vectors
-    from .similarity import _emb_arrow
+    from .similarity import _audit_queries, _emb_arrow, _recall_bounds, \
+        _top_k
 
     emb = _rps(spark, f"{sf_dir}/embeddings.parquet")
     # both audit lanes score in the Arrow kernel (r20); the query frame
@@ -357,40 +358,22 @@ def embed_quantize_recall_bounds_df(spark: SparkSession, sf_dir: str,
            .select("vec_id",
                    F.when(F.col("scale") > 0, deq_codes).otherwise(zeros)
                    .alias("demb")))
-    q = emb.where(F.col("vec_id") < QUANT_RECALL_QUERIES) \
-           .select(F.col("vec_id").alias("q_id"))
     # queries stay the EXACT vectors in both lanes (asymmetric serving
     # shape); collected once at construction — the bounded audit set
     q_rows = collect_query_vectors(
-        emb.where(F.col("vec_id") < QUANT_RECALL_QUERIES),
-        "vec_id", "embedding")
+        _audit_queries(emb, QUANT_RECALL_QUERIES), "q_id", "q_emb")
 
     def topk(corpus, vec_col):
         # Q x N scoring in the bit-exact Arrow kernel (r20, guide §4;
         # functions/arrowkern.py): same left-to-right fold as the r19
         # JVM expression float-for-float, round-6 ranking in the JVM
-        w = Window.partitionBy("q_id").orderBy(F.desc("c"), F.asc("n_id"))
-        return (brute_cosine_pairs(corpus, "vec_id", vec_col, q_rows)
-                .select("q_id", "n_id",
-                        F.round(F.col("__cos_raw"), 6).alias("c"))
-                .withColumn("rnk", F.row_number().over(w))
-                .where(F.col("rnk") <= QUANT_RECALL_TOP_K)
-                .select("q_id", "n_id"))
+        return _top_k(brute_cosine_pairs(corpus, "vec_id", vec_col, q_rows)
+                      .select("q_id", "n_id",
+                              F.round(F.col("__cos_raw"), 6).alias("cosine")),
+                      QUANT_RECALL_TOP_K).select("q_id", "n_id")
 
-    exact_top = topk(wide, "embedding")
-    quant_top = topk(deq, "demb")
-    hits = (exact_top.join(quant_top, ["q_id", "n_id"])
-            .groupBy("q_id").agg(F.count(F.lit(1)).alias("h")))
-    gw = Window.partitionBy()
-    return (q.select("q_id").join(hits, "q_id", "left")
-            .select("q_id",
-                    F.coalesce(F.col("h"), F.lit(0)).cast("long")
-                    .alias("hits"))
-            .withColumn("recall",
-                        F.round(F.col("hits") / F.lit(QUANT_RECALL_TOP_K), 6))
-            .withColumn("mean_recall", F.round(F.avg("recall").over(gw), 6))
-            .withColumn("meets_floor", F.col("mean_recall") >= F.lit(floor))
-            .orderBy("q_id"))
+    return _recall_bounds(emb, topk(wide, "embedding"), topk(deq, "demb"),
+                          QUANT_RECALL_QUERIES, QUANT_RECALL_TOP_K, floor)
 
 
 def _quant_recall_bounds_sql(levels: int = QUANT_LEVELS,

@@ -12,11 +12,6 @@ BROAD = {"Exception", "BaseException"}
 
 # (module path, innermost enclosing function) -> why it stays broad
 ALLOWED = {
-    ("ringo_spark/functions/localrel.py", "literal_df"):
-        "the Arrow createDataFrame path is an optimization over an exact "
-        "fallback; pandas and Arrow raise many unrelated types on the "
-        "inputs it cannot convert, and every one must degrade to the "
-        "plain path",
     ("ringo_spark/operators/multimodal.py", "kernel"):
         "decoding an untrusted PNG payload can fail in any way; a "
         "malformed payload passes through with null dimensions instead "
